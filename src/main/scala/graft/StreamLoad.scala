@@ -54,9 +54,13 @@ object StreamLoad {
       math.max(1, nEvents / nSegments).toString)
 
     val t0 = System.nanoTime()
-    val q = stream.Pipeline.run(spark, eventsDir, s"$base/bulk", s"$base/dlq",
-      s"$base/ckpt", concurrentRequest = cpus.toInt,
-      trigger = Trigger.AvailableNow())
+    // no flush limits: one bulk file per concurrent request per batch
+    val cfg = conf.GraftConfig(conf.EsSinkConfig(ops.CdcOps.tableIndexMapping,
+      batchSizeLimit = 0, batchByteSizeLimit = "0b",
+      concurrentRequest = cpus.toInt))
+    val q = stream.Pipeline.run(spark, cfg,
+      stream.Connector.Io(eventsDir, s"$base/bulk", s"$base/dlq", s"$base/ckpt"),
+      trigger = Some(Trigger.AvailableNow()))
     q.awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
     println(s"""{"metric":"cdc_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong}}""")

@@ -26,33 +26,39 @@ import graft.conf.{GraftConfig, InitialMode, SnapshotOnlyMode}
   */
 object Connector {
 
-  /** I/O locations (the zero-egress analogs of Postgres/ES endpoints). */
+  /** I/O locations (the zero-egress analogs of Postgres/ES endpoints).
+    * `format` is the replay source's file shape (parquet, json, csv, or
+    * the `wal` segment source — see [[Pipeline.changeStream]]).
+    */
   case class Io(
       eventsDir: String,
       bulkOutDir: String,
       deadLetterDir: String,
       checkpointDir: String,
-      snapshotTable: Option[(DataFrame, String, String, String)] = None // (df, ns, table, pk)
+      snapshotTable: Option[(DataFrame, String, String, String)] = None, // (df, ns, table, pk)
+      format: String = "parquet"
   )
 
   /** ≙ NewConnector (connector.go:43-80). `infoProbe` is the Info-API
     * call for ES version auto-detect when `cfg.es.version` is empty —
     * detection failure falls back to "7.0.0" exactly like client.go:37-46
-    * (see [[graft.conf.resolveVersion]]). `responseHandler` ≙
+    * (see [[graft.conf.resolveVersion]]); with `http` and no explicit
+    * probe, the HTTP client's Info API is the probe. `responseHandler` ≙
     * WithResponseHandler (option.go:19-23); its `onInit` fires HERE, at
     * construction with the resolved config — the reference invokes OnInit
     * when the option is installed (bulk/option.go:19-27), before Start.
+    * `http` sends the snapshot and the stream to live Elasticsearch
+    * instead of payload files.
     */
   def newConnector(spark: SparkSession, cfg: GraftConfig, io: Io,
       handler: Option[Handlers.Handler] = None,
       trigger: Option[Trigger] = None,
       infoProbe: Option[() => String] = None,
-      responseHandler: Option[ResponseHandler] = None): Connector = {
-    val resolved = graft.conf.resolveVersion(cfg, infoProbe)
-    val rh = ResponseHandler.forConfig(resolved, responseHandler,
-      io.deadLetterDir, io.bulkOutDir)
-    rh.onInit(spark, resolved)
-    new Connector(spark, resolved, io, handler, trigger, rh)
+      responseHandler: Option[ResponseHandler] = None,
+      http: Option[EsHttpConfig] = None): Connector = {
+    val (resolved, rh, httpForTasks) =
+      Pipeline.prepare(spark, cfg, io, responseHandler, http, infoProbe)
+    new Connector(spark, resolved, io, handler, trigger, rh, httpForTasks)
   }
 }
 
@@ -62,7 +68,8 @@ final class Connector private[stream] (
     io: Connector.Io,
     handler: Option[Handlers.Handler],
     triggerOverride: Option[Trigger],
-    responseHandler: ResponseHandler) {
+    responseHandler: ResponseHandler,
+    http: Option[EsHttpConfig]) {
 
   @volatile private var query: Option[StreamingQuery] = None
   @volatile private var metricsEndpoint: Option[MetricsEndpoint] = None
@@ -70,11 +77,14 @@ final class Connector private[stream] (
   /** This connector's streaming query name (also its metrics identity). */
   val queryName: String = QueryNames.cdcPipeline(io.checkpointDir)
 
+  /** The table snapshot as flush `-1`, through the same sink, transport
+    * and response handler as the CDC batches.
+    */
   private def snapshot(): Unit = io.snapshotTable.foreach {
     case (df, ns, table, pk) =>
-      Pipeline.runSnapshotOnly(spark, df, ns, table, pk, io.bulkOutDir,
-        io.deadLetterDir, cfg.es.concurrentRequest, cfg.snapshot.chunkSize,
-        cfg.es.tableIndexMapping, cfg.es.esMajorVersion, cfg.es.typeNameOrDefault)
+      Pipeline.flushBatch(cfg, io, responseHandler, http)(
+        Pipeline.snapshotActions(df, ns, table, pk, cfg.snapshot.chunkSize,
+          cfg.es.tableIndexMapping), -1L)
   }
 
   /** Snapshot-completion marker inside the checkpoint dir: InitialMode
@@ -92,10 +102,10 @@ final class Connector private[stream] (
   /** Snapshot-then-marker is NOT atomic: a crash after the snapshot's
     * bulk output but before marker creation re-runs the snapshot on the
     * next start. That stays within at-least-once — and the re-run
-    * CLOBBERS rather than appends: the snapshot flows through
-    * `EsBulkSink.writeBatch(batchId = -1)`, whose fixed overwrite dir
-    * (`batch_-1`) makes the replay idempotent like any CDC batch, so
-    * the only cost is the repeated scan, not duplicate rows.
+    * CLOBBERS rather than appends: the snapshot is flush `-1`, whose
+    * fixed overwrite dir (`batch_-1`) — or, over HTTP, index-by-id
+    * writes — make the replay idempotent like any CDC batch, so the only
+    * cost is the repeated scan, not duplicate rows.
     */
   private def snapshotOnce(): Unit = {
     val fs = snapshotMarker.getFileSystem(
@@ -122,15 +132,10 @@ final class Connector private[stream] (
         case InitialMode => snapshotOnce()
       }
     }
-    // the *Resolved entries: version already resolved and onInit already
-    // fired at construction — the public run/runTyped would re-init
-    val q = handler match {
-      case Some(h) => Pipeline.runTypedResolved(spark, cfg, io.eventsDir, h,
-        io.bulkOutDir, io.checkpointDir, triggerOverride, responseHandler)
-      case None => Pipeline.runResolved(spark, cfg, io.eventsDir,
-        io.bulkOutDir, io.checkpointDir, triggerOverride, responseHandler)
-    }
-    query = Some(q)
+    // launch, not Pipeline.run: the version is resolved and onInit fired
+    // at construction already — run would prepare (and init) again
+    query = Some(Pipeline.launch(spark, cfg, io, handler, triggerOverride,
+      responseHandler, http))
   }
 
   /** ≙ WaitUntilReady: blocks until the stream is active (or snapshot-only

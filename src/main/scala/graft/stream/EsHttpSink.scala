@@ -35,21 +35,16 @@ import graft.ops.CdcOps
   */
 object EsHttpSink {
 
+  /** One flush over HTTP: the shared [[EsBulkSink.flush]] skeleton with
+    * a `_bulk` POST as its ship step.
+    */
   def postBatch(batch: DataFrame, batchId: Long, http: EsHttpConfig,
       responseHandler: ResponseHandler, concurrentRequest: Int,
       esMajor: Int = 8, typeName: String = "_doc",
-      batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val cached = batch.cache()
-    var deduped: DataFrame = null
-    try {
-      // the WHAT (bad-split → LWW dedup → encode) is shared with the
-      // file sink — EsBulkSink.flushPrologue — so the two transports
-      // cannot drift on payload contents
-      val (d, payload) = EsBulkSink.flushPrologue(cached, batchId,
-        responseHandler, esMajor, typeName)
-      deduped = d
+      batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): Unit =
+    EsBulkSink.flush(batch, batchId, responseHandler, esMajor, typeName) { payload =>
+      val spark = payload.sparkSession
+      import spark.implicits._
       // Request assembly vs concurrency are SEPARATE dials: the byte/count
       // flush limits can widen the request count far past the concurrency
       // slots (10k actions / batchSizeLimit=100 → 100 requests), and a
@@ -68,28 +63,23 @@ object EsHttpSink {
       // contiguous rid run, sequentially — in-flight = tasks = the
       // reference's goroutine slots regardless of the split width.
       val cap = math.max(1, concurrentRequest)
-      val ridded =
-        if (batchByteSizeLimit <= 0L && batchSizeLimit <= 0)
+      val ridded = EsBulkSink.limitSplit(payload, concurrentRequest,
+          batchByteSizeLimit, batchSizeLimit) match {
+        case None =>
           payload.withColumn("_rid",
             pmod(xxhash64(col("event_id")), lit(cap.toLong)))
-        else {
-          val m = payload
-            .agg(sum(octet_length(col("value"))), count(lit(1))).collect()(0)
-          val totalBytes = if (m.isNullAt(0)) 0L else m.getLong(0)
-          val nActions = m.getLong(1)
-          val nRequests = EsBulkSink.requestSplit(totalBytes, nActions,
-            concurrentRequest, batchByteSizeLimit, batchSizeLimit)
+        case Some((nActions, nRequests)) =>
           val perReq = math.max(1L,
             math.ceil(nActions.toDouble / math.max(1, nRequests)).toLong)
           val (stamped, _) = CdcOps.globalOrdinals(payload, Seq.empty, "event_id")
           stamped.withColumn("_rid", expr(s"_ord DIV $perReq"))
-        }
+      }
       // Item failures are attributed POSITIONALLY: `_bulk` items arrive
       // in request order, and each task knows its lines' event ids in
       // that order — exact attribution even between routed siblings
       // sharing _id:_index (which the response cannot distinguish).
       // Only failures return to the driver.
-      val errors: Map[Long, String] = ridded
+      ridded
         .repartition(cap, col("_rid"))
         .sortWithinPartitions("_rid", "event_id")
         .select(col("_rid"), col("event_id"), col("value"))
@@ -98,7 +88,7 @@ object EsHttpSink {
           if (it.isEmpty) Iterator.empty
           else {
             // discovery already ran on the driver; `http` carries seeds ∪
-            // discovered pool (Pipeline.runHttp) so tasks spread over the
+            // discovered pool (Pipeline.prepare) so tasks spread over the
             // cluster while keeping the stable seed addresses as fallback
             val client = new EsHttpClient(http.copy(discoverNodesOnStart = false))
             val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
@@ -126,15 +116,5 @@ object EsHttpSink {
           }
         }
         .collect().toMap
-      EsBulkSink.handleResponseByEventId(deduped, errors, responseHandler, batchId)
-      // R3 counters — same at-least-once timing as the file sink
-      deduped.groupBy("index_name", "action_type").count()
-        .collect()
-        .foreach(r => Metrics.record(r.getString(0), r.getString(1), r.getLong(2)))
-    } finally {
-      if (deduped != null) deduped.unpersist()
-      cached.unpersist()
-      ()
     }
-  }
 }

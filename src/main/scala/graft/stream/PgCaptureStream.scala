@@ -163,8 +163,8 @@ object PgCaptureStream {
         // seed rows are prior-batch state, not this batch's events
         .filter(col("event_id") >= 0)
       staged(spark, "sink_writeBatch")(
-        EsBulkSink.writeBatch(acts, batchId, bulkOutDir, deadLetterDir,
-          concurrentRequest))
+        EsBulkSink.writeBatch(acts, batchId, bulkOutDir,
+          ResponseHandler.deadLetter(deadLetterDir), concurrentRequest))
       // registry snapshot for the NEXT batch: latest relation per oid +
       // the last begin, folded over (prior seed ∪ this batch)
       val relW = Window.partitionBy(col("relation_oid")).orderBy(col("seq").desc)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.conf.GraftConfig
 import graft.ops.CdcOps
 
 /** End-to-end streaming wiring — the Spark-native rendition of the
@@ -12,9 +13,10 @@ import graft.ops.CdcOps
   *
   *   - S1 CDC source: file replay of `events.parquet` as a Structured
   *     Streaming file source (each arriving file ≙ a WAL segment; the file
-  *     source's offset log ≙ the replication slot position). A real
-  *     pgoutput DSv2 source is out of scope for the zero-egress harness —
-  *     SURVEY.md §7.3.
+  *     source's offset log ≙ the replication slot position), or the DSv2
+  *     segment source [[graft.sources.WalReplaySource]] (`format = "wal"`).
+  *     Captured pgoutput bytes decode through [[graft.sources.PgWire]] in
+  *     [[PgCaptureStream]]; only the walsender socket stays external.
   *   - transforms: the SAME batch operators from [[graft.ops.CdcOps]] —
   *     typing → routing → handler → in-batch LWW dedup → NDJSON encode —
   *     applied per micro-batch inside foreachBatch (the micro-batch IS the
@@ -139,227 +141,114 @@ object Pipeline {
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_time", delay)
 
-  /** The full pipeline: stream → typed → routed → actions, then per
-    * micro-batch: LWW dedup → NDJSON → partitioned bulk write + dead-letter.
+  /** The CDC pipeline — ≙ NewConnector(cfg, handler) + Start
+    * (connector.go:43-109) without the lifecycle; [[Connector]] wraps the
+    * same prepare step and [[launch]]. Stream → typed → routed → actions,
+    * then per micro-batch: LWW dedup → NDJSON → flush + dead-letter.
+    *   - `cfg.es` wires the knobs (config parity via
+    *     [[graft.conf.GraftConfig]]): the table→index mapping routes
+    *     events, the batch ticker is the processing-time trigger unless
+    *     `trigger` overrides it, concurrentRequest and the flush limits
+    *     split each flush, the version gates `_type`.
+    *   - `handler`: a typed `CdcMessage => Seq[EsAction]` (handler.go:7);
+    *     None runs the canonical column-expression handler.
+    *   - `http`: None writes NDJSON payload files under `io.bulkOutDir`;
+    *     Some POSTs `_bulk` to live Elasticsearch ([[EsHttpSink]]).
+    *   - `io.format` picks the replay source ([[changeStream]]);
+    *     `io.snapshotTable` is ignored here — snapshot modes belong to
+    *     [[Connector.start]].
+    */
+  def run(spark: SparkSession, cfg: GraftConfig, io: Connector.Io,
+      handler: Option[Handlers.Handler] = None,
+      trigger: Option[Trigger] = None,
+      responseHandler: Option[ResponseHandler] = None,
+      http: Option[EsHttpConfig] = None): StreamingQuery = {
+    val (resolved, rh, httpForTasks) =
+      prepare(spark, cfg, io, responseHandler, http, infoProbe = None)
+    launch(spark, resolved, io, handler, trigger, rh, httpForTasks)
+  }
+
+  /** The prepare step of every entry ([[run]], `Connector.newConnector`):
+    * resolve the ES version, assemble the response handler and fire its
+    * `onInit` once (≙ bulk/option.go:19-27: the handler initializes when
+    * it is installed, before any batch flows). Version "" runs the
+    * Info-API probe — `infoProbe`, else the HTTP client's — with the
+    * reference's 7.0.0 detection-failure fallback (client.go:37-46).
     *
-    * @param concurrentRequest N-way partition split of each flush
-    *                          (≙ config.concurrentRequest, B5)
+    * For HTTP, ONE driver-side client runs node discovery here and the
+    * returned config carries the seeds ∪ discovered pool to the executor
+    * tasks — per-task clients rebuilt from the seed URLs would put the
+    * whole write load on the seed node(s). The SEED addresses (stable
+    * DNS) stay in the pool: node churn after a one-shot snapshot must not
+    * leave the query with only dead ephemeral addresses.
     */
-  def run(
-      spark: SparkSession,
-      eventsDir: String,
-      bulkOutDir: String,
-      deadLetterDir: String,
-      checkpointDir: String,
-      concurrentRequest: Int = 2,
-      trigger: Trigger = Trigger.AvailableNow(),
-      format: String = "parquet"
-  ): StreamingQuery =
-    startQuery(spark,
-      CdcOps.handlerActions(CdcOps.typedMessages(
-        changeStream(spark, eventsDir, format = format))),
-      bulkOutDir, checkpointDir, concurrentRequest, trigger,
-      ResponseHandler.deadLetter(deadLetterDir))
-
-  /** Config-driven run (≙ NewConnector(cfg, handler): config parity via
-    * [[graft.conf.GraftConfig]]): the table→index mapping routes events,
-    * the batch ticker maps to the processing-time trigger,
-    * concurrentRequest to the flush partition split.
-    */
-  def run(spark: SparkSession, cfg0: graft.conf.GraftConfig, eventsDir: String,
-      bulkOutDir: String, deadLetterDir: String, checkpointDir: String,
-      trigger: Option[Trigger],
-      responseHandler: Option[ResponseHandler]): StreamingQuery = {
-    // version="" ≙ auto-detect requested; with no probe wired at this
-    // entry the reference's detection-failure fallback (7.0.0) applies —
-    // Connector.newConnector is the probe-carrying entry (client.go:37-46)
-    val cfg = graft.conf.resolveVersion(cfg0, None)
+  private[stream] def prepare(spark: SparkSession, cfg0: GraftConfig,
+      io: Connector.Io, responseHandler: Option[ResponseHandler],
+      http: Option[EsHttpConfig], infoProbe: Option[() => String])
+      : (GraftConfig, ResponseHandler, Option[EsHttpConfig]) = {
+    val (cfg, httpForTasks) = http match {
+      case None => (graft.conf.resolveVersion(cfg0, infoProbe), None)
+      case Some(h) =>
+        val client = new EsHttpClient(h)
+        try (graft.conf.resolveVersion(cfg0,
+            infoProbe.orElse(Some(() => client.info()))),
+          Some(h.copy(urls = (h.urls ++ client.nodes).distinct,
+            discoverNodesOnStart = false)))
+        finally client.close()
+    }
     val rh = ResponseHandler.forConfig(cfg, responseHandler,
-      deadLetterDir, bulkOutDir)
-    // ≙ ResponseHandler.OnInit (response_handler.go:9-12, invoked when the
-    // handler is installed, bulk/option.go:19-27): users bootstrap
-    // indices/templates here, before any batch flows
+      io.deadLetterDir, io.bulkOutDir, httpForTasks)
     rh.onInit(spark, cfg)
-    runResolved(spark, cfg, eventsDir, bulkOutDir, checkpointDir, trigger, rh)
+    (cfg, rh, httpForTasks)
   }
 
-  /** Config-driven run with the default dead-letter handler (overloads
-    * cannot share default arguments).
+  /** Starts the streaming query for a prepared (version-resolved,
+    * init-fired) config. Admission (`maxBytesPerTrigger`) is its OWN knob,
+    * not derived from batchByteSizeLimit: the flush byte limit means
+    * "flush EARLIER when exceeded" (bulk.go:164-173 — carried by the
+    * per-request split of each flush); using it as a per-tick ingest cap
+    * would bound throughput at limit/tickerDuration and grow backlog
+    * forever.
     */
-  def run(spark: SparkSession, cfg0: graft.conf.GraftConfig, eventsDir: String,
-      bulkOutDir: String, deadLetterDir: String, checkpointDir: String,
-      trigger: Option[Trigger]): StreamingQuery =
-    run(spark, cfg0, eventsDir, bulkOutDir, deadLetterDir, checkpointDir,
-      trigger, None)
-
-  /** Config-resolved, init-already-fired entry (Connector calls this after
-    * invoking onInit at construction — the bulk/option.go timing).
-    */
-  private[stream] def runResolved(spark: SparkSession,
-      cfg: graft.conf.GraftConfig, eventsDir: String, bulkOutDir: String,
-      checkpointDir: String, trigger: Option[Trigger],
-      rh: ResponseHandler): StreamingQuery =
-    // admission (maxBytesPerTrigger) is its OWN knob, not derived from
-    // batchByteSizeLimit: the flush byte limit means "flush EARLIER when
-    // exceeded" (bulk.go:164-173 — carried by the per-request split in
-    // EsBulkSink.writeBatch); using it as a per-tick ingest cap would
-    // bound throughput at limit/tickerDuration and grow backlog forever
-    startQuery(spark,
-      CdcOps.handlerActions(CdcOps.typedMessages(
-          changeStream(spark, eventsDir,
-            maxBytesPerTrigger = cfg.es.maxBytesPerTriggerBytes)),
-        cfg.es.tableIndexMapping),
-      bulkOutDir, checkpointDir, cfg.es.concurrentRequest,
-      trigger.getOrElse(
-        Trigger.ProcessingTime(cfg.es.batchTickerDuration.toMillis)),
-      rh,
-      cfg.es.esMajorVersion, cfg.es.typeNameOrDefault,
-      cfg.es.batchByteSizeLimitBytes, cfg.es.batchSizeLimit)
-
-  /** Typed-handler variant of the config-driven run (same knob wiring). */
-  def runTyped(spark: SparkSession, cfg0: graft.conf.GraftConfig,
-      eventsDir: String, handler: Handlers.Handler, bulkOutDir: String,
-      deadLetterDir: String, checkpointDir: String,
-      trigger: Option[Trigger],
-      responseHandler: Option[ResponseHandler]): StreamingQuery = {
-    val cfg = graft.conf.resolveVersion(cfg0, None)
-    val rh = ResponseHandler.forConfig(cfg, responseHandler,
-      deadLetterDir, bulkOutDir)
-    rh.onInit(spark, cfg)
-    runTypedResolved(spark, cfg, eventsDir, handler, bulkOutDir,
-      checkpointDir, trigger, rh)
-  }
-
-  /** Config-driven runTyped with the default dead-letter handler
-    * (overloads cannot share default arguments).
-    */
-  def runTyped(spark: SparkSession, cfg0: graft.conf.GraftConfig,
-      eventsDir: String, handler: Handlers.Handler, bulkOutDir: String,
-      deadLetterDir: String, checkpointDir: String,
-      trigger: Option[Trigger]): StreamingQuery =
-    runTyped(spark, cfg0, eventsDir, handler, bulkOutDir, deadLetterDir,
-      checkpointDir, trigger, None)
-
-  private[stream] def runTypedResolved(spark: SparkSession,
-      cfg: graft.conf.GraftConfig, eventsDir: String,
-      handler: Handlers.Handler, bulkOutDir: String, checkpointDir: String,
-      trigger: Option[Trigger], rh: ResponseHandler): StreamingQuery = {
-    implicit val s: SparkSession = spark
-    startQuery(spark,
-      Handlers.applyHandler(CdcOps.typedMessages(
-          changeStream(spark, eventsDir,
-            maxBytesPerTrigger = cfg.es.maxBytesPerTriggerBytes)),
-        handler, cfg.es.tableIndexMapping),
-      bulkOutDir, checkpointDir, cfg.es.concurrentRequest,
-      trigger.getOrElse(
-        Trigger.ProcessingTime(cfg.es.batchTickerDuration.toMillis)),
-      rh,
-      cfg.es.esMajorVersion, cfg.es.typeNameOrDefault,
-      cfg.es.batchByteSizeLimitBytes, cfg.es.batchSizeLimit)
-  }
-
-  /** Typed-Handler pipeline: the user's `CdcMessage => Seq[EsAction]`
-    * (handler.go:7) instead of the canonical column-expression handler.
-    */
-  def runTyped(
-      spark: SparkSession,
-      eventsDir: String,
-      handler: Handlers.Handler,
-      bulkOutDir: String,
-      deadLetterDir: String,
-      checkpointDir: String,
-      concurrentRequest: Int = 2,
-      trigger: Trigger = Trigger.AvailableNow(),
-      mapping: Map[String, String] = CdcOps.tableIndexMapping
-  ): StreamingQuery = {
-    implicit val s: SparkSession = spark
-    startQuery(spark,
-      Handlers.applyHandler(CdcOps.typedMessages(changeStream(spark, eventsDir)),
-        handler, mapping),
-      bulkOutDir, checkpointDir, concurrentRequest, trigger,
-      ResponseHandler.deadLetter(deadLetterDir))
-  }
-
-  private def startQuery(spark: SparkSession, actions: DataFrame,
-      bulkOutDir: String, checkpointDir: String,
-      concurrentRequest: Int, trigger: Trigger,
-      responseHandler: ResponseHandler,
-      esMajor: Int = 8, typeName: String = "_doc",
-      batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): StreamingQuery = {
+  private[stream] def launch(spark: SparkSession, cfg: GraftConfig,
+      io: Connector.Io, handler: Option[Handlers.Handler],
+      trigger: Option[Trigger], rh: ResponseHandler,
+      http: Option[EsHttpConfig]): StreamingQuery = {
+    val es = cfg.es
+    val typed = CdcOps.typedMessages(changeStream(spark, io.eventsDir,
+      format = io.format, maxBytesPerTrigger = es.maxBytesPerTriggerBytes))
+    val actions = handler match {
+      case Some(h) => Handlers.applyHandler(typed, h, es.tableIndexMapping)(spark)
+      case None => CdcOps.handlerActions(typed, es.tableIndexMapping)
+    }
+    val flush: (DataFrame, Long) => Unit = flushBatch(cfg, io, rh, http)
     registerMetrics(spark)
     actions.writeStream
       // checkpoint-derived suffix: two connectors in one session never
       // collide; a restart of the same instance reuses the same name
-      .queryName(QueryNames.cdcPipeline(checkpointDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EsBulkSink.writeBatch(batch, batchId, bulkOutDir,
-          responseHandler, concurrentRequest,
-          esMajor, typeName, batchByteSizeLimit, batchSizeLimit)
-        ()
-      }
+      .queryName(QueryNames.cdcPipeline(io.checkpointDir))
+      .option("checkpointLocation", io.checkpointDir)
+      .trigger(trigger.getOrElse(
+        Trigger.ProcessingTime(es.batchTickerDuration.toMillis)))
+      .foreachBatch(flush)
       .start()
   }
 
-  /** The pipeline over the REAL HTTP transport ([[EsHttpClient]]): same
-    * chain, but each flush POSTs `_bulk` to live Elasticsearch instead of
-    * writing payload files, and the response demux runs on the ACTUAL
-    * `_bulk` response body. The ack contract is unchanged: a whole-batch
-    * transport failure (non-2xx after the retry loop) throws, the batch
-    * replays from the checkpoint — at-least-once in, LWW-deduped out.
+  /** One flush through a prepared config's transport: NDJSON payload
+    * files under `io.bulkOutDir`, or `_bulk` POSTs when `http` is set.
     */
-  def runHttp(spark: SparkSession, cfg0: graft.conf.GraftConfig,
-      eventsDir: String, http: EsHttpConfig, deadLetterDir: String,
-      checkpointDir: String,
-      trigger: Option[Trigger] = None,
-      responseHandler: Option[ResponseHandler] = None): StreamingQuery = {
-    implicit val s: SparkSession = spark
-    // ONE driver-side client up front: node discovery runs here (when
-    // enabled) and the DISCOVERED pool ships to the executor tasks via
-    // the config — without this, per-task clients rebuilt from the seed
-    // URLs would put the whole write load on the seed node(s) and the
-    // driver's discovery result would be discarded. Version auto-detect
-    // (the reference's Info-API probe) rides the same client.
-    val probe = new EsHttpClient(http)
-    val (cfg, httpForTasks) =
-      try {
-        val c = graft.conf.resolveVersion(cfg0, Some(() => probe.info()))
-        // seeds ∪ discovered: the discovery snapshot spreads load across
-        // the cluster, but the SEED addresses (stable DNS) stay in the
-        // pool — node churn after a one-shot snapshot must not leave the
-        // query with only dead ephemeral addresses
-        (c, http.copy(urls = (http.urls ++ probe.nodes).distinct,
-          discoverNodesOnStart = false))
-      } finally probe.close()
-    // rejection route over the REAL transport: rejects post to the
-    // configured index through the same cluster the data actions use
-    val rh0 = responseHandler.getOrElse(ResponseHandler.deadLetter(deadLetterDir))
-    val rh = cfg.es.rejectionLog match {
-      case Some(rl) => ResponseHandler.withRejectionShip(rh0, rl,
-        ResponseHandler.httpShip(httpForTasks,
-          ResponseHandler.fileShip(deadLetterDir)),
-        cfg.es.esMajorVersion, cfg.es.typeNameOrDefault)
-      case None => rh0
+  private[stream] def flushBatch(cfg: GraftConfig, io: Connector.Io,
+      rh: ResponseHandler, http: Option[EsHttpConfig])(
+      batch: DataFrame, batchId: Long): Unit = {
+    val es = cfg.es
+    http match {
+      case None => EsBulkSink.writeBatch(batch, batchId, io.bulkOutDir, rh,
+        es.concurrentRequest, es.esMajorVersion, es.typeNameOrDefault,
+        es.batchByteSizeLimitBytes, es.batchSizeLimit)
+      case Some(h) => EsHttpSink.postBatch(batch, batchId, h, rh,
+        es.concurrentRequest, es.esMajorVersion, es.typeNameOrDefault,
+        es.batchByteSizeLimitBytes, es.batchSizeLimit)
     }
-    rh.onInit(spark, cfg)
-    registerMetrics(spark)
-    CdcOps.handlerActions(CdcOps.typedMessages(
-        changeStream(spark, eventsDir,
-          maxBytesPerTrigger = cfg.es.maxBytesPerTriggerBytes)),
-      cfg.es.tableIndexMapping).writeStream
-      .queryName(QueryNames.cdcPipeline(checkpointDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger.getOrElse(
-        Trigger.ProcessingTime(cfg.es.batchTickerDuration.toMillis)))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        EsHttpSink.postBatch(batch, batchId, httpForTasks, rh,
-          cfg.es.concurrentRequest, cfg.es.esMajorVersion,
-          cfg.es.typeNameOrDefault, cfg.es.batchByteSizeLimitBytes,
-          cfg.es.batchSizeLimit)
-        ()
-      }
-      .start()
   }
 
   // per-SESSION registration (weak: sessions must stay collectable), not a
@@ -418,24 +307,6 @@ object Pipeline {
       snapshotActions(table, namespace, tableName, pkCol, chunkSize, mapping),
       batchId = -1L, bulkOutDir, ResponseHandler.deadLetter(deadLetterDir),
       concurrentRequest, esMajor, typeName)
-
-  /** Mode `initial` (README.md:32-38): snapshot first, then the CDC stream
-    * from the same sink/checkpoint — snapshot rows and subsequent change
-    * rows flow through identical batch/ack machinery, giving the
-    * reference's seamless-transition guarantee (no gaps: the stream's
-    * checkpoint starts at offset 0 of the replay dir; no duplicates: doc-id
-    * keyed writes are idempotent at the index).
-    */
-  def runInitial(spark: SparkSession, table: DataFrame, namespace: String,
-      tableName: String, pkCol: String, eventsDir: String, bulkOutDir: String,
-      deadLetterDir: String, checkpointDir: String,
-      concurrentRequest: Int = 2,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    runSnapshotOnly(spark, table, namespace, tableName, pkCol, bulkOutDir,
-      deadLetterDir, concurrentRequest)
-    run(spark, eventsDir, bulkOutDir, deadLetterDir, checkpointDir,
-      concurrentRequest, trigger)
-  }
 }
 
 /** R1 — per-action success/error callbacks, the reference's
@@ -450,9 +321,9 @@ trait ResponseHandler extends Serializable {
     * stream starts, with the session and the RESOLVED config (version
     * auto-detect already applied) — the analog of the reference's init
     * context carrying the ES client, where users bootstrap indices and
-    * templates. Invoked by the config-driven `Pipeline.run`/`runTyped`
-    * entries, or at `Connector.newConnector` construction (the
-    * bulk/option.go:19-27 timing).
+    * templates. Fired by the prepare step shared by `Pipeline.run` and
+    * `Connector.newConnector` — for the Connector at construction, before
+    * `start` (the bulk/option.go:19-27 timing).
     */
   def onInit(spark: SparkSession, cfg: graft.conf.GraftConfig): Unit = ()
   def onSuccess(actions: DataFrame, batchId: Long): Unit = ()
@@ -591,18 +462,22 @@ object ResponseHandler {
       }
     }
 
-  /** Config-derived handler assembly, shared by every config-driven
-    * entry (Pipeline.run/runTyped and Connector.newConnector): the
-    * explicit handler (or the file dead-letter default), wrapped with
-    * the RejectionLog route when the config declares one.
+  /** Config-derived handler assembly of the shared prepare step
+    * (`Pipeline.run` and `Connector.newConnector`): the explicit handler
+    * (or the file dead-letter default), wrapped with the RejectionLog
+    * route when the config declares one. The rejection payload ships the
+    * way the data does: files beside the batch flushes, or — with
+    * `http` — a `_bulk` POST into the same cluster, spilling to the files.
     */
   private[graft] def forConfig(cfg: graft.conf.GraftConfig,
       explicit: Option[ResponseHandler], deadLetterDir: String,
-      bulkOutDir: String): ResponseHandler = {
+      bulkOutDir: String, http: Option[EsHttpConfig] = None): ResponseHandler = {
     val inner = explicit.getOrElse(deadLetter(deadLetterDir))
     cfg.es.rejectionLog match {
-      case Some(rl) => withRejectionLog(inner, rl, bulkOutDir,
-        cfg.es.esMajorVersion, cfg.es.typeNameOrDefault)
+      case Some(rl) =>
+        val files = fileShip(bulkOutDir)
+        withRejectionShip(inner, rl, http.fold(files)(httpShip(_, files)),
+          cfg.es.esMajorVersion, cfg.es.typeNameOrDefault)
       case None => inner
     }
   }
@@ -614,18 +489,6 @@ object ResponseHandler {
   * (bulk.go:176-245).
   */
 object EsBulkSink {
-
-  /** A batch write ≙ one flush (bulk.go:253-278):
-    * 1. in-batch last-write-wins dedup (B1);
-    * 2. R1 demux: invalid actions (no doc id / no index) → dead-letter
-    *    parquet (OnError); valid → bulk payload (OnSuccess path);
-    * 3. B5: exactly `concurrentRequest` output partitions, each written as
-    *    one NDJSON file ≙ one concurrent `_bulk` request.
-    */
-  def writeBatch(batch: DataFrame, batchId: Long, bulkOutDir: String,
-      deadLetterDir: String, concurrentRequest: Int): Unit =
-    writeBatch(batch, batchId, bulkOutDir,
-      ResponseHandler.deadLetter(deadLetterDir), concurrentRequest)
 
   /** R1 per-action response demux — the reference's handleResponse
     * (bulk.go:392-411) over the item-level error map that joinErrors
@@ -722,40 +585,54 @@ object EsBulkSink {
     (deduped, payload)
   }
 
-  /** B2 flush-split arithmetic (bulk.go:164-173), shared by both sinks:
-    * requests sized so none exceeds the byte/count limit, never fewer
-    * than `concurrentRequest`.
+  /** B2 flush triggers (bulk.go:164-173), shared by both sinks: when a
+    * byte and/or action-count limit is set, size the request split so no
+    * single `_bulk` request exceeds either, never fewer than
+    * `concurrentRequest` — payload sized in UTF-8 BYTES (octet_length;
+    * the reference counts bytes, not chars). One tiny post-agg collect
+    * computes both measures; None (and no job) when no limit binds.
+    * Returns (actions, requests).
     */
-  private[stream] def requestSplit(totalBytes: Long, nActions: Long,
-      concurrentRequest: Int, batchByteSizeLimit: Long,
-      batchSizeLimit: Int): Int =
-    if (batchByteSizeLimit <= 0L && batchSizeLimit <= 0) concurrentRequest
+  private[stream] def limitSplit(payload: DataFrame, concurrentRequest: Int,
+      batchByteSizeLimit: Long, batchSizeLimit: Int): Option[(Long, Int)] =
+    if (batchByteSizeLimit <= 0L && batchSizeLimit <= 0) None
     else {
+      val m = payload
+        .agg(sum(octet_length(col("value"))), count(lit(1))).collect()(0)
+      val totalBytes = if (m.isNullAt(0)) 0L else m.getLong(0)
+      val nActions = m.getLong(1)
       val byBytes =
         if (batchByteSizeLimit <= 0L) 1
         else math.ceil(totalBytes.toDouble / batchByteSizeLimit).toInt
       val byCount =
         if (batchSizeLimit <= 0) 1
         else math.ceil(nActions.toDouble / batchSizeLimit).toInt
-      math.max(concurrentRequest, math.max(byBytes, byCount))
+      Some((nActions, math.max(concurrentRequest, math.max(byBytes, byCount))))
     }
 
-  def writeBatch(batch: DataFrame, batchId: Long, bulkOutDir: String,
-      responseHandler: ResponseHandler, concurrentRequest: Int,
-      esMajor: Int = 8, typeName: String = "_doc",
-      batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): Unit = {
-    // Two-level cache, both measured on the 1M-event load test: the raw
-    // batch feeds the bad-split probe AND the dedup window (recomputing
-    // the upstream chain twice loses to one materialization), and the
-    // post-dedup frame feeds three consumers (payload write, metrics,
-    // OnSuccess) — caching it runs the dedup window once per flush.
-    // Both registrations happen INSIDE the try so a failure anywhere
-    // (incl. the dead-letter write) still unpersists in finally — a
-    // streaming engine retries failed batches, and a leak per retry
-    // accumulates for the life of the query.
+  /** The flush skeleton of both transports (bulk.go:253-278): cache the
+    * batch → [[flushPrologue]] → `ship` the payload → R3 counters →
+    * response demux → unpersist. Only `ship` differs between the file and
+    * HTTP sinks; it gets the payload `(event_id, value)` and returns the
+    * per-item failures by event id (a file write has none — it is
+    * all-or-nothing).
+    *
+    * Two-level cache, both measured on the 1M-event load test: the raw
+    * batch feeds the bad-split probe AND the dedup window (recomputing
+    * the upstream chain twice loses to one materialization), and the
+    * post-dedup frame feeds the ship, the counters and the demux —
+    * caching it runs the dedup window once per flush. Both registrations
+    * happen INSIDE the try so a failure anywhere (incl. the dead-letter
+    * write) still unpersists in finally — a streaming engine retries
+    * failed batches, and a leak per retry accumulates for the life of the
+    * query.
+    */
+  private[stream] def flush(batch: DataFrame, batchId: Long,
+      responseHandler: ResponseHandler, esMajor: Int, typeName: String)(
+      ship: DataFrame => Map[Long, String]): Unit = {
     // opt-in per-stage walls (`spark.graft.sink.verbose=true`) — the
     // pgcapture.verbose precedent, one level deeper: the first question
-    // about a slow sink batch is which of cache-build / dedup / write
+    // about a slow sink batch is which of cache-build / dedup / ship
     // owns the wall
     def staged[T](name: String)(f: => T): T =
       if (!batch.sparkSession.conf.getOption("spark.graft.sink.verbose")
@@ -785,38 +662,10 @@ object EsBulkSink {
       // reason batch sizing, not sink tuning, is the throughput knob
       // (README "size the admission knobs").
       staged("cache_build")(cached.count())
-      val (d, payloadWithId) = staged("prologue")(flushPrologue(cached, batchId,
+      val (d, payload) = staged("prologue")(flushPrologue(cached, batchId,
         responseHandler, esMajor, typeName))
       deduped = d
-      val payload = payloadWithId.select("value")
-      // B2 flush triggers: when a byte and/or action-count limit is set,
-      // size the bulk-request split so no single `_bulk` file exceeds
-      // either — payload sized in UTF-8 BYTES (octet_length; the
-      // reference counts bytes, not chars). One tiny post-agg collect
-      // computes both measures; skipped entirely when no limit binds.
-      // The per-file bound is approximate under row-size skew
-      // (round-robin balances rows). When the limits bind, nRequests
-      // EXCEEDS concurrentRequest: the file sink writes all splits in
-      // parallel tasks (for files the split is about per-request
-      // byte/count bounds, not in-flight concurrency — the HTTP sink
-      // caps in-flight separately, see EsHttpSink).
-      val nRequests =
-        if (batchByteSizeLimit <= 0L && batchSizeLimit <= 0)
-          concurrentRequest
-        else {
-          val m = payload
-            .agg(sum(octet_length(col("value"))), count(lit(1))).collect()(0)
-          requestSplit(if (m.isNullAt(0)) 0L else m.getLong(0), m.getLong(1),
-            concurrentRequest, batchByteSizeLimit, batchSizeLimit)
-        }
-      // overwrite INTO the per-batch directory: a replayed batch (failure
-      // after partial write, before checkpoint commit) clobbers its own
-      // partial output instead of duplicating it — effectively-once files
-      // on top of the at-least-once ack contract
-      staged("payload_write")(payload
-        .repartition(nRequests)
-        .write.mode("overwrite")
-        .text(s"$bulkOutDir/batch_$batchId"))
+      val errors = staged("ship")(ship(payload))
       // R3 per-index action counters (metric.go:56-96): one tiny agg over
       // the cached batch after the flush succeeds. At-least-once like the
       // reference (its counters bump in handleResponse BEFORE the LSN ack,
@@ -825,11 +674,41 @@ object EsBulkSink {
       staged("metrics_agg")(deduped.groupBy("index_name", "action_type").count()
         .collect()
         .foreach(r => Metrics.record(r.getString(0), r.getString(1), r.getLong(2))))
-      staged("on_success")(responseHandler.onSuccess(deduped, batchId))
+      staged("demux")(
+        handleResponseByEventId(deduped, errors, responseHandler, batchId))
     } finally {
       if (deduped != null) deduped.unpersist()
       cached.unpersist()
       ()
     }
   }
+
+  /** A batch write ≙ one flush (bulk.go:253-278) as NDJSON payload files:
+    * 1. in-batch last-write-wins dedup (B1);
+    * 2. R1 demux: invalid actions (no doc id / no index) → dead-letter
+    *    parquet (OnError); valid → bulk payload (OnSuccess path);
+    * 3. B5: exactly `concurrentRequest` output files per batch, each ≙ one
+    *    concurrent `_bulk` request — more when the B2 flush limits bind
+    *    (for files the split is about per-request byte/count bounds, not
+    *    in-flight concurrency; the HTTP sink caps in-flight separately).
+    *    The per-file bound is approximate under row-size skew
+    *    (round-robin balances rows).
+    */
+  def writeBatch(batch: DataFrame, batchId: Long, bulkOutDir: String,
+      responseHandler: ResponseHandler, concurrentRequest: Int,
+      esMajor: Int = 8, typeName: String = "_doc",
+      batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): Unit =
+    flush(batch, batchId, responseHandler, esMajor, typeName) { payload =>
+      val nRequests = limitSplit(payload, concurrentRequest,
+        batchByteSizeLimit, batchSizeLimit).fold(concurrentRequest)(_._2)
+      // overwrite INTO the per-batch directory: a replayed batch (failure
+      // after partial write, before checkpoint commit) clobbers its own
+      // partial output instead of duplicating it — effectively-once files
+      // on top of the at-least-once ack contract
+      payload.select("value")
+        .repartition(nRequests)
+        .write.mode("overwrite")
+        .text(s"$bulkOutDir/batch_$batchId")
+      Map.empty
+    }
 }

@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.stream.{EsBulkResponse, EsHttpClient, EsHttpConfig, Pipeline}
+import graft.stream.{Connector, EsBulkResponse, EsHttpClient, EsHttpConfig, Handlers, Pipeline}
 
 /** The real HTTP transport against an in-process loopback stub ES
   * (zero-egress: same sandbox rules as the Prometheus endpoint, inverted
@@ -256,9 +256,10 @@ class EsHttpTransportSpec extends SparkSuite {
       val cfg = graft.conf.GraftConfig(es = graft.conf.EsSinkConfig(
         tableIndexMapping = graft.ops.CdcOps.tableIndexMapping,
         version = "")) // "" → auto-detect over the live Info API
-      val q = Pipeline.runHttp(spark, cfg, eventsDir,
-        EsHttpConfig(Seq(es.url), retryBackoffBaseMs = 1), dlq,
-        tmp("http-ckpt"), trigger = Some(Trigger.AvailableNow()))
+      val q = Pipeline.run(spark, cfg,
+        Connector.Io(eventsDir, tmp("http-bulk"), dlq, tmp("http-ckpt")),
+        trigger = Some(Trigger.AvailableNow()),
+        http = Some(EsHttpConfig(Seq(es.url), retryBackoffBaseMs = 1)))
       awaitDone(q)
       // version detected as 6.x → meta lines must carry _type
       val posted = es.received.peek()
@@ -271,6 +272,45 @@ class EsHttpTransportSpec extends SparkSuite {
       assert(ids == Seq("2"), s"exactly doc 2 must dead-letter: $ids")
       assert(dead.select("_bulk_error").as[String].head()
         .contains("mapper_parsing_exception"))
+    } finally es.stop()
+  }
+
+  test("Connector over HTTP: typed handler and initial snapshot post _bulk, no payload files") {
+    import scala.jdk.CollectionConverters._
+    import graft.conf.{EsSinkConfig, GraftConfig, InitialMode, SnapshotConfig}
+    val es = new StubEs()
+    val eventsDir = tmp("http-conn-events")
+    val bulkDir = tmp("http-conn-bulk")
+    try {
+      Seq(
+        (1L, 1706000000000000001L, 1L, "signup", 1.0, "{}"),
+        (2L, 1706000000000000002L, 2L, "signup", 2.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode(SaveMode.Append).parquet(eventsDir)
+      // the reference's simple handler, tagged so the posted ids prove the
+      // typed path (not the column handler) produced the CDC actions
+      val tagged: Handlers.Handler = msg =>
+        Handlers.simpleHandler(msg).map(a => a.copy(docId = s"t${a.docId}"))
+      val c = Connector.newConnector(spark,
+        GraftConfig(EsSinkConfig(graft.ops.CdcOps.tableIndexMapping),
+          snapshot = SnapshotConfig(enabled = true, mode = InitialMode)),
+        Connector.Io(eventsDir, bulkDir, tmp("http-conn-dlq"), tmp("http-conn-ckpt"),
+          snapshotTable = Some((
+            Seq((100L, "u100"), (101L, "u101")).toDF("id", "name"),
+            "public", "users", "id"))),
+        handler = Some(tagged),
+        trigger = Some(Trigger.AvailableNow()),
+        http = Some(EsHttpConfig(Seq(es.url), retryBackoffBaseMs = 1)))
+      c.start()
+      c.drainAndClose()
+      val metas = es.received.asScala.toSeq.flatMap(_.linesIterator)
+        .filter(_.contains("\"_id\""))
+      val ids = metas.map(l => l.split("\"_id\":\"")(1).split("\"")(0))
+      assert(ids.sorted == Seq("100", "101", "t1", "t2"),
+        s"snapshot rows and typed-handler actions must all post: $ids")
+      assert(metas.forall(_.contains("\"_index\":\"users_idx\"")), metas)
+      assert(new java.io.File(bulkDir).list().isEmpty,
+        "the HTTP route must not write payload files")
     } finally es.stop()
   }
 

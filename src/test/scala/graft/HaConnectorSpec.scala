@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.stream.{HaConnector, HaLease, Pipeline}
+import graft.stream.{HaConnector, HaLease}
 
 /** X3 active/passive availability: the storage lease is the replication
   * slot's analog — exactly one instance runs the pipeline; killing the
@@ -146,8 +146,7 @@ class HaConnectorSpec extends SparkSuite {
     val leaseDir = tmp("ha-lease-dir")
     writeSegment(walDir, "seg-000", Seq(1L, 2L))
 
-    def startQuery() = Pipeline.run(spark, walDir, bulk, dlq, ckpt,
-      concurrentRequest = 1,
+    def startQuery() = runPipeline(walDir, bulk, dlq, ckpt, concurrentRequest = 1,
       trigger = Trigger.ProcessingTime(100L), format = "wal")
 
     val a = HaConnector.start(spark, leaseDir, "A",

@@ -37,7 +37,10 @@ class PairGeometrySpec extends SparkSuite {
       Seq("a", "b"),
       Seq("alpha", "beta", "gamma", "delta"),
       Seq("ünï", "ασδ", "中文", "z"),
-      (1 to 12).map(i => f"s$i%02d")
+      (1 to 12).map(i => f"s$i%02d"),
+      // null slots stay null in the pair structs (s1/s2 are nullable),
+      // never an empty string
+      Seq("a", null, "b", null)
     )
     val df = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }
       .toDF("id", "ss")
@@ -45,8 +48,8 @@ class PairGeometrySpec extends SparkSuite {
         hofPairs(col("ss")).as("hof"),
         string_pairs(col("ss")).as("kernel"))
       .selectExpr("id",
-        "transform(hof, p -> concat(p.s1, '|', p.s2)) AS h",
-        "transform(kernel, p -> concat(p.s1, '|', p.s2)) AS k")
+        "transform(hof, p -> concat(coalesce(p.s1, '<null>'), '|', coalesce(p.s2, '<null>'))) AS h",
+        "transform(kernel, p -> concat(coalesce(p.s1, '<null>'), '|', coalesce(p.s2, '<null>'))) AS k")
       .collect()
     for (r <- rows)
       assert(r.getSeq[String](1) == r.getSeq[String](2),

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.streaming.Trigger
-import graft.stream.{Metrics, Pipeline}
+import graft.stream.{Connector, Metrics, Pipeline}
 
 /** Snapshot-mode specs mirroring integration_test/snapshot_test.go:
   * snapshot_only (≥N SNAPSHOT docs, nothing else) and initial mode
@@ -44,10 +44,14 @@ class SnapshotModeSpec extends SparkSuite {
     (100L to 104L).map(i => (i, 1706000000000000000L + i, Option(i), "signup", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode(SaveMode.Append).parquet(eventsDir)
-    val q = Pipeline.runInitial(spark, users(10), "public", "users", "id",
-      eventsDir, bulkDir, tmp("init-dlq"), tmp("init-ckpt"),
-      trigger = Trigger.AvailableNow())
-    awaitDone(q)
+    val c = Connector.newConnector(spark,
+      plainConfig().copy(
+        snapshot = conf.SnapshotConfig(enabled = true, mode = conf.InitialMode)),
+      Connector.Io(eventsDir, bulkDir, tmp("init-dlq"), tmp("init-ckpt"),
+        snapshotTable = Some((users(10), "public", "users", "id"))),
+      trigger = Some(Trigger.AvailableNow()))
+    c.start()
+    c.drainAndClose()
     val lines = readBulk(bulkDir)
     assert(lines.count(_.contains("\"operation\":\"SNAPSHOT\"")) == 10)
     assert(lines.count(_.contains("\"op\":\"INSERT\"")) == 5)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.streaming.Trigger
-import graft.stream.Pipeline
+import graft.stream.{Connector, Pipeline}
 
 /** End-to-end streaming test mirroring the reference's ack/resume crown
   * jewel (integration_test/connector_test.go:428-621): batch 1 → stop →
@@ -57,8 +57,7 @@ class StreamingPipelineSpec extends SparkSuite {
 
     // phase 1: batch 1 flows through
     stage(eventsDir, 1L to 5L)
-    val q1 = Pipeline.run(spark, eventsDir, bulkDir, dlqDir, ckpt,
-      concurrentRequest = 2, trigger = Trigger.AvailableNow())
+    val q1 = runPipeline(eventsDir, bulkDir, dlqDir, ckpt, concurrentRequest = 2)
     awaitDone(q1)
     val after1 = bulkDocIds(bulkDir)
     assert(after1.toSet == (1L to 5L).map(_.toString).toSet, s"got $after1")
@@ -67,8 +66,7 @@ class StreamingPipelineSpec extends SparkSuite {
     stage(eventsDir, 6L to 9L)
 
     // phase 3: restart with the same checkpoint (≙ same replication slot)
-    val q2 = Pipeline.run(spark, eventsDir, bulkDir, dlqDir, ckpt,
-      concurrentRequest = 2, trigger = Trigger.AvailableNow())
+    val q2 = runPipeline(eventsDir, bulkDir, dlqDir, ckpt, concurrentRequest = 2)
     awaitDone(q2)
     val after2 = bulkDocIds(bulkDir)
     assert(after2.toSet == (1L to 9L).map(_.toString).toSet, s"got $after2")
@@ -77,8 +75,7 @@ class StreamingPipelineSpec extends SparkSuite {
 
     // phase 4: live stream still works after restart
     stage(eventsDir, 10L to 12L)
-    val q3 = Pipeline.run(spark, eventsDir, bulkDir, dlqDir, ckpt,
-      concurrentRequest = 2, trigger = Trigger.AvailableNow())
+    val q3 = runPipeline(eventsDir, bulkDir, dlqDir, ckpt, concurrentRequest = 2)
     awaitDone(q3)
     assert(bulkDocIds(bulkDir).toSet == (1L to 12L).map(_.toString).toSet)
   }
@@ -87,8 +84,8 @@ class StreamingPipelineSpec extends SparkSuite {
     val eventsDir = tmp("graft-events2")
     val bulkDir = tmp("graft-bulk2")
     stage(eventsDir, 1L to 30L)
-    val q = Pipeline.run(spark, eventsDir, bulkDir, tmp("graft-dlq2"), tmp("graft-ckpt2"),
-      concurrentRequest = 3, trigger = Trigger.AvailableNow())
+    val q = runPipeline(eventsDir, bulkDir, tmp("graft-dlq2"), tmp("graft-ckpt2"),
+      concurrentRequest = 3)
     awaitDone(q)
     val batchDirs = new java.io.File(bulkDir).listFiles().filter(_.isDirectory)
     assert(batchDirs.nonEmpty)
@@ -107,8 +104,8 @@ class StreamingPipelineSpec extends SparkSuite {
       (3L, 1706000002000000000L, Option(3L), "error", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode(SaveMode.Append).parquet(eventsDir)
-    val q = Pipeline.run(spark, eventsDir, bulkDir, tmp("graft-trio-dlq"),
-      tmp("graft-trio-ckpt"), concurrentRequest = 1, trigger = Trigger.AvailableNow())
+    val q = runPipeline(eventsDir, bulkDir, tmp("graft-trio-dlq"),
+      tmp("graft-trio-ckpt"), concurrentRequest = 1)
     awaitDone(q)
     val lines = bulkLines(bulkDir)
     assert(lines.exists(l => l.contains("\"index\"") && l.contains("users_idx") && l.contains("\"_id\":\"1\"")))
@@ -128,9 +125,8 @@ class StreamingPipelineSpec extends SparkSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(eventsDir, "seg1.json"),
       rows.mkString("\n").getBytes)
-    val q = Pipeline.run(spark, eventsDir, bulkDir, tmp("graft-json-dlq"),
-      tmp("graft-json-ckpt"), concurrentRequest = 1,
-      trigger = Trigger.AvailableNow(), format = "json")
+    val q = runPipeline(eventsDir, bulkDir, tmp("graft-json-dlq"),
+      tmp("graft-json-ckpt"), concurrentRequest = 1, format = "json")
     awaitDone(q)
     assert(bulkDocIds(bulkDir).toSet == (1L to 4L).map(_.toString).toSet)
   }
@@ -167,8 +163,9 @@ class StreamingPipelineSpec extends SparkSuite {
     val cfg = GraftConfig(EsSinkConfig(
       tableIndexMapping = CdcOps.tableIndexMapping,
       maxBytesPerTrigger = Some("1b"), concurrentRequest = 1))
-    val q = Pipeline.run(spark, cfg, eventsDir, bulkDir, tmp("graft-adm-dlq"),
-      tmp("graft-adm-ckpt"), Some(Trigger.AvailableNow()))
+    val q = Pipeline.run(spark, cfg,
+      Connector.Io(eventsDir, bulkDir, tmp("graft-adm-dlq"), tmp("graft-adm-ckpt")),
+      trigger = Some(Trigger.AvailableNow()))
     awaitDone(q)
     val batchDirs = new java.io.File(bulkDir).listFiles().filter(_.isDirectory)
     assert(batchDirs.length >= 3,
@@ -184,8 +181,9 @@ class StreamingPipelineSpec extends SparkSuite {
     stage(eventsDir, Seq(1L, 2L))
     val cfg = GraftConfig(EsSinkConfig(
       tableIndexMapping = CdcOps.tableIndexMapping, version = ""))
-    val q = Pipeline.run(spark, cfg, eventsDir, bulkDir, tmp("graft-v-dlq"),
-      tmp("graft-v-ckpt"), Some(Trigger.AvailableNow()))
+    val q = Pipeline.run(spark, cfg,
+      Connector.Io(eventsDir, bulkDir, tmp("graft-v-dlq"), tmp("graft-v-ckpt")),
+      trigger = Some(Trigger.AvailableNow()))
     awaitDone(q)
     val metas = bulkLines(bulkDir).filter(_.contains("\"_id\""))
     assert(metas.nonEmpty)
@@ -212,7 +210,7 @@ class StreamingPipelineSpec extends SparkSuite {
     val eventsDir = tmp("graft-tick-events")
     val bulkDir = tmp("graft-tick-bulk")
     stage(eventsDir, 1L to 4L)
-    val q = Pipeline.run(spark, eventsDir, bulkDir, tmp("graft-tick-dlq"),
+    val q = runPipeline(eventsDir, bulkDir, tmp("graft-tick-dlq"),
       tmp("graft-tick-ckpt"), concurrentRequest = 1,
       trigger = Trigger.ProcessingTime(100)) // ≙ batchTickerDuration=100ms (examples)
     try {
@@ -248,7 +246,7 @@ class StreamingPipelineSpec extends SparkSuite {
     // ≙ response_handler.go:9-12 + bulk/option.go:19-27: the init context
     // is where users bootstrap indices/templates; here the handler
     // bootstraps the output "index template" marker from the hook
-    import graft.stream.{Pipeline, ResponseHandler}
+    import graft.stream.ResponseHandler
     val eventsDir = tmp("graft-events-init")
     val bulkDir = tmp("graft-bulk-init")
     stage(eventsDir, 1L to 3L)
@@ -271,8 +269,9 @@ class StreamingPipelineSpec extends SparkSuite {
     val cfg = graft.conf.GraftConfig(graft.conf.EsSinkConfig(
       tableIndexMapping = Map("public.users" -> "users_idx"),
       version = "")) // auto-detect requested → resolved BEFORE onInit
-    val q = Pipeline.run(spark, cfg, eventsDir, bulkDir, tmp("graft-dlq-init"),
-      tmp("graft-ckpt-init"), Some(Trigger.AvailableNow()), Some(handler))
+    val q = Pipeline.run(spark, cfg,
+      Connector.Io(eventsDir, bulkDir, tmp("graft-dlq-init"), tmp("graft-ckpt-init")),
+      trigger = Some(Trigger.AvailableNow()), responseHandler = Some(handler))
     awaitDone(q)
     assert(calls.headOption.contains("init"), s"init not first: $calls")
     assert(calls.count(_ == "init") == 1, s"init fired more than once: $calls")
@@ -282,7 +281,7 @@ class StreamingPipelineSpec extends SparkSuite {
   }
 
   test("R1 OnInit: Connector construction fires it before start (option.go timing)") {
-    import graft.stream.{Connector, ResponseHandler}
+    import graft.stream.ResponseHandler
     val calls = scala.collection.mutable.ArrayBuffer[String]()
     val handler = new ResponseHandler {
       override def onInit(s: org.apache.spark.sql.SparkSession,
@@ -337,8 +336,8 @@ class StreamingPipelineSpec extends SparkSuite {
     val bulkDir = tmp("graft-bulk3")
     val dlqDir = tmp("graft-dlq3")
     stage(eventsDir, 1L to 3L, nullUserIds = Seq(100L, 101L))
-    val q = Pipeline.run(spark, eventsDir, bulkDir, dlqDir, tmp("graft-ckpt3"),
-      concurrentRequest = 1, trigger = Trigger.AvailableNow())
+    val q = runPipeline(eventsDir, bulkDir, dlqDir, tmp("graft-ckpt3"),
+      concurrentRequest = 1)
     awaitDone(q)
     assert(bulkDocIds(bulkDir).toSet == Set("1", "2", "3"))
     val dead = spark.read.parquet(dlqDir)

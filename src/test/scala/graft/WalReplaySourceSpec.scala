@@ -4,8 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.stream.Pipeline
-
 /** The custom DSv2 WAL-replay source (S1 as a real MicroBatchStream):
   * segment-count offsets ≙ replication-slot LSN, per-batch segment
   * admission, checkpoint resume without re-delivery, and the full CDC
@@ -155,8 +153,7 @@ class WalReplaySourceSpec extends SparkSuite {
         .map(l => l.split("\"_id\":\"")(1).split("\"")(0))
     }
     def runOnce(): Unit = {
-      val q = Pipeline.run(spark, dir, bulk, dlq, ckpt,
-        concurrentRequest = 2, trigger = Trigger.AvailableNow(), format = "wal")
+      val q = runPipeline(dir, bulk, dlq, ckpt, concurrentRequest = 2, format = "wal")
       awaitDone(q)
       ()
     }
@@ -232,8 +229,8 @@ class WalReplaySourceSpec extends SparkSuite {
     val bulk = tmp("wal-bulk")
     val dlq = tmp("wal-dlq")
     writeSegment(dir, "seg-000", Seq(7L, 8L))
-    val q = Pipeline.run(spark, dir, bulk, dlq, tmp("wal-cdc-ckpt"),
-      concurrentRequest = 1, trigger = Trigger.AvailableNow(), format = "wal")
+    val q = runPipeline(dir, bulk, dlq, tmp("wal-cdc-ckpt"), concurrentRequest = 1,
+      format = "wal")
     awaitDone(q)
     val lines = new java.io.File(bulk).listFiles.filter(_.isDirectory)
       .flatMap(_.listFiles).filter(_.getName.endsWith(".txt"))

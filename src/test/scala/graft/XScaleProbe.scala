@@ -9,16 +9,31 @@ import org.apache.spark.sql.functions._
   * restricted to ids < 640000 (the x128 span), benchmark docs untouched.
   *
   * Usage:
+  *   XSCALE_OUT=<outDir> Test/runMain graft.XScaleProbe fixture <srcSfDir> <copies>
   *   Test/runMain graft.XScaleProbe build <scaledDir> <stateDir>
   *   Test/runMain graft.XScaleProbe patch <scaledDir> <stateDir>
+  * `fixture` writes `<copies>` shifted copies of `<srcSfDir>/documents.parquet`
+  * to `<outDir>/documents.parquet` (the documents-only ScaleData
+  * layout; pass `<outDir>` as the `<scaledDir>` of the other modes).
   * Fresh JVM per cell (the published method). SPARK_DRIVER_MEM=16g for
   * x512. `patch` prints the per-stage walls (spark.graft.patch.verbose),
   * total compute wall, the output row count and an order-insensitive
   * checksum (layout-change identity evidence), and per-face file counts.
+  * Wrong arguments print this usage and exit with status 2.
   */
 object XScaleProbe {
+  private val Usage =
+    """usage: XSCALE_OUT=<outDir> XScaleProbe fixture <srcSfDir> <copies>
+      |       XScaleProbe build|patch <scaledDir> <stateDir>""".stripMargin
+
   def main(args: Array[String]): Unit = {
-    val Array(mode, dir, stateDir) = args.take(3)
+    val (mode, dir, stateDir) = args match {
+      case Array(m @ ("build" | "patch"), d, s) => (m, d, s)
+      case Array("fixture", d, n)
+          if n.toIntOption.exists(_ > 0) && sys.env.contains("XSCALE_OUT") =>
+        ("fixture", d, n)
+      case _ => System.err.println(Usage); sys.exit(2)
+    }
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
