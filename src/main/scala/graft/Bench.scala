@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftext.CheckpointBlocks
+import graft.obs.Stages
 import java.lang.management.ManagementFactory
 
 /** Benchmark main: one JSON line with per-query timings over
@@ -66,10 +67,10 @@ import java.lang.management.ManagementFactory
   * Staged sub-walls (round 12): the three incremental-clean oracle keys
   * deliberately price v1-build + patch in one cell (the from-scratch
   * oracle hash is the patch ≡ rebuild proof), so after the normal
-  * measurement Bench runs `SparkEntry.stagedWalls` (best-of-2 per key
-  * since round 15) and ships a `"stages"` map — the top of the table
-  * then reads as "the deliberate rebuild costs X, the daily patch
-  * costs Y" from the artifact alone.
+  * measurement Bench runs `SparkEntry.stagedWalls` (twice per key, the
+  * run with the lower total kept whole) and ships a `"stages"` map —
+  * the top of the table then reads as "the deliberate rebuild costs X,
+  * the daily patch costs Y" from the artifact alone.
   *
   * Driver parse contract (round 15): stdout ends with a COMPACT
   * `{"metric":"total",...,"queries":{name:2-decimal wall,...},...}` line —
@@ -103,13 +104,6 @@ object Bench {
       System.err.println(
         s"[bench] WARNING: 1-min load average $loadAtStart > $loadThreshold " +
           "before sweep start — timings below are suspect (contended_at_start)")
-    // process-CPU time: the com.sun interface is present on every JVM we
-    // target (HotSpot/OpenJDK 17); -1 sentinel keeps the artifact honest if
-    // an exotic JVM ever lacks it
-    def procCpuNanos: Long = osBean match {
-      case sun: com.sun.management.OperatingSystemMXBean => sun.getProcessCpuTime
-      case _ => -1L
-    }
     // noop write forces FULL column evaluation — count() would let
     // Catalyst prune projection-only columns (an encode query would
     // benchmark the parquet scan, not the encoding)
@@ -160,25 +154,20 @@ object Bench {
       // not the timed window
       CheckpointBlocks.flushListeners(spark)
       val d0 = drops.count
-      val g0 = CheckpointBlocks.gcSeconds
-      val c0 = procCpuNanos
-      val t0 = System.nanoTime()
-      val ok =
+      val (ok, d) = Stages.measure(
         try { exec(fn(spark, sfDir)); true }
         catch {
           case e: Throwable =>
             System.err.println(
               s"[bench] FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
             false
-        }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = if (c0 >= 0) (procCpuNanos - c0) / 1e9 else -1.0
-      val gc = CheckpointBlocks.gcSeconds - g0
+        })
       CheckpointBlocks.flushListeners(spark)
       val dropped = drops.count - d0
       val storageMb = CheckpointBlocks.storageBytesUsed(spark) / 1048576.0
-      Timing(wall, cpu, osBean.getSystemLoadAverage, failed = !ok,
-        gc = gc, dropped = dropped, storageMb = storageMb)
+      Timing(d.wallSec, if (d.cpuNanos >= 0) d.cpuSec else -1.0,
+        osBean.getSystemLoadAverage, failed = !ok,
+        gc = d.gcSec, dropped = dropped, storageMb = storageMb)
     }
     // committed quiet-box x32 per-query baseline (bench/baseline.json,
     // refreshed with each consolidation): any query landing > 3x its
@@ -280,9 +269,9 @@ object Bench {
     // the same barrier; failures degrade to an absent entry rather than
     // a failed sweep. Best-of-2 per staged key (round 15, after the r14
     // driver artifact shipped a one-shot 34 s contended patch reading
-    // that six repo sweeps place at 4.8-6.9 s): every other channel
-    // earned retiming discipline, this one now has it — per-STAGE min
-    // across the two runs, so one contended run can't ship unflagged.
+    // that six repo sweeps place at 4.8-6.9 s): the published map is the
+    // whole run with the lower total — a per-stage min across runs would
+    // sum to a wall that never happened.
     val stages: Map[String, Map[String, Double]] =
       SparkEntry.stagedWalls.flatMap { case (name, fn) =>
         def once(): Option[Map[String, Double]] = {
@@ -297,14 +286,7 @@ object Bench {
               None
           }
         }
-        (once(), once()) match {
-          case (Some(a), Some(b)) =>
-            Some(name -> (a.keySet ++ b.keySet).map { st =>
-              st -> math.min(a.getOrElse(st, Double.MaxValue),
-                b.getOrElse(st, Double.MaxValue))
-            }.toMap)
-          case (a, b) => a.orElse(b).map(name -> _)
-        }
+        Seq(once(), once()).flatten.minByOption(_.values.sum).map(name -> _)
       }
     // Locale.ROOT: a comma-decimal default locale (de_DE, fr_FR) would
     // render 1,2345 and corrupt the one-line JSON artifact

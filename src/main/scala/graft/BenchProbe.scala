@@ -22,11 +22,6 @@ object BenchProbe {
     try SparkEntry.warmShared(spark, sfDir)
     catch { case e: Throwable => println(s"PROBE warmShared failed: ${e.getMessage}") }
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def cpuNanos: Long = osBean match {
-      case s: com.sun.management.OperatingSystemMXBean => s.getProcessCpuTime
-      case _ => -1L
-    }
     for (q <- names) {
       try {
         val (t, c) = (1 to 2).map { _ =>
@@ -36,10 +31,9 @@ object BenchProbe {
           // probe numbers under-read the sweep for scratch-heavy keys)
           org.apache.spark.sql.graftext.CheckpointBlocks.resetForMeasurement(
             spark, SparkEntry.sharedCaches(spark, sfDir))
-          val c0 = cpuNanos
-          val t0 = System.nanoTime()
-          exec(SparkEntry.queries(q)(spark, sfDir))
-          ((System.nanoTime() - t0) / 1e9, (cpuNanos - c0) / 1e9)
+          val (_, d) = graft.obs.Stages.measure(
+            exec(SparkEntry.queries(q)(spark, sfDir)))
+          (d.wallSec, d.cpuSec)
         }.minBy(_._1)
         println(f"PROBE $q%-24s $t%.2f s  cpu $c%.2f s")
       } catch {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.obs.Stages
 import graft.sources.PgWire
 import graft.stream.PgCaptureStream
 
@@ -20,8 +21,9 @@ import graft.stream.PgCaptureStream
   * decode → relationalize → route → LWW dedup → NDJSON → concurrent bulk
   * files + registry snapshot + checkpoint ack with Trigger.AvailableNow.
   * Generation is excluded from the timing; one JSON line reports
-  * events/s, comparable to the reference's implied ~100k events/s
-  * (BASELINE.md) whose main loop is exactly this chain
+  * events/s and the run's `pgcapture.*`/`sink.*` stage totals
+  * ([[graft.obs.Stages]]), comparable to the reference's implied ~100k
+  * events/s (BASELINE.md) whose main loop is exactly this chain
   * (connector.go:129-171 → bulk.go:253-315).
   *
   * The doc-key space is 100k (`id` = a multiplicative hash of the event
@@ -62,12 +64,6 @@ object PgStreamLoad {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // per-stage walls of every processBatch to stderr — the first
-      // question about any slow batch (PgCaptureStream.staged)
-      .config("spark.graft.pgcapture.verbose",
-        sys.env.getOrElse("SPARK_GRAFT_PGCAPTURE_VERBOSE", "false"))
-      .config("spark.graft.sink.verbose",
-        sys.env.getOrElse("SPARK_GRAFT_SINK_VERBOSE", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -113,14 +109,15 @@ object PgStreamLoad {
         .repartition(1).write.mode("append").parquet(captureDir)
     }
 
-    val t0 = System.nanoTime()
-    val q = PgCaptureStream.run(spark, captureDir, s"$base/bulk",
-      s"$base/dlq", s"$base/ckpt",
+    val stages0 = Stages.snapshot()
+    val (_, run) = Stages.measure(PgCaptureStream.run(spark, captureDir,
+      s"$base/bulk", s"$base/dlq", s"$base/ckpt",
       mapping = Map("public.events_t" -> "events_idx"),
       concurrentRequest = cpus.toInt, trigger = Trigger.AvailableNow())
-    q.awaitTermination()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(s"""{"metric":"pg_capture_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong}}""")
+      .awaitTermination())
+    val sec = run.wallSec
+    val stages = Stages.toJson(Stages.since(stages0))
+    println(s"""{"metric":"pg_capture_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong},"stages":$stages}""")
     spark.stop()
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.streaming.Trigger
   * generate N synthetic events as parquet WAL segments, drive the FULL
   * streaming pipeline (typing → routing → handler → LWW dedup → NDJSON →
   * bulk files + dead-letter) with Trigger.AvailableNow, report one JSON
-  * line with events/s. Generation is excluded from the timing.
+  * line with events/s and the run's `sink.*` stage totals
+  * ([[graft.obs.Stages]]). Generation is excluded from the timing.
   *
   * Usage: runMain graft.StreamLoad [nEvents] [nSegments]
   * (SPARK_GRAFT_CPUS sets parallelism, default 4 — the reference's
@@ -26,8 +27,6 @@ object StreamLoad {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.graft.sink.verbose",
-        sys.env.getOrElse("SPARK_GRAFT_SINK_VERBOSE", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -53,17 +52,17 @@ object StreamLoad {
     spark.conf.set(stream.Pipeline.FanoutEventsPerFileHintConf,
       math.max(1, nEvents / nSegments).toString)
 
-    val t0 = System.nanoTime()
     // no flush limits: one bulk file per concurrent request per batch
     val cfg = conf.GraftConfig(conf.EsSinkConfig(ops.CdcOps.tableIndexMapping,
       batchSizeLimit = 0, batchByteSizeLimit = "0b",
       concurrentRequest = cpus.toInt))
-    val q = stream.Pipeline.run(spark, cfg,
+    val stages0 = obs.Stages.snapshot()
+    val (_, run) = obs.Stages.measure(stream.Pipeline.run(spark, cfg,
       stream.Connector.Io(eventsDir, s"$base/bulk", s"$base/dlq", s"$base/ckpt"),
-      trigger = Some(Trigger.AvailableNow()))
-    q.awaitTermination()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(s"""{"metric":"cdc_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong}}""")
+      trigger = Some(Trigger.AvailableNow())).awaitTermination())
+    val sec = run.wallSec
+    val stages = obs.Stages.toJson(obs.Stages.since(stages0))
+    println(s"""{"metric":"cdc_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong},"stages":$stages}""")
     spark.stop()
   }
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.obs.Stages
+
 /** The canonical training-data cleaning pipeline — the composition the
   * individual operators exist for, as one declarative flow:
   *
@@ -53,22 +55,6 @@ object CorpusOps {
     patchScratch.get += df
     df
   }
-
-  /** Opt-in stage timing shared by every eager step of the state build
-    * and both patch cores (`spark.graft.patch.verbose=true`): the first
-    * question about any slow build/patch is WHICH eager step paid, and
-    * a conf beats re-instrumenting. No-op (inlined call) when off.
-    */
-  private def stagedVerbose[T](spark: org.apache.spark.sql.SparkSession,
-      name: String)(f: => T): T =
-    if (!spark.conf.getOption("spark.graft.patch.verbose").contains("true")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[graft-patch] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   /** Free every scratch frame registered by incremental-clean patch
     * calls on THIS thread since the last release: cache entries
@@ -510,7 +496,7 @@ object CorpusOps {
     // registered as patch scratch too: the stream's FIRST batch builds
     // the state here, writes it to parquet, then releases the pins
     def trunc(df: DataFrame, name: String): DataFrame =
-      stagedVerbose(df.sparkSession, s"state_$name")(
+      Stages.time(s"patch.state_$name")(
         scratch(DedupOps.truncateIter(df, s"cleanstate-$runId", name)))
     val toks = TextOps.toksOf(docs)
     val (nTok, quality) = TextOps.qualityColsWith(col("text"), toks)
@@ -702,7 +688,7 @@ object CorpusOps {
     // by data dependency; their cost at toy scale is fixed per-job
     // overhead, amortized at real churn sizes.
     def trunc(df: DataFrame, name: String): DataFrame =
-      stagedVerbose(df.sparkSession, s"patch_$name")(
+      Stages.time(s"patch.patch_$name")(
         scratch(DedupOps.truncateIter(df, s"cleaninc-$runId", name)))
     // the diff materializes ONCE: it is a two-corpus-scan full-outer
     // join, and every churn-keyed step below reads it
@@ -1077,21 +1063,9 @@ object CorpusOps {
       st: CleanState, bandsV1: DataFrame, diff: DataFrame,
       maxChurnKeys: Int): (DataFrame, CleanState) = {
     import spark.implicits._
-    // opt-in stage timing (`spark.graft.patch.verbose=true`): each probe
-    // stage's wall to stderr — the first question about any slow patch
-    // is WHICH probe paid, and a conf beats re-instrumenting
-    val verbose = spark.conf.getOption("spark.graft.patch.verbose")
-      .contains("true")
-    def staged[T](name: String)(f: => T): T =
-      if (!verbose) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[graft-patch] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    val diffRows = staged("diff_collect")(
+    // each probe is a `patch.*` stage of graft.obs.Stages: the first
+    // question about any slow patch is WHICH probe paid
+    val diffRows = Stages.time("patch.diff_collect")(
       diff.select("doc_id", "status").as[(Long, String)].collect())
     if (diffRows.length > maxChurnKeys)
       return cleanCorpusIncremental(v2docs, st, diff)
@@ -1124,11 +1098,11 @@ object CorpusOps {
     // 2. affected hash groups: old rows of churned docs (ONE doc-id
     // probe of the gated face — hash AND old survivor bit together, so
     // no separate survivor probe later) ∪ the churn's new hashes
-    val oldRows = staged("old_rows")(
+    val oldRows = Stages.time("patch.old_rows")(
       keepIds(st.gated, "doc_id", diffIds)
         .select("doc_id", "content_hash", "is_rep")
         .as[(Long, String, Boolean)].collect())
-    val newHashes = staged("new_hashes")(
+    val newHashes = Stages.time("patch.new_hashes")(
       gatedChurn.select("content_hash").as[String].collect())
     val affHashes = (oldRows.map(_._2) ++ newHashes).distinct.toSeq
 
@@ -1157,7 +1131,7 @@ object CorpusOps {
 
     // 3. survivor-set delta, all driver-side set algebra over the ONE
     // churn-sized delta collect
-    val deltaRows = staged("delta_collect")(
+    val deltaRows = Stages.time("patch.delta_collect")(
       gatedDelta.select("doc_id", "is_rep", "was_rep")
         .as[(Long, Boolean, Boolean)].collect())
     val repIds = deltaRows.collect { case (id, true, _) => id }
@@ -1176,7 +1150,7 @@ object CorpusOps {
       DedupOps.historySignatureTable(
         keepIdsPushdown(v2docs, "doc_id", plusSet)),
       "inset_plus_sigs"))
-    val affPairs = staged("affected_bands")(DedupOps.bandRows(plusSigs)
+    val affPairs = Stages.time("patch.affected_bands")(DedupOps.bandRows(plusSigs)
       .select("band_idx", "band_sig")
       .unionByName(keepIds(bandsV1, "doc_id", minusSet)
         .select("band_idx", "band_sig"))
@@ -1215,20 +1189,20 @@ object CorpusOps {
     // fresh-pair anti-join and the signature pruning stay DISTRIBUTED —
     // the generic core's step-6 shape ([[cleanCorpusIncremental]]) with
     // the verdict scan still doc_a-pruned to candidates via semi-join.
-    val nCandPairs = staged("cand_count")(candsTouched.count())
+    val nCandPairs = Stages.time("patch.cand_count")(candsTouched.count())
     val (freshPairsDf, sigsForVerify) =
       if (nCandPairs <= patchMaxPairCollect(spark)) {
         // collected regime: literal probes bucket-prune the verdict and
         // signature faces; the kept probe keys the verdict face by its
         // bucket column doc_a, and the verify signature side prunes to
         // candidate doc ids before reading any array column
-        val candPairs = staged("cand_pairs")(
+        val candPairs = Stages.time("patch.cand_pairs")(
           candsTouched.select("doc_a", "doc_b").distinct()
             .as[(Long, Long)].collect())
         val candA = candPairs.map(_._1).distinct.toSeq
         val candDocIds = (candPairs.map(_._1) ++ candPairs.map(_._2))
           .distinct.toSeq
-        val keptAmongCand = staged("kept_probe")(
+        val keptAmongCand = Stages.time("patch.kept_probe")(
           dropIds(dropIds(keepIds(st.verdicts, "doc_a", candA),
             "doc_a", diffIds), "doc_b", diffIds)
             .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
@@ -1237,7 +1211,7 @@ object CorpusOps {
           dropIds(keepIds(st.sigs, "doc_id", candDocIds),
             "doc_id", minusSet)
             .unionByName(keepIds(plusSigs, "doc_id", candDocIds)))
-      } else staged("fresh_pairs_distributed") {
+      } else Stages.time("patch.fresh_pairs_distributed") {
         val candDistinct = candsTouched.select("doc_a", "doc_b").distinct()
         val keptVerdicts = dropIds(dropIds(
             st.verdicts.join(candDistinct.select("doc_a").distinct(),
@@ -1542,13 +1516,12 @@ object CorpusOps {
     * daily work: diff + patch + clean materialization). The timed
     * computations are byte-identical to the oracle keys'.
     */
-  private def secsOf[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
+  private def buildPatchWalls[S](build: => S)(patch: S => DataFrame): Map[String, Double] = {
+    val (st, b) = Stages.measure(build)
+    val (_, p) = Stages.measure(
+      patch(st).write.format("noop").mode("overwrite").save())
+    Map("v1_build" -> b.wallSec, "patch" -> p.wallSec)
   }
-  private def noop(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   def cleanIncrementalStages(docs: DataFrame): Map[String, Double] = {
     val v1 = docs.filter(col("doc_id") % 7 =!= 0)
@@ -1556,10 +1529,8 @@ object CorpusOps {
       .withColumn("text",
         when(col("doc_id") % 11 === 0, upper(col("text")))
           .otherwise(col("text")))
-    val (st, tBuild) = secsOf(cleanState(v1))
-    val (_, tPatch) = secsOf(
-      noop(cleanCorpusIncremental(v2, st, corpusDiff(v1, v2))._1))
-    Map("v1_build" -> tBuild, "patch" -> tPatch)
+    buildPatchWalls(cleanState(v1))(st =>
+      cleanCorpusIncremental(v2, st, corpusDiff(v1, v2))._1)
   }
 
   def cleanIncrementalSmallStages(docs: DataFrame): Map[String, Double] = {
@@ -1567,11 +1538,9 @@ object CorpusOps {
       .withColumn("text",
         when(col("doc_id") % 89 === 0, upper(col("text")))
           .otherwise(col("text")))
-    val (st, tBuild) = secsOf(cleanState(docs))
-    val (_, tPatch) = secsOf(
-      noop(cleanCorpusIncrementalInSet(docs.sparkSession, v2, st,
-        DedupOps.bandRows(st.sigs), corpusDiff(docs, v2))._1))
-    Map("v1_build" -> tBuild, "patch" -> tPatch)
+    buildPatchWalls(cleanState(docs))(st =>
+      cleanCorpusIncrementalInSet(docs.sparkSession, v2, st,
+        DedupOps.bandRows(st.sigs), corpusDiff(docs, v2))._1)
   }
 
   def cleanIncrementalDecontamStages(docs: DataFrame): Map[String, Double] = {
@@ -1581,10 +1550,8 @@ object CorpusOps {
       .withColumn("text",
         when(col("doc_id") % 11 === 0 && !isBench, upper(col("text")))
           .otherwise(col("text")))
-    val (st, tBuild) = secsOf(cleanStateDecontam(v1))
-    val (_, tPatch) = secsOf(
-      noop(cleanCorpusIncrementalDecontam(v2, st, corpusDiff(v1, v2))._1))
-    Map("v1_build" -> tBuild, "patch" -> tPatch)
+    buildPatchWalls(cleanStateDecontam(v1))(st =>
+      cleanCorpusIncrementalDecontam(v2, st, corpusDiff(v1, v2))._1)
   }
 
   def sqlCorpusDiff: String =

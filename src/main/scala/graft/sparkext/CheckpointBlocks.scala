@@ -108,16 +108,6 @@ object CheckpointBlocks {
       .foreach(_.unpersist(blocking = true))
   }
 
-  /** Process-wide GC wall-clock seconds (all collectors, cumulative) —
-    * per-query deltas let a bench artifact separate "the plan is
-    * expensive" from "the heap is thrashing" without a profiler.
-    */
-  def gcSeconds: Double = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum / 1e3
-  }
-
   /** Bytes of block-manager storage memory in use right now — sampled
     * after each timed query, this tracks whether cached state is
     * accumulating across a sweep (the round-10 eviction-churn suspicion

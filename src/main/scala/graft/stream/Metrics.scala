@@ -26,6 +26,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * counters stay keyed by index name — that IS the reference's label
   * (each connector writes its configured indexes).
   *
+  * `stage_ms_total{stage=…}` is the cumulative wall of each
+  * [[graft.obs.Stages]] stage: where a batch's time goes, same scrape.
+  * It lives for the whole process: [[reset]] does not clear it, and
+  * [[Connector.metrics]] ([[snapshotFor]]) leaves it out. One batch's
+  * walls are the difference of two scrapes around it.
+  *
   * Scrape transport: [[MetricsEndpoint]] serves [[snapshot]] in
   * Prometheus text format when a port is configured (≙ the reference's
   * `/metrics` listener, README.md:247-274).
@@ -67,7 +73,7 @@ object Metrics {
     Option(bulkLatency.get(queryName)).map(_.longValue).getOrElse(0L)
 
   /** ≙ scraping /metrics: counter/gauge name → value, gauges labeled by
-    * connector query name.
+    * connector query name, stage walls by stage name.
     */
   def snapshot(): Map[String, Long] = {
     val m = scala.collection.mutable.Map[String, Long]()
@@ -80,6 +86,9 @@ object Metrics {
     }
     bulkLatency.forEach { (q, v) =>
       m(s"bulk_request_process_latency_current_ms{query=$q}") = v.longValue
+    }
+    graft.obs.Stages.snapshot().foreach { case (stage, t) =>
+      m(s"stage_ms_total{stage=$stage}") = t.wallMs.toLong
     }
     m.toMap
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.obs.Stages
 import graft.ops.PgOutputOps
 
 /** Streaming face of the pgoutput capture pipeline: a directory of
@@ -33,6 +34,8 @@ import graft.ops.PgOutputOps
   * file source's checkpoint in this replay shape (the R2 contract), and
   * the envelope's `wal_start` rides every action's lineage for a
   * transport that acks by LSN.
+  *
+  * Each batch step is timed as a `pgcapture.*` [[Stages]] stage.
   */
 object PgCaptureStream {
 
@@ -57,21 +60,6 @@ object PgCaptureStream {
           mapping, concurrentRequest)
       }
       .start()
-
-  /** Opt-in per-stage wall prints to stderr (`spark.graft.pgcapture
-    * .verbose=true`) — the first question about any slow batch, the
-    * `spark.graft.patch.verbose` precedent.
-    */
-  private def staged[T](spark: SparkSession, name: String)(f: => T): T =
-    if (!spark.conf.getOption("spark.graft.pgcapture.verbose")
-        .contains("true")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[pgcapture] $name%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, bulkOutDir: String, deadLetterDir: String,
@@ -118,20 +106,9 @@ object PgCaptureStream {
       // corrupt case — ~0.5-0.8 s per 2M-frame batch of pure overhead
       // (round 14, stage-measured). Same cache-materialization effect
       // as the old wide.count(): the agg scans every cached partition.
-      val nBad = staged(spark, "cache_build")(
+      val nBad = Stages.time("pgcapture.cache_build")(
         flat.agg(count_if(col("msg_type") === "malformed"))
           .collect()(0).getLong(0))
-      // verbose-only diagnostic: a decode pass from the pinned raw bytes
-      // should run in ~seconds — if this reads like the serial segment
-      // scan, the cache is NOT being hit and every consumer below pays
-      // the serial read again
-      if (spark.conf.getOption("spark.graft.pgcapture.verbose")
-          .contains("true")) {
-        staged(spark, "cache_probe")(
-          flat.filter(col("msg_type") === "relation").count())
-        System.err.println("[pgcapture] raw cache partitions: " +
-          wide.rdd.getNumPartitions)
-      }
       // per-batch partition dir + overwrite: a replayed micro-batch
       // (Structured Streaming is at-least-once into external sinks)
       // clobbers its own prior output instead of appending duplicates —
@@ -144,7 +121,7 @@ object PgCaptureStream {
       // pass): replay safety is unchanged — a replayed batch decodes the
       // same frames to the same count, so the write happens exactly when
       // it did before
-      if (nBad > 0) staged(spark, "dead_letter")(
+      if (nBad > 0) Stages.time("pgcapture.dead_letter")(
         flat.filter(col("msg_type") === "malformed")
           .select(col("seq"), col("msg_prefix").as("error"))
           .write.mode("overwrite")
@@ -162,7 +139,7 @@ object PgCaptureStream {
         PgOutputOps.relationalizeFlat(seeded), mapping)
         // seed rows are prior-batch state, not this batch's events
         .filter(col("event_id") >= 0)
-      staged(spark, "sink_writeBatch")(
+      Stages.time("pgcapture.sink_writeBatch")(
         EsBulkSink.writeBatch(acts, batchId, bulkOutDir,
           ResponseHandler.deadLetter(deadLetterDir), concurrentRequest))
       // registry snapshot for the NEXT batch: latest relation per oid +
@@ -173,7 +150,7 @@ object PgCaptureStream {
         .filter(col("_rn") === 1).drop("_rn")
       val lastBegin = seeded.filter(col("msg_type") === "begin")
         .orderBy(col("seq").desc).limit(1)
-      staged(spark, "registry_snapshot")(
+      Stages.time("pgcapture.registry_snapshot")(
         latestRels.unionByName(lastBegin).drop("seq")
           .write.mode("overwrite")
           .parquet(VersionedState.versionDir(stateRoot, batchId)))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.conf.GraftConfig
+import graft.obs.Stages
 import graft.ops.CdcOps
 
 /** End-to-end streaming wiring — the Spark-native rendition of the
@@ -615,7 +616,8 @@ object EsBulkSink {
     * response demux → unpersist. Only `ship` differs between the file and
     * HTTP sinks; it gets the payload `(event_id, value)` and returns the
     * per-item failures by event id (a file write has none — it is
-    * all-or-nothing).
+    * all-or-nothing). Each step is timed as a `sink.*` [[Stages]] stage:
+    * a slow batch names the step that owns its wall on /metrics.
     *
     * Two-level cache, both measured on the 1M-event load test: the raw
     * batch feeds the bad-split probe AND the dedup window (recomputing
@@ -630,25 +632,6 @@ object EsBulkSink {
   private[stream] def flush(batch: DataFrame, batchId: Long,
       responseHandler: ResponseHandler, esMajor: Int, typeName: String)(
       ship: DataFrame => Map[Long, String]): Unit = {
-    // opt-in per-stage walls (`spark.graft.sink.verbose=true`) — the
-    // pgcapture.verbose precedent, one level deeper: the first question
-    // about a slow sink batch is which of cache-build / dedup / ship
-    // owns the wall
-    def staged[T](name: String)(f: => T): T =
-      if (!batch.sparkSession.conf.getOption("spark.graft.sink.verbose")
-          .contains("true")) f
-      else {
-        import scala.jdk.CollectionConverters._
-        def gcMs = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-        val g0 = gcMs
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(
-          f"[sink] $name%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-            f"(gc ${(gcMs - g0) / 1000.0}%.1f s)")
-        r
-      }
     val cached = batch.cache()
     var deduped: DataFrame = null
     try {
@@ -661,20 +644,20 @@ object EsBulkSink {
       // cost (25-28 s of a ~37 s sink wall; payload write 8-9 s) — the
       // reason batch sizing, not sink tuning, is the throughput knob
       // (README "size the admission knobs").
-      staged("cache_build")(cached.count())
-      val (d, payload) = staged("prologue")(flushPrologue(cached, batchId,
-        responseHandler, esMajor, typeName))
+      Stages.time("sink.cache_build")(cached.count())
+      val (d, payload) = Stages.time("sink.prologue")(
+        flushPrologue(cached, batchId, responseHandler, esMajor, typeName))
       deduped = d
-      val errors = staged("ship")(ship(payload))
+      val errors = Stages.time("sink.ship")(ship(payload))
       // R3 per-index action counters (metric.go:56-96): one tiny agg over
       // the cached batch after the flush succeeds. At-least-once like the
       // reference (its counters bump in handleResponse BEFORE the LSN ack,
       // bulk.go:392-411 vs 271-276): a crash between flush and checkpoint
       // commit replays the batch and re-counts it.
-      staged("metrics_agg")(deduped.groupBy("index_name", "action_type").count()
-        .collect()
-        .foreach(r => Metrics.record(r.getString(0), r.getString(1), r.getLong(2))))
-      staged("demux")(
+      Stages.time("sink.metrics_agg")(
+        deduped.groupBy("index_name", "action_type").count().collect()
+          .foreach(r => Metrics.record(r.getString(0), r.getString(1), r.getLong(2))))
+      Stages.time("sink.demux")(
         handleResponseByEventId(deduped, errors, responseHandler, batchId))
     } finally {
       if (deduped != null) deduped.unpersist()

@@ -53,7 +53,7 @@ class MeasurementBarrierSpec extends SparkSuite {
   }
 
   test("gc/storage/drop adjudication channels report sane values") {
-    assert(CheckpointBlocks.gcSeconds >= 0.0)
+    assert(graft.obs.Stages.sample().gcMillis >= 0L)
     val drops = CheckpointBlocks.installDropCounter(spark)
     val df = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id").cache()

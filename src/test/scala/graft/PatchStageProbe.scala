@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import ProbeStages.stage
+
 /** Dev-loop probe: per-stage walls of the three incremental-clean oracle
-  * keys at a chosen SF (default sf0.1), with the patch's verbose stage
-  * timing on — the first question about any slow patch is WHICH probe
-  * paid. Usage: Test/runMain graft.PatchStageProbe [small|inc|decontam ...]
+  * keys at a chosen SF (default sf0.1), each followed by the `patch.*`
+  * stages it ran (from [[graft.obs.Stages]]) — the first question about
+  * any slow patch is WHICH probe paid.
+  * Usage: Test/runMain graft.PatchStageProbe [small|inc|decontam ...]
   */
 object PatchStageProbe {
   def main(args: Array[String]): Unit = {
@@ -16,15 +19,7 @@ object PatchStageProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.graft.patch.verbose", "true")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    def secs(t0: Long): Double = (System.nanoTime - t0) / 1e9
-    def stage[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime
-      val r = f
-      println(f"STAGE $name%-28s ${secs(t0)}%.2f s")
-      r
-    }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val which = if (args.nonEmpty) args.toSet else Set("small", "inc", "decontam")

@@ -449,7 +449,15 @@ class PgOutputSpec extends SparkSuite {
       xlog(203, 990, T0, commit(990L, 991L, T0 + 60))))
       .withColumn("seq", col("seq") + 100)
       .coalesce(1).write.mode("append").parquet(cap)
+    val stagesBefore = graft.obs.Stages.snapshot()
     awaitDone(PgCaptureStream.run(spark, cap, bulk, dlq, ckpt, mapping))
+    // two batches, one malformed frame: every step once per batch, the
+    // dead-letter write only for the batch that has one
+    val pgStages = graft.obs.Stages.since(stagesBefore)
+      .filter(_._1.startsWith("pgcapture.")).map { case (n, t) => n -> t.calls }
+    assert(pgStages == Map("pgcapture.cache_build" -> 2L,
+      "pgcapture.dead_letter" -> 1L, "pgcapture.sink_writeBatch" -> 2L,
+      "pgcapture.registry_snapshot" -> 2L), pgStages)
 
     def ndjson(): Seq[String] = {
       import scala.jdk.CollectionConverters._

@@ -490,6 +490,32 @@ class PlanSpec extends SparkSuite {
     assert(!pd.exists(_.isInstanceOf[CartesianProductExec]))
   }
 
+  test("knn_graph times a build: the key never resolves to the persisted knn artifact") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def cached(df: DataFrame): Seq[InMemoryRelation] =
+      df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+    import org.apache.spark.storage.StorageLevel
+    val artifact = SparkEntry.knnGraphT(spark, sf)
+    // an earlier measurement barrier in this JVM may have dropped it
+    if (artifact.storageLevel == StorageLevel.NONE)
+      artifact.persist(StorageLevel.MEMORY_AND_DISK)
+    artifact.count()
+    // a fresh plan over the artifact: its own queryExecution may predate
+    // the current cache entry
+    val artifactBuilders = cached(artifact.select("*")).map(_.cacheBuilder)
+    assert(artifactBuilders.size == 1, "the knn artifact must be cached")
+    // the key's own cluster-assignment cache may appear; an edge table
+    // (the artifact or any other copy of the graph) must not
+    val key = cached(q("knn_graph"))
+    assert(!key.exists(r => artifactBuilders.exists(_ eq r.cacheBuilder)),
+      "knn_graph resolved to the persisted artifact")
+    assert(!key.exists(_.output.exists(_.name == "cos_sim")),
+      "knn_graph read a cached edge table")
+    assert(cached(q("contrastive_triplets"))
+      .exists(r => artifactBuilders.exists(_ eq r.cacheBuilder)),
+      "contrastive_triplets must read the knn artifact")
+  }
+
   test("round-8 (cont.): KN fluency / DSIR / source-overlap shapes") {
     // quality_kn_fluency: all four statistics tables (c2, prefix, backward
     // continuation, type total) derive from ONE materialized bigram agg —

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import ProbeStages.stage
+
 /** Dev-loop probe: stage walls + process-CPU of the corpus_to_sequences
   * family (verdict r14 item 3 — "audit the INTERNAL composition for
   * re-evaluated stages"). Usage: Test/runMain graft.SeqStageProbe
@@ -16,17 +18,6 @@ object SeqStageProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def cpuNanos: Long = osBean match {
-      case s: com.sun.management.OperatingSystemMXBean => s.getProcessCpuTime
-      case _ => -1L
-    }
-    def stage[T](name: String)(f: => T): T = {
-      val c0 = cpuNanos; val t0 = System.nanoTime
-      val r = f
-      println(f"STAGE $name%-32s ${(System.nanoTime - t0) / 1e9}%.2f s wall  ${(cpuNanos - c0) / 1e9}%.2f s cpu")
-      r
-    }
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

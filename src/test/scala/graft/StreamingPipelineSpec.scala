@@ -331,6 +331,33 @@ class StreamingPipelineSpec extends SparkSuite {
     assert(ok == Set(1L, 2L, 3L, 4L) && err.isEmpty)
   }
 
+  test("stage timer: each flush adds the five sink.* stages, within addBatch, scraped on /metrics") {
+    import graft.obs.Stages
+    import graft.stream.{Metrics, MetricsEndpoint}
+    val eventsDir = tmp("graft-stages-events")
+    stage(eventsDir, 1L to 3L)
+    stage(eventsDir, 4L to 6L)
+    val before = Stages.snapshot()
+    val q = runPipeline(eventsDir, tmp("graft-stages-bulk"),
+      tmp("graft-stages-dlq"), tmp("graft-stages-ckpt"))
+    awaitDone(q)
+    val gained = Stages.since(before).filter(_._1.startsWith("sink."))
+    val addBatchMs = q.recentProgress.toSeq
+      .flatMap(p => Option(p.durationMs.get("addBatch")).map(_.longValue))
+    assert(addBatchMs.size == 2, "one batch per staged segment")
+    assert(gained.keySet == Set("sink.cache_build", "sink.prologue",
+      "sink.ship", "sink.metrics_agg", "sink.demux"), gained)
+    assert(gained.values.forall(_.calls == addBatchMs.size), gained)
+    // the flush runs inside addBatch; addBatch is whole ms off a
+    // millisecond clock, so each batch may read up to 1 ms short
+    val stageMs = gained.values.map(_.wallMs).sum
+    assert(stageMs <= addBatchMs.sum + addBatchMs.size,
+      s"stage walls $stageMs ms exceed addBatch ${addBatchMs.sum} ms")
+    val text = MetricsEndpoint.render(Metrics.snapshot())
+    assert(text.contains("# TYPE graft_stage_ms_total counter"), text)
+    assert(text.contains("""graft_stage_ms_total{stage="sink.ship"}"""), text)
+  }
+
   test("R1 dead-letter: key-less actions split to the error sink, not the bulk payload") {
     val eventsDir = tmp("graft-events3")
     val bulkDir = tmp("graft-bulk3")

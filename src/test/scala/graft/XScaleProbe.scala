@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import ProbeStages.stage
+
 /** Dev-loop probe for the x-scale incremental-clean cells (SCALING.md
   * method, round 15: the x512 listing terms). Fixed-absolute churn =
   * the r13/r14 key set: edit doc_id % 101 == 0, delete % 103 == 0, both
@@ -16,9 +18,11 @@ import org.apache.spark.sql.functions._
   * to `<outDir>/documents.parquet` (the documents-only ScaleData
   * layout; pass `<outDir>` as the `<scaledDir>` of the other modes).
   * Fresh JVM per cell (the published method). SPARK_DRIVER_MEM=16g for
-  * x512. `patch` prints the per-stage walls (spark.graft.patch.verbose),
-  * total compute wall, the output row count and an order-insensitive
-  * checksum (layout-change identity evidence), and per-face file counts.
+  * x512. `patch` prints the total compute wall (`STAGE PATCH_COMPUTE`,
+  * with the `patch.*` graft.obs.Stages counters it moved indented below,
+  * through [[ProbeStages]]), the output row count and
+  * an order-insensitive checksum (layout-change identity evidence), and
+  * per-face file counts.
   * Wrong arguments print this usage and exit with status 2.
   */
 object XScaleProbe {
@@ -38,14 +42,12 @@ object XScaleProbe {
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.graft.patch.verbose", "true")
       .config("spark.sql.warehouse.dir", s"$stateDir/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set(graft.ops.DedupOps.CheckpointDirConf, s"$stateDir/ckpt")
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    def secs(t0: Long): Double = (System.nanoTime - t0) / 1e9
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val isBench = col("source") === graft.ops.PretrainOps.BenchmarkSource
@@ -84,23 +86,23 @@ object XScaleProbe {
           .parquet(s"$out/documents.parquet")
         println(s"FIXTURE x$copies -> $out")
       case "build" =>
-        val t0 = System.nanoTime
-        val st = graft.ops.CorpusOps.cleanStateDecontam(v1)
-        graft.ops.CorpusOps.writeDecontamState(st, "xs", stateDir)
-        println(f"BUILD+WRITE ${secs(t0)}%.1f s")
+        stage("BUILD+WRITE") {
+          val st = graft.ops.CorpusOps.cleanStateDecontam(v1)
+          graft.ops.CorpusOps.writeDecontamState(st, "xs", stateDir)
+        }
         faceFiles()
       case "patch" =>
         graft.ops.CorpusOps.registerCleanState(spark, "xs", stateDir)
         faceFiles()
-        val tD = System.nanoTime
         val diff = graft.ops.CorpusOps.corpusDiff(v1, v2).cache()
-        val nDiff = diff.count()
-        println(f"DIFF $nDiff keys ${secs(tD)}%.1f s")
-        val t0 = System.nanoTime
-        val (out, _) = graft.ops.CorpusOps.cleanCorpusIncrementalDecontamPruned(
-          spark, v2, "xs", stateDir, diff)
-        noop(out)
-        println(f"PATCH_COMPUTE ${secs(t0)}%.1f s")
+        val nDiff = stage("DIFF")(diff.count())
+        println(s"DIFF $nDiff keys")
+        val out = stage("PATCH_COMPUTE") {
+          val (o, _) = graft.ops.CorpusOps.cleanCorpusIncrementalDecontamPruned(
+            spark, v2, "xs", stateDir, diff)
+          noop(o)
+          o
+        }
         val chk = out.agg(count(lit(1)).as("n"),
           bit_xor(xxhash64(col("doc_id"), col("n_tokens"), col("quality"),
             col("detected_lang"))).as("h")).collect()(0)
