@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftext.CheckpointBlocks
+import org.apache.spark.sql.graftext.{CheckpointBlocks, Scratch}
 import graft.obs.Stages
 import java.lang.management.ManagementFactory
 
@@ -154,14 +154,15 @@ object Bench {
       // not the timed window
       CheckpointBlocks.flushListeners(spark)
       val d0 = drops.count
-      val (ok, d) = Stages.measure(
+      // the key's scratch is released after the timed window
+      val (ok, d) = Scratch.scope(Stages.measure(
         try { exec(fn(spark, sfDir)); true }
         catch {
           case e: Throwable =>
             System.err.println(
               s"[bench] FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
             false
-        })
+        }))
       CheckpointBlocks.flushListeners(spark)
       val dropped = drops.count - d0
       val storageMb = CheckpointBlocks.storageBytesUsed(spark) / 1048576.0
@@ -276,11 +277,8 @@ object Bench {
       SparkEntry.stagedWalls.flatMap { case (name, fn) =>
         def once(): Option[Map[String, Double]] = {
           CheckpointBlocks.resetForMeasurement(spark, keepSet)
-          try {
-            val m = fn(spark, sfDir)
-            graft.ops.CorpusOps.releasePatchScratch()
-            Some(m)
-          } catch {
+          try Some(Scratch.scope(fn(spark, sfDir)))
+          catch {
             case e: Throwable =>
               System.err.println(s"[bench] staged $name failed: ${e.getMessage}")
               None

@@ -21,8 +21,9 @@ import graft.stream.PgCaptureStream
   * decode → relationalize → route → LWW dedup → NDJSON → concurrent bulk
   * files + registry snapshot + checkpoint ack with Trigger.AvailableNow.
   * Generation is excluded from the timing; one JSON line reports
-  * events/s and the run's `pgcapture.*`/`sink.*` stage totals
-  * ([[graft.obs.Stages]]), comparable to the reference's implied ~100k
+  * events/s, the run's `pgcapture.*`/`sink.*` stage totals
+  * ([[graft.obs.Stages]]) and the cache footprint at start and end,
+  * comparable to the reference's implied ~100k
   * events/s (BASELINE.md) whose main loop is exactly this chain
   * (connector.go:129-171 → bulk.go:253-315).
   *
@@ -109,6 +110,7 @@ object PgStreamLoad {
         .repartition(1).write.mode("append").parquet(captureDir)
     }
 
+    val flat0 = StreamLoad.flatness(spark)
     val stages0 = Stages.snapshot()
     val (_, run) = Stages.measure(PgCaptureStream.run(spark, captureDir,
       s"$base/bulk", s"$base/dlq", s"$base/ckpt",
@@ -116,8 +118,9 @@ object PgStreamLoad {
       concurrentRequest = cpus.toInt, trigger = Trigger.AvailableNow())
       .awaitTermination())
     val sec = run.wallSec
+    val flat1 = StreamLoad.flatness(spark)
     val stages = Stages.toJson(Stages.since(stages0))
-    println(s"""{"metric":"pg_capture_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong},"stages":$stages}""")
+    println(s"""{"metric":"pg_capture_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong},"stages":$stages,"cache_entries_start":${flat0._1},"cache_entries_end":${flat1._1},"persistent_rdds_start":${flat0._2},"persistent_rdds_end":${flat1._2}}""")
     spark.stop()
   }
 }

@@ -10,14 +10,21 @@ import org.apache.spark.sql.streaming.Trigger
   * generate N synthetic events as parquet WAL segments, drive the FULL
   * streaming pipeline (typing → routing → handler → LWW dedup → NDJSON →
   * bulk files + dead-letter) with Trigger.AvailableNow, report one JSON
-  * line with events/s and the run's `sink.*` stage totals
-  * ([[graft.obs.Stages]]). Generation is excluded from the timing.
+  * line with events/s, the run's `sink.*` stage totals
+  * ([[graft.obs.Stages]]) and the cache footprint at start and end.
+  * Generation is excluded from the timing.
   *
   * Usage: runMain graft.StreamLoad [nEvents] [nSegments]
   * (SPARK_GRAFT_CPUS sets parallelism, default 4 — the reference's
   * implied regime is ~100k events/s on a comparable box.)
   */
 object StreamLoad {
+
+  /** (cache entries, persistent RDDs): a flat stream ends where it began. */
+  private[graft] def flatness(spark: SparkSession): (Int, Int) =
+    (org.apache.spark.sql.graftext.CheckpointBlocks.cacheEntryCount(spark),
+      spark.sparkContext.getPersistentRDDs.size)
+
   def main(args: Array[String]): Unit = {
     val nEvents = args.headOption.map(_.toInt).getOrElse(1000000)
     val nSegments = args.drop(1).headOption.map(_.toInt).getOrElse(8)
@@ -56,13 +63,15 @@ object StreamLoad {
     val cfg = conf.GraftConfig(conf.EsSinkConfig(ops.CdcOps.tableIndexMapping,
       batchSizeLimit = 0, batchByteSizeLimit = "0b",
       concurrentRequest = cpus.toInt))
+    val flat0 = flatness(spark)
     val stages0 = obs.Stages.snapshot()
     val (_, run) = obs.Stages.measure(stream.Pipeline.run(spark, cfg,
       stream.Connector.Io(eventsDir, s"$base/bulk", s"$base/dlq", s"$base/ckpt"),
       trigger = Some(Trigger.AvailableNow())).awaitTermination())
     val sec = run.wallSec
+    val flat1 = flatness(spark)
     val stages = obs.Stages.toJson(obs.Stages.since(stages0))
-    println(s"""{"metric":"cdc_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong},"stages":$stages}""")
+    println(s"""{"metric":"cdc_throughput","events":$nEvents,"cpus":$cpus,"sec":$sec,"events_per_sec":${(nEvents / sec).toLong},"stages":$stages,"cache_entries_start":${flat0._1},"cache_entries_end":${flat1._1},"persistent_rdds_start":${flat0._2},"persistent_rdds_end":${flat1._2}}""")
     spark.stop()
   }
 }

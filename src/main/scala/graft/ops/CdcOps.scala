@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftext.Scratch
 
 /** The reference's dataflow operators (SURVEY.md §2 T1-T8, B1-B5, X1, X2,
   * S2), re-expressed as declarative DataFrame transforms so Catalyst handles
@@ -387,16 +388,11 @@ object CdcOps {
     // pass + cached re-reads after (guide §2.3 project-early + §5 cache
     // what is reused AND expensive; at 100 TB the narrow projection is
     // ~16 B/row against a re-read of the full typed/routed batch)
-    // plain .cache(), not DedupOps.materialize (review r14): these CDC
-    // ops run per flush batch, and materialize under
-    // spark.graft.dedup.checkpointDir writes parquet EAGERLY — breaking
-    // the lazy-build contract PlanSpec pins — while the checkpoint-dir
-    // round trip buys nothing for a ~16 B/row frame. cache() is lazy
-    // under every conf; a long-lived per-batch caller should unpersist
-    // the returned frame's lineage (or run a scratch barrier) per batch,
-    // since CacheManager entries otherwise accumulate.
+    // a lazy cache (the caller's Scratch.scope releases it), not
+    // DedupOps.materialize, whose checkpointDir mode writes parquet
+    // EAGERLY — breaking the lazy build PlanSpec pins
     val slim =
-      actions.select(col("index_name"), col("event_id")).cache()
+      Scratch.cache(actions.select(col("index_name"), col("event_id")))
     val (ord, _) = globalOrdinals(slim, Seq("index_name"), "event_id")
     ord
       .withColumn("chunk_id", floor(col("_ord") / chunkSize))
@@ -420,11 +416,10 @@ object CdcOps {
     // narrow-projection materialize, as in [[chunkSplit]] — the byte
     // accounting needs only octet_length(source), computed BEFORE the
     // cache so the payload itself is never stored or re-read
-    // plain lazy .cache() — see [[chunkSplit]]'s slim-cache note
-    val slim =
+    // lazy scoped cache — see [[chunkSplit]]'s slim-cache note
+    val slim = Scratch.cache(
       actions.select(col("event_id"),
-        coalesce(octet_length(col("source")), lit(0)).as("_src_bytes"))
-        .cache()
+        coalesce(octet_length(col("source")), lit(0)).as("_src_bytes")))
     val (ord, _) = globalOrdinals(slim, Nil, "event_id")
     ord
       .withColumn("batch_id", floor(col("_ord") / batchSizeLimit))
@@ -522,7 +517,7 @@ object CdcOps {
     */
   def concurrentPartition(actions: DataFrame, n: Int): DataFrame = {
     // narrow-projection lazy cache, as in [[chunkSplit]]
-    val slim = actions.select(col("event_id")).cache()
+    val slim = Scratch.cache(actions.select(col("event_id")))
     val (ord, totals) = globalOrdinals(slim, Nil, "event_id")
     // Slice arithmetic from the LAZY 1-row totals frame (broadcast cross
     // join) — same chunk sizes as slices.go:18-39, zero eager jobs

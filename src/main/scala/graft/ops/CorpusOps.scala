@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 
 import graft.obs.Stages
 
@@ -29,52 +30,6 @@ object CorpusOps {
 
   val QualityThreshold = 0.5
   val AcceptedLangs: Seq[String] = Seq("en")
-
-  /** Scratch intermediates cached/checkpointed by the incremental-clean
-    * patches on this thread. The patch's cached probe frames back the
-    * returned LAZY faces, so the patch itself cannot unpersist them —
-    * but a long-running caller ([[graft.stream.IncCleanStream]] invokes
-    * a patch per micro-batch) must, or the CacheManager accumulates one
-    * generation of scratch blocks per batch without bound (and
-    * MEMORY_AND_DISK disk blocks are never LRU-evicted, so storage
-    * grows until the job degrades). Callers call
-    * [[releasePatchScratch]] once every returned face is materialized
-    * (e.g. written to parquet); frames routed to parquet by
-    * [[DedupOps.CheckpointDirConf]] release trivially (no cache entry,
-    * no pinned RDD — the write was the materialization). Thread-local
-    * because a patch builds and releases on one driver thread (the
-    * foreachBatch thread), while concurrent streams patch in parallel.
-    */
-  private val patchScratch =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]] {
-      override def initialValue():
-          scala.collection.mutable.ArrayBuffer[DataFrame] =
-        scala.collection.mutable.ArrayBuffer.empty
-    }
-  private def scratch(df: DataFrame): DataFrame = {
-    patchScratch.get += df
-    df
-  }
-
-  /** Free every scratch frame registered by incremental-clean patch
-    * calls on THIS thread since the last release: cache entries
-    * unpersist, localCheckpoint pins free. Only call once every face a
-    * patch returned has been materialized — the scratch backs them.
-    */
-  def releasePatchScratch(): Unit = {
-    val buf = patchScratch.get
-    buf.foreach { df =>
-      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        df.unpersist(blocking = false)
-      org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(df)
-    }
-    buf.clear()
-  }
-
-  /** Count of registered-but-unreleased scratch frames on this thread —
-    * spec observability for the release discipline.
-    */
-  private[graft] def pendingPatchScratch: Int = patchScratch.get.size
 
   /** The gated set + the two dedup-loser id lists the clean pipeline
     * derives from it — shared by [[cleanCorpus]] (which drops) and
@@ -493,16 +448,17 @@ object CorpusOps {
     // [[DedupOps.CheckpointDirConf]] set this is the durable parquet
     // write a production daily rebuild does anyway.
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    // registered as patch scratch too: the stream's FIRST batch builds
-    // the state here, writes it to parquet, then releases the pins
+    // handed to the caller's Scratch.scope too: the stream's FIRST
+    // batch builds the state here, writes it to parquet, then releases
+    // the pins
     def trunc(df: DataFrame, name: String): DataFrame =
       Stages.time(s"patch.state_$name")(
-        scratch(DedupOps.truncateIter(df, s"cleanstate-$runId", name)))
+        Scratch.keep(DedupOps.truncateIter(df, s"cleanstate-$runId", name)))
     val toks = TextOps.toksOf(docs)
     val (nTok, quality) = TextOps.qualityColsWith(col("text"), toks)
     // materialized: feeds both the rep election and the join-back —
     // uncached, the gate+hash scan over the corpus would run twice
-    val gatedRaw = scratch(DedupOps.materialize(docs
+    val gatedRaw = Scratch.keep(DedupOps.materialize(docs
       .withColumn("n_tokens", nTok)
       .withColumn("quality", quality)
       .withColumn("detected_lang", TextOps.detectLangWith(toks))
@@ -677,9 +633,9 @@ object CorpusOps {
     // a long-lived chain periodically compacts the base — production
     // rewrites the bucketed parquet, the same LSM compaction).
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    // every churn-sized checkpoint/cache below registers as patch
-    // scratch (see [[releasePatchScratch]]): the returned faces read
-    // them lazily, and a per-batch caller frees them after its write.
+    // every churn-sized checkpoint/cache below goes to the caller's
+    // Scratch.scope: the returned faces read them lazily, and a
+    // per-batch caller frees them after its write.
     // Eager checkpoints are DELIBERATE (round 14, measured): lazy
     // localCheckpoint under AQE still executes every upstream shuffle
     // stage at call time (getFinalPhysicalPlan), so laziness saves
@@ -689,17 +645,17 @@ object CorpusOps {
     // overhead, amortized at real churn sizes.
     def trunc(df: DataFrame, name: String): DataFrame =
       Stages.time(s"patch.patch_$name")(
-        scratch(DedupOps.truncateIter(df, s"cleaninc-$runId", name)))
+        Scratch.keep(DedupOps.truncateIter(df, s"cleaninc-$runId", name)))
     // the diff materializes ONCE: it is a two-corpus-scan full-outer
     // join, and every churn-keyed step below reads it
-    val diffM = scratch(materialize(diff, "inc_diff"))
+    val diffM = Scratch.keep(materialize(diff, "inc_diff"))
     val diffIds = diffM.select("doc_id")
     val churnNewIds = diffM
       .filter(col("status").isin("added", "changed")).select("doc_id")
     // 1. re-gate the churn (per-doc pure — the only text the gates read)
     val toks = TextOps.toksOf(v2docs)
     val (nTok, quality) = TextOps.qualityColsWith(col("text"), toks)
-    val gatedChurn = scratch(materialize(v2docs.join(churnNewIds, "doc_id")
+    val gatedChurn = Scratch.keep(materialize(v2docs.join(churnNewIds, "doc_id")
       .withColumn("n_tokens", nTok)
       .withColumn("quality", quality)
       .withColumn("detected_lang", TextOps.detectLangWith(toks))
@@ -761,7 +717,7 @@ object CorpusOps {
     // cached, not checkpointed: three consumers (touched-band build +
     // both verify sides) would each re-scan the base otherwise; cache
     // materializes once and keeps the delta-state lineage intact
-    val sigsV2 = scratch(materialize(
+    val sigsV2 = Scratch.keep(materialize(
       state.sigs.join(minus, Seq("doc_id"), "left_anti")
         .unionByName(plusSigs),
       "inc_sigs_v2"))
@@ -1075,14 +1031,13 @@ object CorpusOps {
     }.toSeq
 
     // 1. re-gate the churn (per-doc pure) — churn-sized scan of v2.
-    // All four probe materializations below register as patch scratch
-    // (see [[releasePatchScratch]]) and honor [[DedupOps
-    // .CheckpointDirConf]] — a per-micro-batch caller would otherwise
-    // accumulate one generation of cache blocks per batch forever
-    // (review round-11).
+    // All four probe materializations below go to the caller's
+    // Scratch.scope and honor [[DedupOps.CheckpointDirConf]] — a
+    // per-micro-batch caller would otherwise accumulate one generation
+    // of cache blocks per batch forever.
     val toks = TextOps.toksOf(v2docs)
     val (nTok, quality) = TextOps.qualityColsWith(col("text"), toks)
-    val gatedChurn = scratch(DedupOps.materialize(
+    val gatedChurn = Scratch.keep(DedupOps.materialize(
       keepIdsPushdown(v2docs, "doc_id", churnNewIds)
         .withColumn("n_tokens", nTok)
         .withColumn("quality", quality)
@@ -1117,7 +1072,7 @@ object CorpusOps {
     // no extra pass: an affected-group member's OLD survivor bit is
     // st.gated's is_rep (false for churn rows — their old bit, if any,
     // came back on the oldRows probe)
-    val gatedDelta = scratch(DedupOps.materialize(
+    val gatedDelta = Scratch.keep(DedupOps.materialize(
       touched
         .withColumn("was_rep",
           when(col("is_rep").isNull, lit(false)).otherwise(col("is_rep")))
@@ -1146,7 +1101,7 @@ object CorpusOps {
 
     // 4. signature delta + affected band buckets (plus docs' fresh band
     // rows; minus docs' rows off the persisted bands face)
-    val plusSigs = scratch(DedupOps.materialize(
+    val plusSigs = Scratch.keep(DedupOps.materialize(
       DedupOps.historySignatureTable(
         keepIdsPushdown(v2docs, "doc_id", plusSet)),
       "inset_plus_sigs"))
@@ -1168,7 +1123,7 @@ object CorpusOps {
       DedupOps.capBuckets(touchedBands, DedupOps.BandBucketCap)
     val ca = cappedTouched.alias("ca")
     val cb = cappedTouched.alias("cb")
-    val candsTouched = scratch(DedupOps.materialize(
+    val candsTouched = Scratch.keep(DedupOps.materialize(
       ca.join(cb,
           col("ca.band_idx") === col("cb.band_idx") &&
             col("ca.band_sig") === col("cb.band_sig") &&
@@ -1267,9 +1222,8 @@ object CorpusOps {
     // eager checkpoint rounds — overlap them on a second driver thread
     // (guide §2.6; the [[SimilarityOps.communityRepresentativesOn]]
     // discipline). cleanState stays on the CALLER thread deliberately:
-    // its rounds register in the thread-local patch-scratch buffer,
-    // which a per-batch caller releases from its own thread. The
-    // decontam truncs register no scratch (returned state faces).
+    // its rounds register in the caller thread's Scratch.scope. The
+    // decontam truncs register nothing (returned state faces).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
@@ -1388,7 +1342,7 @@ object CorpusOps {
     val churnIdProbe = diffM
       .filter(col("status").isin("added", "changed")).select("doc_id")
       .limit(PrunedPatchMaxChurn + 1).collect().map(_.getLong(0))
-    val churnDocs = scratch(materialize(
+    val churnDocs = Scratch.keep(materialize(
       if (churnIdProbe.length <= PrunedPatchMaxChurn)
         keepIdsPushdown(v2docs, "doc_id",
           scala.collection.immutable.ArraySeq.unsafeWrapArray(churnIdProbe))

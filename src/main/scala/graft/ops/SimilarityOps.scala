@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftext.ArrayFunctions.dot_product
+import org.apache.spark.sql.graftext.Scratch
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -1504,10 +1505,10 @@ object SimilarityOps {
     */
   def farthestPointInit(emb: DataFrame,
       k: Int = IvfCentroids): IndexedSeq[IndexedSeq[Double]] = {
-    val e = withNorm(emb).filter(col("norm") > 0)
-      .withColumn("unit", transform(col("emb_d"), _ / col("norm")))
-      .select(col("vec_id"), col("unit")).cache()
-    try {
+    Scratch.scope {
+      val e = Scratch.cache(withNorm(emb).filter(col("norm") > 0)
+        .withColumn("unit", transform(col("emb_d"), _ / col("norm")))
+        .select(col("vec_id"), col("unit")))
       // loud on degenerate input: the ladder init survives an empty or
       // all-zero corpus, so opting INTO this init must not turn that
       // into a bare ArrayIndexOutOfBounds; and fewer DISTINCT unit
@@ -1529,7 +1530,7 @@ object SimilarityOps {
             .orderBy(col("mx").asc, col("vec_id").asc).limit(1))
       }
       cents
-    } finally { e.unpersist(); () }
+    }
   }
 
   def ivfTrain(emb: DataFrame, k: Int = IvfCentroids, maxIter: Int = 5,
@@ -1542,12 +1543,11 @@ object SimilarityOps {
     }
     require(init.isEmpty || init.size == k,
       s"ivfTrain: init has ${init.size} centroids, k=$k")
-    val e = withNorm(emb)
-      .filter(col("norm") > 0)
-      .withColumn("unit", transform(col("emb_d"), _ / col("norm")))
-      .select("unit")
-      .cache()
-    try {
+    Scratch.scope {
+      val e = Scratch.cache(withNorm(emb)
+        .filter(col("norm") > 0)
+        .withColumn("unit", transform(col("emb_d"), _ / col("norm")))
+        .select("unit"))
       var cents: IndexedSeq[IndexedSeq[Double]] =
         if (init.nonEmpty) init.map(normalize).toIndexedSeq
         else (0 until k).map(j => normalize(centroid(j)))
@@ -1591,7 +1591,7 @@ object SimilarityOps {
         iter += 1
       }
       (cents, objectives.toSeq)
-    } finally { e.unpersist(); () }
+    }
   }
 
   /** Recall@[[TopK]] of the approximate ANN paths against the exact
@@ -2130,8 +2130,8 @@ object SimilarityOps {
     */
   def pqTrain(emb: DataFrame, maxIter: Int = 5, tol: Double = 1e-9)
       : (Array[Double], Seq[Double]) = {
-    val e = withNorm(emb).select("emb_d").cache()
-    try {
+    Scratch.scope {
+      val e = Scratch.cache(withNorm(emb).select("emb_d"))
       var cb = defaultPqCodebook.clone()
       val hist = scala.collection.mutable.ArrayBuffer.empty[Double]
       var iter = 0
@@ -2168,7 +2168,7 @@ object SimilarityOps {
       // last in-loop objective)
       pqMeanDistortion(e, cb).foreach(hist += _)
       (cb, hist.toSeq)
-    } finally { e.unpersist(); () }
+    }
   }
 
   // -------------------------------------------------------- index compaction

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 
 /** Text-analysis operators for the training-data pipeline over the
   * `documents` table: token counting, language ID (stopword-profile
@@ -2111,9 +2112,9 @@ ${sqlQualityGopherGates.linesIterator.map(l => "       |    " + l).mkString("\n"
     // skip re-splitting the text
     val keep = Seq("doc_id", "text") ++
       (if (docs.columns.contains(ToksCol)) Seq(ToksCol) else Nil)
-    val d = graft.ops.DedupOps.fanoutIfNarrow(
-      docs.select(keep.map(col): _*)).cache()
-    try {
+    Scratch.scope {
+      val d = Scratch.cache(graft.ops.DedupOps.fanoutIfNarrow(
+        docs.select(keep.map(col): _*)))
       val nDocs = d.count()
       var w = seedWeightsMicro
       val hist = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -2134,6 +2135,6 @@ ${sqlQualityGopherGates.linesIterator.map(l => "       |    " + l).mkString("\n"
       // measure the weights we actually return
       linearMeanAbsResidual(d, w).foreach(hist += _)
       (w, hist.toSeq)
-    } finally { d.unpersist(); () }
+    }
   }
 }

@@ -49,6 +49,10 @@ object CheckpointBlocks {
   private def setEntries(cm: CacheManager, es: IndexedSeq[CachedData]): Unit =
     cachedDataField.set(cm, es)
 
+  /** CacheManager entries now: a scoped op or a drained stream's flatness. */
+  def cacheEntryCount(spark: SparkSession): Int =
+    entries(spark.sharedState.cacheManager).size
+
   /** Per-query measurement hygiene, shared by Bench / BenchProbe /
     * PlanInventory so the harnesses always measure the same thing: drop
     * every cached intermediate and every pinned checkpoint RDD EXCEPT the

@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.{CorpusOps, DedupOps, PretrainOps, TextOps}
@@ -109,13 +110,12 @@ object CleanStream {
           when(col("gated"), row_number().over(w)))
         // prior is O(distinct ingested content) — NO broadcast hint; AQE
         // broadcasts small early state and shuffle-joins once it grows
-        val base = prior.fold(ranked.withColumn("in_prior", lit(false)))(p =>
-          ranked.join(p, Seq("content_hash"), "left")
-            .withColumn("in_prior", coalesce(col("in_prior"), lit(false))))
-          .withColumn("dup_exact",
-            col("gated") && (col("rn") > 1 || col("in_prior")))
-          .cache() // feeds the contamination probe + three writes
-        try {
+        Scratch.scope {
+          // cached: feeds the contamination probe + three writes
+          val base = Scratch.cache(prior.fold(ranked.withColumn("in_prior", lit(false)))(p =>
+            ranked.join(p, Seq("content_hash"), "left")
+              .withColumn("in_prior", coalesce(col("in_prior"), lit(false))))
+            .withColumn("dup_exact", col("gated") && (col("rn") > 1 || col("in_prior"))))
           // contamination: any production-width gram in the benchmark
           // set — hit lists are per-mille, broadcast them back
           val withContam = benchGrams match {
@@ -160,7 +160,7 @@ object CleanStream {
             .select(col("content_hash")).distinct()
             .coalesce(1).write.mode("overwrite")
             .parquet(VersionedState.versionDir(hashesRoot, batchId))
-        } finally { base.unpersist(); () }
+        }
         ()
       }
       .start()

@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -114,61 +115,51 @@ object DedupStream {
     import graft.ops.PretrainOps
     import org.apache.spark.sql.graftext.ArrayFunctions.{sorted_distinct, word_shingle_hashes}
     import graft.ops.TextOps.tokens
-    // cached: the closure re-evaluates benchGrams per micro-batch — without
-    // the cache every tick re-runs the full benchmark scan + gram sketch +
-    // distinct shuffle for a STATIC side (runIncrementalDedup's history
-    // cache is the same pattern); the broadcast build itself is per-batch
-    // (Spark broadcasts are per-plan), but it reads the cached rows
-    val benchGramsCached = benchmarkDocs
-      .select(explode_outer(sorted_distinct(
-        word_shingle_hashes(tokens(col("text")), PretrainOps.DecontamGram))).as("g"))
-      .filter(col("g").isNotNull)
-      .distinct()
-      .cache()
-    val benchGrams = broadcast(benchGramsCached)
-    val query = try spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .select(col("doc_id"),
-        sorted_distinct(word_shingle_hashes(tokens(col("text")),
-          PretrainOps.DecontamGram)).as("gs"))
-      // outer + null filter (vs inferred size(gs)>0 pushdown re-computing
-      // the gram sketch at the scan — see DedupOps.minhashSignature)
-      .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
-        explode_outer(col("gs")).as("g"))
-      .filter(col("g").isNotNull)
-      .writeStream
-      .queryName(s"graft-decontaminate-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      // join + per-doc agg run INSIDE the micro-batch: a doc's grams all
-      // arrive in one batch (file granularity), so a streaming groupBy
-      // would only add a state store keyed by every doc ever seen —
-      // stateless foreachBatch keeps the query scan-bound
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.join(benchGrams, "g")
-          .groupBy("doc_id", "n_grams")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(col("doc_id"), col("n_grams"), col("n_hits"),
-            (col("n_hits").cast("double") / col("n_grams")).as("contamination"))
-          // per-batch dir + overwrite: replay-idempotent (see
-          // runIncrementalDedup)
-          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch {
-      // a failed start() (bad checkpoint dir, schema error) would leak
-      // the cache the termination listener exists to free
-      case t: Throwable => benchGramsCached.unpersist(); throw t
+    Scratch.forQuery(spark) {
+      // cached: the closure re-evaluates benchGrams per micro-batch — without
+      // the cache every tick re-runs the full benchmark scan + gram sketch +
+      // distinct shuffle for a STATIC side (runIncrementalDedup's history
+      // cache is the same pattern); the broadcast build itself is per-batch
+      // (Spark broadcasts are per-plan), but it reads the cached rows
+      val benchGramsCached = Scratch.cache(benchmarkDocs
+        .select(explode_outer(sorted_distinct(
+          word_shingle_hashes(tokens(col("text")), PretrainOps.DecontamGram))).as("g"))
+        .filter(col("g").isNotNull)
+        .distinct())
+      val benchGrams = broadcast(benchGramsCached)
+      spark.readStream
+        .schema(docSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(docsDir)
+        .select(col("doc_id"),
+          sorted_distinct(word_shingle_hashes(tokens(col("text")),
+            PretrainOps.DecontamGram)).as("gs"))
+        // outer + null filter (vs inferred size(gs)>0 pushdown re-computing
+        // the gram sketch at the scan — see DedupOps.minhashSignature)
+        .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
+          explode_outer(col("gs")).as("g"))
+        .filter(col("g").isNotNull)
+        .writeStream
+        .queryName(s"graft-decontaminate-stream-${QueryNames.suffix(checkpointDir)}")
+        .option("checkpointLocation", checkpointDir)
+        // join + per-doc agg run INSIDE the micro-batch: a doc's grams all
+        // arrive in one batch (file granularity), so a streaming groupBy
+        // would only add a state store keyed by every doc ever seen —
+        // stateless foreachBatch keeps the query scan-bound
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.join(benchGrams, "g")
+            .groupBy("doc_id", "n_grams")
+            .agg(count(lit(1)).as("n_hits"))
+            .select(col("doc_id"), col("n_grams"), col("n_hits"),
+              (col("n_hits").cast("double") / col("n_grams")).as("contamination"))
+            // per-batch dir + overwrite: replay-idempotent (see
+            // runIncrementalDedup)
+            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+          ()
+        }
+        .trigger(trigger)
+        .start()
     }
-    // free the static-side cache when THIS query terminates: without it
-    // the cached gram table outlives the stopped query for the life of
-    // the SparkSession, accumulating executor memory across repeated
-    // stream runs (tests start the query twice per case)
-    unpersistOnTermination(spark, query, benchGramsCached)
-    query
   }
 
   /** Streaming incremental CONTAINMENT: each arriving micro-batch is
@@ -196,56 +187,53 @@ object DedupStream {
       historyDocs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.{DedupOps, PretrainOps}
-    val histG = historyDocs
-      .select(col("doc_id").as("doc_b"),
-        PretrainOps.decontamGrams(DedupOps.ContainGramWords).as("gs"))
-      .select(col("doc_b"), explode_outer(col("gs")).as("g"))
-      .filter(col("g").isNotNull)
-    val hdf = histG.groupBy("g").agg(count(lit(1)).as("df"))
-    // two cached statics, reused every batch: the capped inverted index
-    // and the over-cap stop-gram set (tiny — boilerplate grams only)
-    val histIdx = histG.join(
-      hdf.filter(col("df") <= DedupOps.ContainFreqCap).select("g"), "g").cache()
-    val stopGrams = hdf.filter(col("df") > DedupOps.ContainFreqCap)
-      .select("g").cache()
-    def freeCaches(): Unit = { histIdx.unpersist(); stopGrams.unpersist(); () }
-    val query = try spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .select(col("doc_id").as("doc_a"),
-        PretrainOps.decontamGrams(DedupOps.ContainGramWords).as("gs"))
-      .select(col("doc_a"), size(col("gs")).cast("long").as("n_a"),
-        explode_outer(col("gs")).as("g"))
-      .filter(col("g").isNotNull)
-      .writeStream
-      .queryName(s"graft-containment-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val capped = batch.join(stopGrams, "g")
-          .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
-        val out = batch.join(histIdx, "g")
-          .groupBy("doc_a", "n_a", "doc_b")
-          .agg(count(lit(1)).as("shared"))
-          .join(capped, Seq("doc_a"), "left")
-          .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
-          .withColumn("n_eligible", col("n_a") - col("n_capped"))
-          .filter(col("shared").cast("double") / col("n_eligible")
-            >= DedupOps.ContainThreshold)
-          .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_eligible"),
-            col("n_capped"), col("shared"),
-            (col("shared").cast("double") / col("n_eligible")).as("containment"))
-        // per-batch dir + overwrite: replay-idempotent (see
-        // runIncrementalDedup)
-        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch { case t: Throwable => freeCaches(); throw t }
-    unpersistOnTermination(spark, query, histIdx)
-    unpersistOnTermination(spark, query, stopGrams)
-    query
+    Scratch.forQuery(spark) {
+      val histG = historyDocs
+        .select(col("doc_id").as("doc_b"),
+          PretrainOps.decontamGrams(DedupOps.ContainGramWords).as("gs"))
+        .select(col("doc_b"), explode_outer(col("gs")).as("g"))
+        .filter(col("g").isNotNull)
+      val hdf = histG.groupBy("g").agg(count(lit(1)).as("df"))
+      // two cached statics, reused every batch: the capped inverted index
+      // and the over-cap stop-gram set (tiny — boilerplate grams only)
+      val histIdx = Scratch.cache(histG.join(
+        hdf.filter(col("df") <= DedupOps.ContainFreqCap).select("g"), "g"))
+      val stopGrams = Scratch.cache(hdf.filter(col("df") > DedupOps.ContainFreqCap)
+        .select("g"))
+      spark.readStream
+        .schema(docSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(docsDir)
+        .select(col("doc_id").as("doc_a"),
+          PretrainOps.decontamGrams(DedupOps.ContainGramWords).as("gs"))
+        .select(col("doc_a"), size(col("gs")).cast("long").as("n_a"),
+          explode_outer(col("gs")).as("g"))
+        .filter(col("g").isNotNull)
+        .writeStream
+        .queryName(s"graft-containment-stream-${QueryNames.suffix(checkpointDir)}")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val capped = batch.join(stopGrams, "g")
+            .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
+          val out = batch.join(histIdx, "g")
+            .groupBy("doc_a", "n_a", "doc_b")
+            .agg(count(lit(1)).as("shared"))
+            .join(capped, Seq("doc_a"), "left")
+            .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
+            .withColumn("n_eligible", col("n_a") - col("n_capped"))
+            .filter(col("shared").cast("double") / col("n_eligible")
+              >= DedupOps.ContainThreshold)
+            .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_eligible"),
+              col("n_capped"), col("shared"),
+              (col("shared").cast("double") / col("n_eligible")).as("containment"))
+          // per-batch dir + overwrite: replay-idempotent (see
+          // runIncrementalDedup)
+          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+          ()
+        }
+        .trigger(trigger)
+        .start()
+    }
   }
 
   /** Streaming incremental WINNOW dedup — the position-local overlap leg
@@ -267,70 +255,65 @@ object DedupStream {
       historyDocs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import graft.ops.DedupOps
-    val histF = historyDocs
-      .select(col("doc_id").as("doc_b"),
-        DedupOps.winnowFingerprints(col("text")).as("fps"))
-      .select(col("doc_b"), size(col("fps")).cast("long").as("n_b"),
-        explode_outer(col("fps")).as("fp"))
-      .filter(col("fp").isNotNull)
-    val hdf = histF.groupBy("fp").agg(count(lit(1)).as("df"))
-    // two cached statics, reused every batch (the containment pattern):
-    // the capped inverted index — fingerprints with history-df ≤ cap,
-    // each row carrying its history doc's ELIGIBLE count (n_b minus its
-    // own over-cap fingerprints, mirroring batch dedupWinnow's
-    // denominators) — and the over-cap stop set for incoming-side
-    // n_capped accounting
-    val histElig = histF.join(hdf, "fp")
-      .groupBy("doc_b", "n_b")
-      .agg(sum(when(col("df") > DedupOps.WinnowFreqCap, lit(1L))
-        .otherwise(lit(0L))).as("capped_b"))
-      .select(col("doc_b"), (col("n_b") - col("capped_b")).as("elig_b"))
-    val histIdx = histF
-      .join(hdf.filter(col("df") <= DedupOps.WinnowFreqCap).select("fp"), "fp")
-      .join(histElig, "doc_b")
-      .select("fp", "doc_b", "elig_b")
-      .cache()
-    val stopFps = hdf.filter(col("df") > DedupOps.WinnowFreqCap)
-      .select("fp").cache()
-    val query = try spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .select(col("doc_id").as("doc_a"),
-        DedupOps.winnowFingerprints(col("text")).as("fps"))
-      .select(col("doc_a"), size(col("fps")).cast("long").as("n_a"),
-        explode_outer(col("fps")).as("fp"))
-      .filter(col("fp").isNotNull)
-      .writeStream
-      .queryName(s"graft-winnow-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val capped = batch.join(stopFps, "fp")
-          .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
-        val out = batch.join(histIdx, "fp")
-          .groupBy("doc_a", "n_a", "doc_b", "elig_b")
-          .agg(count(lit(1)).as("shared"))
-          .join(capped, Seq("doc_a"), "left")
-          .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
-          .withColumn("elig_a", col("n_a") - col("n_capped"))
-          .withColumn("jaccard", col("shared").cast("double") /
-            (col("elig_a") + col("elig_b") - col("shared")))
-          .filter(col("jaccard") >= DedupOps.WinnowThreshold)
-          .select(col("doc_a"), col("doc_b"), col("elig_a"), col("elig_b"),
-            col("n_capped"), col("shared"), col("jaccard"))
-        // per-batch dir + overwrite: replay-idempotent (see
-        // runIncrementalDedup)
-        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch {
-      case t: Throwable => histIdx.unpersist(); stopFps.unpersist(); throw t
+    Scratch.forQuery(spark) {
+      val histF = historyDocs
+        .select(col("doc_id").as("doc_b"),
+          DedupOps.winnowFingerprints(col("text")).as("fps"))
+        .select(col("doc_b"), size(col("fps")).cast("long").as("n_b"),
+          explode_outer(col("fps")).as("fp"))
+        .filter(col("fp").isNotNull)
+      val hdf = histF.groupBy("fp").agg(count(lit(1)).as("df"))
+      // two cached statics, reused every batch (the containment pattern):
+      // the capped inverted index — fingerprints with history-df ≤ cap,
+      // each row carrying its history doc's ELIGIBLE count (n_b minus its
+      // own over-cap fingerprints, mirroring batch dedupWinnow's
+      // denominators) — and the over-cap stop set for incoming-side
+      // n_capped accounting
+      val histElig = histF.join(hdf, "fp")
+        .groupBy("doc_b", "n_b")
+        .agg(sum(when(col("df") > DedupOps.WinnowFreqCap, lit(1L))
+          .otherwise(lit(0L))).as("capped_b"))
+        .select(col("doc_b"), (col("n_b") - col("capped_b")).as("elig_b"))
+      val histIdx = Scratch.cache(histF
+        .join(hdf.filter(col("df") <= DedupOps.WinnowFreqCap).select("fp"), "fp")
+        .join(histElig, "doc_b")
+        .select("fp", "doc_b", "elig_b"))
+      val stopFps = Scratch.cache(hdf.filter(col("df") > DedupOps.WinnowFreqCap)
+        .select("fp"))
+      spark.readStream
+        .schema(docSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(docsDir)
+        .select(col("doc_id").as("doc_a"),
+          DedupOps.winnowFingerprints(col("text")).as("fps"))
+        .select(col("doc_a"), size(col("fps")).cast("long").as("n_a"),
+          explode_outer(col("fps")).as("fp"))
+        .filter(col("fp").isNotNull)
+        .writeStream
+        .queryName(s"graft-winnow-stream-${QueryNames.suffix(checkpointDir)}")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val capped = batch.join(stopFps, "fp")
+            .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
+          val out = batch.join(histIdx, "fp")
+            .groupBy("doc_a", "n_a", "doc_b", "elig_b")
+            .agg(count(lit(1)).as("shared"))
+            .join(capped, Seq("doc_a"), "left")
+            .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
+            .withColumn("elig_a", col("n_a") - col("n_capped"))
+            .withColumn("jaccard", col("shared").cast("double") /
+              (col("elig_a") + col("elig_b") - col("shared")))
+            .filter(col("jaccard") >= DedupOps.WinnowThreshold)
+            .select(col("doc_a"), col("doc_b"), col("elig_a"), col("elig_b"),
+              col("n_capped"), col("shared"), col("jaccard"))
+          // per-batch dir + overwrite: replay-idempotent (see
+          // runIncrementalDedup)
+          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+          ()
+        }
+        .trigger(trigger)
+        .start()
     }
-    unpersistOnTermination(spark, query, histIdx)
-    unpersistOnTermination(spark, query, stopFps)
-    query
   }
 
   val embSchema: StructType = StructType(Seq(
@@ -351,10 +334,8 @@ object DedupStream {
     * cosine ≥ [[graft.ops.DedupOps.SemanticDupThreshold]].
     *
     * Stream-static shape: the history side — cluster-assigned, normed —
-    * is computed ONCE, cached for the query's lifetime, and freed on
-    * termination (no per-batch cache accumulation: per-batch plans are
-    * fresh, so anything cached inside foreachBatch would leak one entry
-    * per tick — the r4 lesson). Per batch: a narrow in-row centroid
+    * is computed ONCE and cached for the query's lifetime
+    * ([[Scratch.forQuery]]). Per batch: a narrow in-row centroid
     * argmax on the incoming side (centroid literals inline into the
     * expression — k×D doubles, broadcast-scale), one equi-join on
     * `cluster_id` against the cached history (incoming×history only,
@@ -377,41 +358,39 @@ object DedupStream {
         .withColumn("cluster_id",
           (array_position(dots, array_max(dots)) - 1).cast("long"))
     }
-    val hist = assigned(historyEmb)
-      .select(col("cluster_id"), col("vec_id").as("vec_b"),
-        col("emb_d").as("eb"), col("norm").as("nb"))
-      .cache()
-    val query = try spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-      .writeStream
-      .queryName(s"graft-semantic-dedup-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val in = assigned(batch)
-        val sims = in.join(hist, Seq("cluster_id"))
-          .select(col("vec_id"), col("cluster_id"),
-            SimilarityOps.cosine(col("emb_d"), col("norm"),
-              col("eb"), col("nb")).as("sim"))
-          .filter(col("sim") >= DedupOps.SemanticDupThreshold)
-          .groupBy("vec_id")
-          .agg(count(lit(1)).as("n_dups"), max(col("sim")).as("max_sim"))
-        val out = in.select(col("vec_id"), col("cluster_id"))
-          .join(sims, Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cluster_id"),
-            col("n_dups").isNull.as("keep"),
-            coalesce(col("n_dups"), lit(0L)).as("n_dups"), col("max_sim"))
-        // per-batch dir + overwrite: replay-idempotent (see
-        // runIncrementalDedup)
-        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch { case t: Throwable => hist.unpersist(); throw t }
-    unpersistOnTermination(spark, query, hist)
-    query
+    Scratch.forQuery(spark) {
+      val hist = Scratch.cache(assigned(historyEmb)
+        .select(col("cluster_id"), col("vec_id").as("vec_b"),
+          col("emb_d").as("eb"), col("norm").as("nb")))
+      spark.readStream
+        .schema(embSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(embDir)
+        .writeStream
+        .queryName(s"graft-semantic-dedup-stream-${QueryNames.suffix(checkpointDir)}")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val in = assigned(batch)
+          val sims = in.join(hist, Seq("cluster_id"))
+            .select(col("vec_id"), col("cluster_id"),
+              SimilarityOps.cosine(col("emb_d"), col("norm"),
+                col("eb"), col("nb")).as("sim"))
+            .filter(col("sim") >= DedupOps.SemanticDupThreshold)
+            .groupBy("vec_id")
+            .agg(count(lit(1)).as("n_dups"), max(col("sim")).as("max_sim"))
+          val out = in.select(col("vec_id"), col("cluster_id"))
+            .join(sims, Seq("vec_id"), "left")
+            .select(col("vec_id"), col("cluster_id"),
+              col("n_dups").isNull.as("keep"),
+              coalesce(col("n_dups"), lit(0L)).as("n_dups"), col("max_sim"))
+          // per-batch dir + overwrite: replay-idempotent (see
+          // runIncrementalDedup)
+          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+          ()
+        }
+        .trigger(trigger)
+        .start()
+    }
   }
 
   /** Binary-payload stream schema shared by the perceptual-hash legs. */
@@ -445,36 +424,34 @@ object DedupStream {
     def banded(sig: DataFrame): DataFrame =
       DedupOps.bandedSignatures(sig, sigCol, bands, bandBits,
         DedupOps.BandBucketCap)
-    val histIdx = banded(historySig)
-      .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-        col("band_idx"), col("band_val"))
-      .cache()
-    val query = try spark.readStream
-      .schema(payloadSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inDir)
-      .transform(sigFn)
-      .writeStream
-      .queryName(s"graft-$nameTag-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = banded(batch)
-          .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-            col("band_idx"), col("band_val"))
-          .join(histIdx, Seq("band_idx", "band_val"))
-          .select(col("doc_a"), col("doc_b"),
-            bit_count(col("sig_a").bitwiseXOR(col("sig_b")))
-              .cast("long").as("hamming"))
-          .filter(col("hamming") <= DedupOps.MaxHamming)
-          .distinct()
-        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch { case t: Throwable => histIdx.unpersist(); throw t }
-    unpersistOnTermination(spark, query, histIdx)
-    query
+    Scratch.forQuery(spark) {
+      val histIdx = Scratch.cache(banded(historySig)
+        .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
+          col("band_idx"), col("band_val")))
+      spark.readStream
+        .schema(payloadSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(inDir)
+        .transform(sigFn)
+        .writeStream
+        .queryName(s"graft-$nameTag-stream-${QueryNames.suffix(checkpointDir)}")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val out = banded(batch)
+            .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
+              col("band_idx"), col("band_val"))
+            .join(histIdx, Seq("band_idx", "band_val"))
+            .select(col("doc_a"), col("doc_b"),
+              bit_count(col("sig_a").bitwiseXOR(col("sig_b")))
+                .cast("long").as("hamming"))
+            .filter(col("hamming") <= DedupOps.MaxHamming)
+            .distinct()
+          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+          ()
+        }
+        .trigger(trigger)
+        .start()
+    }
   }
 
   /** Streaming incremental IMAGE dedup: [[runIncrementalHamming]] over
@@ -533,81 +510,44 @@ object DedupStream {
       DedupOps.bandedSignatures(fr, "dhash", BinaryOps.DhashBands,
         BinaryOps.DhashBandBits, DedupOps.BandBucketCap,
         extraCols = Seq("frame_idx"))
-    val histFrames = frames(historyVideos)
-    val histIdx = banded(histFrames)
-      .select(col("doc_id").as("doc_b"), col("sig").as("dhash_b"),
-        col("band_idx"), col("band_val"))
-      .cache()
-    val histCounts = histFrames.groupBy(col("doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("nf_b"))
-      .cache()
-    val query = try spark.readStream
-      .schema(payloadSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(videosDir)
-      .transform(frames)
-      .writeStream
-      .queryName(s"graft-video-vote-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val incCounts = batch.groupBy(col("doc_id").as("doc_a"))
-          .agg(count(lit(1)).as("nf_a"))
-        val out = banded(batch)
-          .select(col("doc_id").as("doc_a"), col("frame_idx").as("frame_a"),
-            col("sig").as("dhash_a"), col("band_idx"), col("band_val"))
-          .join(histIdx, Seq("band_idx", "band_val"))
-          .filter(bit_count(col("dhash_a").bitwiseXOR(col("dhash_b")))
-            <= DedupOps.MaxHamming)
-          .select(col("doc_a"), col("doc_b"), col("frame_a"))
-          .distinct()
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("n_matched"))
-          .join(incCounts, "doc_a")
-          .join(histCounts, "doc_b")
-          .select(col("doc_a"), col("doc_b"), col("n_matched"),
-            least(col("nf_a"), col("nf_b")).as("min_frames"))
-          .filter(col("n_matched") * VideoOps.MinFrameVote >= col("min_frames"))
-        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    catch {
-      case t: Throwable =>
-        histIdx.unpersist(); histCounts.unpersist(); throw t
-    }
-    unpersistOnTermination(spark, query, histIdx)
-    unpersistOnTermination(spark, query, histCounts)
-    query
-  }
-
-  /** Self-removing listener that unpersists `cached` once query `q`
-    * terminates — the streaming analog of a try/finally around a batch
-    * job's cache.
-    */
-  private def unpersistOnTermination(spark: SparkSession,
-      q: StreamingQuery, cached: DataFrame): Unit = {
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        if (e.id == q.id) {
-          cached.unpersist()
-          spark.streams.removeListener(this)
+    Scratch.forQuery(spark) {
+      val histFrames = frames(historyVideos)
+      val histIdx = Scratch.cache(banded(histFrames)
+        .select(col("doc_id").as("doc_b"), col("sig").as("dhash_b"),
+          col("band_idx"), col("band_val")))
+      val histCounts = Scratch.cache(histFrames.groupBy(col("doc_id").as("doc_b"))
+        .agg(count(lit(1)).as("nf_b")))
+      spark.readStream
+        .schema(payloadSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(videosDir)
+        .transform(frames)
+        .writeStream
+        .queryName(s"graft-video-vote-stream-${QueryNames.suffix(checkpointDir)}")
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val incCounts = batch.groupBy(col("doc_id").as("doc_a"))
+            .agg(count(lit(1)).as("nf_a"))
+          val out = banded(batch)
+            .select(col("doc_id").as("doc_a"), col("frame_idx").as("frame_a"),
+              col("sig").as("dhash_a"), col("band_idx"), col("band_val"))
+            .join(histIdx, Seq("band_idx", "band_val"))
+            .filter(bit_count(col("dhash_a").bitwiseXOR(col("dhash_b")))
+              <= DedupOps.MaxHamming)
+            .select(col("doc_a"), col("doc_b"), col("frame_a"))
+            .distinct()
+            .groupBy(col("doc_a"), col("doc_b"))
+            .agg(count(lit(1)).as("n_matched"))
+            .join(incCounts, "doc_a")
+            .join(histCounts, "doc_b")
+            .select(col("doc_a"), col("doc_b"), col("n_matched"),
+              least(col("nf_a"), col("nf_b")).as("min_frames"))
+            .filter(col("n_matched") * VideoOps.MinFrameVote >= col("min_frames"))
+          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
           ()
         }
-    }
-    spark.streams.addListener(listener)
-    // the terminated event can be dispatched BEFORE addListener completes
-    // (an AvailableNow query over an empty dir finishes in milliseconds)
-    // — if the query is already inactive the listener will never fire, so
-    // clean up here; a double fire is harmless (unpersist is idempotent,
-    // removeListener on a removed listener is a no-op)
-    if (!q.isActive) {
-      cached.unpersist()
-      spark.streams.removeListener(listener)
-      ()
+        .trigger(trigger)
+        .start()
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.SimilarityOps
@@ -184,8 +185,8 @@ object GraphStream {
         "checkpoint does not match the store. Reuse the original " +
         "checkpointDir to resume, or point outDir at a new directory.")
     }
-    val assigned = SimilarityOps.knnAssign(batch, centroids).cache()
-    try {
+    Scratch.scope {
+      val assigned = Scratch.cache(SimilarityOps.knnAssign(batch, centroids))
       // 1. append this batch's vectors (replay: overwrite of the same
       // per-batch dir). repartition on the cluster key → one file per
       // touched cluster per batch, not partitions × clusters.
@@ -227,7 +228,7 @@ object GraphStream {
           .partitionBy("cluster_id")
           .parquet(edgesDir(outDir))
       }
-    } finally { assigned.unpersist(); () }
+    }
   }
 
   private implicit class SeqToDf(private val ids: Seq[Long]) {

@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -75,8 +76,10 @@ object IncCleanStream {
       }
       .start()
 
+  // one scope per batch: every face the patch returns is durable parquet
+  // by its end, so the patch's scratch frees there (a replay rebuilds it)
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
-      batchId: Long, outDir: String): Unit = try {
+      batchId: Long, outDir: String): Unit = Scratch.scope {
     val docsRoot = s"$outDir/_docs"
     val stateRoot = s"$outDir/_state"
     // 1+2. fold the doc store: prior SNAPSHOT patched by this batch's
@@ -174,14 +177,7 @@ object IncCleanStream {
     VersionedState.prune(spark, stateRoot, batchId - 1)
     VersionedState.prune(spark, s"$outDir/clean", batchId - 1)
     ()
-  } finally
-    // every face the patch returned is now durable parquet — free the
-    // patch's cached/checkpointed scratch (review round-11: without
-    // this, a long-running stream accumulates one generation of
-    // MEMORY_AND_DISK blocks per micro-batch without bound). In the
-    // finally: a failed batch replays from scratch anyway, and its
-    // half-built scratch must not pile up across retries.
-    CorpusOps.releasePatchScratch()
+  }
 
   /** The current cleaned corpus — clean(v) for the newest ingested
     * version; identical to batch [[CorpusOps.cleanCorpus]] over the

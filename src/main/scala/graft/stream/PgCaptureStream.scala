@@ -3,6 +3,7 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -97,9 +98,9 @@ object PgCaptureStream {
     // raw bytes instead. Decode is a codegen'd expression — recomputing
     // it three times is cheaper than one wide-row cache round-trip
     // (sink cache_build 25-28 s -> ~8 s, whole 4M batch ~50 -> ~25 s).
-    val wide = wide0.cache()
-    val flat = PgOutputOps.decode(wide).select(col("seq"), col("pg.*"))
-    try {
+    Scratch.scope {
+      val wide = Scratch.cache(wide0)
+      val flat = PgOutputOps.decode(wide).select(col("seq"), col("pg.*"))
       // one pass forces the raw cache AND counts malformed frames: the
       // dead-letter write below previously paid its own full decode pass
       // per batch just to discover the (overwhelmingly common) zero-
@@ -155,6 +156,6 @@ object PgCaptureStream {
           .write.mode("overwrite")
           .parquet(VersionedState.versionDir(stateRoot, batchId)))
       VersionedState.prune(spark, stateRoot, batchId - 1)
-    } finally { wide.unpersist(); () }
+    }
   }
 }

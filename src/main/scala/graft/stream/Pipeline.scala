@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
@@ -522,15 +523,15 @@ object EsBulkSink {
           .otherwise(idIdx)
       else idIdx
     val errDf = broadcast(errors.toSeq.toDF("_action_key", "_bulk_error"))
-    // cache: both demux branches scan the keyed frame once
-    val keyed = actions.withColumn("_action_key", key).cache()
-    try {
+    Scratch.scope {
+      // cache: both demux branches scan the keyed frame once
+      val keyed = Scratch.cache(actions.withColumn("_action_key", key))
       val bad = keyed.join(errDf, "_action_key").drop("_action_key")
       val good = keyed.join(errDf, Seq("_action_key"), "left_anti")
         .drop("_action_key")
       responseHandler.onError(bad, batchId)
       responseHandler.onSuccess(good, batchId)
-    } finally { keyed.unpersist(); () }
+    }
   }
 
   /** Demux keyed by EVENT id — the HTTP sink's form. A real `_bulk`
@@ -551,31 +552,31 @@ object EsBulkSink {
     val spark = actions.sparkSession
     import spark.implicits._
     val errDf = broadcast(errors.toSeq.toDF("event_id", "_bulk_error"))
-    val cached = actions.cache()
-    try {
+    Scratch.scope {
+      val cached = Scratch.cache(actions)
       responseHandler.onError(cached.join(errDf, "event_id"), batchId)
       responseHandler.onSuccess(
         cached.join(errDf, Seq("event_id"), "left_anti"), batchId)
-    } finally { cached.unpersist(); () }
+    }
   }
 
   /** Shared flush prologue of the file and HTTP sinks — bad-key demux →
     * LWW dedup (cached: the window runs once per flush) → version-gated
     * NDJSON encode — so the two transports can never drift on WHAT they
-    * ship. Returns (deduped, payload(event_id, value)); the caller owns
-    * `deduped.unpersist()`. The demux runs BEFORE dedup: a null doc key
-    * is not a document identity, so key-less actions must not collapse
-    * into one null-keyed window row. concat_ws skips NULLs: deletes emit
-    * the meta line only (bulk.go:231-235).
+    * ship. Returns (deduped, payload(event_id, value)); `deduped` is
+    * owned by the caller's [[Scratch.scope]]. The demux runs BEFORE
+    * dedup: a null doc key is not a document identity, so key-less
+    * actions must not collapse into one null-keyed window row.
+    * concat_ws skips NULLs: deletes emit the meta line only
+    * (bulk.go:231-235).
     */
   private[stream] def flushPrologue(cached: DataFrame, batchId: Long,
       responseHandler: ResponseHandler, esMajor: Int, typeName: String)
       : (DataFrame, DataFrame) = {
     val bad = cached.filter(col("doc_id").isNull || col("index_name").isNull)
     if (!bad.isEmpty) responseHandler.onError(bad, batchId)
-    val deduped = CdcOps.dedupLastWriteWins(
-      cached.filter(col("doc_id").isNotNull && col("index_name").isNotNull))
-      .cache()
+    val deduped = Scratch.cache(CdcOps.dedupLastWriteWins(
+      cached.filter(col("doc_id").isNotNull && col("index_name").isNotNull)))
     // X2: `_type` in the action metadata only for ES major < 8
     // (bulk.go:194-206,227-230; version from config ≙ Info-API detect)
     val payload =
@@ -613,57 +614,49 @@ object EsBulkSink {
 
   /** The flush skeleton of both transports (bulk.go:253-278): cache the
     * batch → [[flushPrologue]] → `ship` the payload → R3 counters →
-    * response demux → unpersist. Only `ship` differs between the file and
-    * HTTP sinks; it gets the payload `(event_id, value)` and returns the
-    * per-item failures by event id (a file write has none — it is
-    * all-or-nothing). Each step is timed as a `sink.*` [[Stages]] stage:
-    * a slow batch names the step that owns its wall on /metrics.
+    * response demux, in one [[Scratch.scope]]. Only `ship` differs
+    * between the file and HTTP sinks; it gets the payload
+    * `(event_id, value)` and returns the per-item failures by event id
+    * (a file write has none — it is all-or-nothing). Each step is timed
+    * as a `sink.*` [[Stages]] stage: a slow batch names the step that
+    * owns its wall on /metrics.
     *
     * Two-level cache, both measured on the 1M-event load test: the raw
     * batch feeds the bad-split probe AND the dedup window (recomputing
     * the upstream chain twice loses to one materialization), and the
     * post-dedup frame feeds the ship, the counters and the demux —
-    * caching it runs the dedup window once per flush. Both registrations
-    * happen INSIDE the try so a failure anywhere (incl. the dead-letter
-    * write) still unpersists in finally — a streaming engine retries
-    * failed batches, and a leak per retry accumulates for the life of the
-    * query.
+    * caching it runs the dedup window once per flush. The scope releases
+    * both (deduped first) on a failure anywhere too, incl. the
+    * dead-letter write — a streaming engine retries failed batches, and
+    * a leak per retry accumulates for the life of the query.
     */
   private[stream] def flush(batch: DataFrame, batchId: Long,
       responseHandler: ResponseHandler, esMajor: Int, typeName: String)(
-      ship: DataFrame => Map[Long, String]): Unit = {
-    val cached = batch.cache()
-    var deduped: DataFrame = null
-    try {
-      // force the cache with one full pass BEFORE the demux probe, so the
-      // whole upstream-chain materialization lands in ONE named stage
-      // (the probe's early-terminating isEmpty otherwise caches only the
-      // partitions it touches and smears the build across later
-      // consumers, which makes a slow batch unattributable). Measured on
-      // the 4M-event pgoutput batch: this build IS the sink's dominant
-      // cost (25-28 s of a ~37 s sink wall; payload write 8-9 s) — the
-      // reason batch sizing, not sink tuning, is the throughput knob
-      // (README "size the admission knobs").
-      Stages.time("sink.cache_build")(cached.count())
-      val (d, payload) = Stages.time("sink.prologue")(
-        flushPrologue(cached, batchId, responseHandler, esMajor, typeName))
-      deduped = d
-      val errors = Stages.time("sink.ship")(ship(payload))
-      // R3 per-index action counters (metric.go:56-96): one tiny agg over
-      // the cached batch after the flush succeeds. At-least-once like the
-      // reference (its counters bump in handleResponse BEFORE the LSN ack,
-      // bulk.go:392-411 vs 271-276): a crash between flush and checkpoint
-      // commit replays the batch and re-counts it.
-      Stages.time("sink.metrics_agg")(
-        deduped.groupBy("index_name", "action_type").count().collect()
-          .foreach(r => Metrics.record(r.getString(0), r.getString(1), r.getLong(2))))
-      Stages.time("sink.demux")(
-        handleResponseByEventId(deduped, errors, responseHandler, batchId))
-    } finally {
-      if (deduped != null) deduped.unpersist()
-      cached.unpersist()
-      ()
-    }
+      ship: DataFrame => Map[Long, String]): Unit = Scratch.scope {
+    val cached = Scratch.cache(batch)
+    // force the cache with one full pass BEFORE the demux probe, so the
+    // whole upstream-chain materialization lands in ONE named stage
+    // (the probe's early-terminating isEmpty otherwise caches only the
+    // partitions it touches and smears the build across later
+    // consumers, which makes a slow batch unattributable). Measured on
+    // the 4M-event pgoutput batch: this build IS the sink's dominant
+    // cost (25-28 s of a ~37 s sink wall; payload write 8-9 s) — the
+    // reason batch sizing, not sink tuning, is the throughput knob
+    // (README "size the admission knobs").
+    Stages.time("sink.cache_build")(cached.count())
+    val (deduped, payload) = Stages.time("sink.prologue")(
+      flushPrologue(cached, batchId, responseHandler, esMajor, typeName))
+    val errors = Stages.time("sink.ship")(ship(payload))
+    // R3 per-index action counters (metric.go:56-96): one tiny agg over
+    // the cached batch after the flush succeeds. At-least-once like the
+    // reference (its counters bump in handleResponse BEFORE the LSN ack,
+    // bulk.go:392-411 vs 271-276): a crash between flush and checkpoint
+    // commit replays the batch and re-counts it.
+    Stages.time("sink.metrics_agg")(
+      deduped.groupBy("index_name", "action_type").count().collect()
+        .foreach(r => Metrics.record(r.getString(0), r.getString(1), r.getLong(2))))
+    Stages.time("sink.demux")(
+      handleResponseByEventId(deduped, errors, responseHandler, batchId))
   }
 
   /** A batch write ≙ one flush (bulk.go:253-278) as NDJSON payload files:

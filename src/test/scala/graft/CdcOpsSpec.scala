@@ -113,6 +113,25 @@ class CdcOpsSpec extends SparkSuite {
       .agg(sum("n_actions")).as[Long].head() == 2L)
   }
 
+  test("T8/B2/B5 ordinal ops: the caller's Scratch.scope releases their slim cache") {
+    // each op caches a slim projection its two-pass ordinals re-read;
+    // unscoped, every call leaves one CacheManager entry and one
+    // persistent RDD behind for the life of the session
+    val actions = (1L to 40L).map(i =>
+      (i, "index", s"d${i % 7}", if (i % 3 == 0) "orders_idx" else "users_idx", "{}"))
+      .toDF("event_id", "action_type", "doc_id", "index_name", "source")
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "chunkSplit" -> (CdcOps.chunkSplit(_, 8)),
+      "batchAccumulate" -> (CdcOps.batchAccumulate(_, 8)),
+      "concurrentPartition" -> (CdcOps.concurrentPartition(_, 3))
+    ).foreach { case (name, op) =>
+      val before = cacheFootprint
+      val rows = org.apache.spark.sql.graftext.Scratch.scope(op(actions).collect())
+      assert(rows.nonEmpty, name)
+      assert(cacheFootprint === before, s"$name left its slim cache behind")
+    }
+  }
+
   test("B1 LWW dedup keeps the LATEST action per (doc_id, index) preserving key set") {
     val actions = Seq(
       (1L, "index", "7", "users_idx", "v1"),

@@ -194,7 +194,7 @@ class IncCleanStreamSpec extends SparkSuite {
       .map(r => s"${r.id}:${r.name}:${r.getStorageLevel}:${r.toString}")
     assert(leaked.isEmpty,
       s"patch scratch must release after each batch; leaked: $detail")
-    assert(graft.ops.CorpusOps.pendingPatchScratch === 0,
+    assert(org.apache.spark.sql.graftext.Scratch.pending === 0,
       "the scratch registry must be empty after release")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import graft.ops.CorpusOps
 
 /** The incremental corpus rebuild's equivalence contract:
@@ -148,24 +149,25 @@ class IncrementalCleanSpec extends SparkSuite {
     def corpusDf = cur.toSeq.map { case (id, (t, s)) => (id, t, s) }
       .toDF("doc_id", "text", "source")
     var prev = corpusDf
-    var state = CorpusOps.cleanState(prev)
-    for (day <- 1 to 9) {
-      // deterministic disjoint churn: one edit, one delete, one add
-      val editId = 3L * day
-      if (cur.contains(editId))
-        cur(editId) = (cur(editId)._1 + s" day $day edit", cur(editId)._2)
-      cur.remove(100L + day)
-      cur(900000L + day) = (en(s"fresh arrival on day $day"), "s0")
-      val nxt = corpusDf
-      val (inc, st) = CorpusOps.cleanCorpusIncremental(
-        nxt, state, CorpusOps.corpusDiff(prev, nxt))
-      if (day == 4 || day == 9)
-        assert(rows(inc) === rows(CorpusOps.cleanCorpus(nxt)),
-          s"chained patch diverged from the rebuild at day ${day + 1}")
-      prev = nxt
-      state = st
+    Scratch.scope {
+      var state = CorpusOps.cleanState(prev)
+      for (day <- 1 to 9) {
+        // deterministic disjoint churn: one edit, one delete, one add
+        val editId = 3L * day
+        if (cur.contains(editId))
+          cur(editId) = (cur(editId)._1 + s" day $day edit", cur(editId)._2)
+        cur.remove(100L + day)
+        cur(900000L + day) = (en(s"fresh arrival on day $day"), "s0")
+        val nxt = corpusDf
+        val (inc, st) = CorpusOps.cleanCorpusIncremental(
+          nxt, state, CorpusOps.corpusDiff(prev, nxt))
+        if (day == 4 || day == 9)
+          assert(rows(inc) === rows(CorpusOps.cleanCorpus(nxt)),
+            s"chained patch diverged from the rebuild at day ${day + 1}")
+        prev = nxt
+        state = st
+      }
     }
-    CorpusOps.releasePatchScratch()
   }
 
   test("persisted state round-trip: the disk-loaded base patches identically") {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 
 import ProbeStages.stage
 
@@ -26,7 +27,7 @@ object PatchStageProbe {
     // warm the JVM/page cache once
     noop(docs.select(count(lit(1))))
 
-    if (which("small")) {
+    if (which("small")) Scratch.scope {
       println("== corpus_clean_incremental_small ==")
       val v2 = docs.filter(col("doc_id") % 97 =!= 0)
         .withColumn("text", when(col("doc_id") % 89 === 0,
@@ -38,9 +39,8 @@ object PatchStageProbe {
         graft.ops.CorpusOps.cleanCorpusIncrementalInSet(
           spark, v2, st, bands, diff)._1)
       stage("clean_noop")(noop(out))
-      graft.ops.CorpusOps.releasePatchScratch()
     }
-    if (which("inc")) {
+    if (which("inc")) Scratch.scope {
       println("== corpus_clean_incremental ==")
       val v1 = docs.filter(col("doc_id") % 7 =!= 0)
       val v2 = docs.filter(col("doc_id") % 5 =!= 0)
@@ -51,9 +51,8 @@ object PatchStageProbe {
         graft.ops.CorpusOps.cleanCorpusIncremental(
           v2, st, graft.ops.CorpusOps.corpusDiff(v1, v2))._1)
       stage("clean_noop")(noop(out))
-      graft.ops.CorpusOps.releasePatchScratch()
     }
-    if (which("decontam")) {
+    if (which("decontam")) Scratch.scope {
       println("== corpus_clean_incremental_decontam ==")
       val isBench = col("source") === graft.ops.PretrainOps.BenchmarkSource
       val v1 = docs.filter(col("doc_id") % 7 =!= 0 || isBench)
@@ -66,7 +65,6 @@ object PatchStageProbe {
         graft.ops.CorpusOps.cleanCorpusIncrementalDecontam(
           v2, st, graft.ops.CorpusOps.corpusDiff(v1, v2))._1)
       stage("clean_noop")(noop(out))
-      graft.ops.CorpusOps.releasePatchScratch()
     }
     spark.stop()
   }

@@ -511,6 +511,7 @@ class PgOutputSpec extends SparkSuite {
       framesDf(frames).withColumn("seq", col("seq") + lit(1000L * s))
         .coalesce(1).write.mode("append").parquet(cap)
 
+    val footprint0 = cacheFootprint
     for (s <- 0 until 10) {
       val base: Seq[Array[Byte]] =
         Seq(xlog(100, 900 + s, T0, begin(900L + s, T0 + s, 100 + s)))
@@ -539,6 +540,9 @@ class PgOutputSpec extends SparkSuite {
       // registry must carry through the persisted state every time
       awaitDone(PgCaptureStream.run(spark, cap, bulk, dlq, ckpt, mapping))
     }
+    // ten batches, each caching its raw frames and two sink frames: every
+    // one released with its batch (no CacheManager entry or RDD left)
+    assert(cacheFootprint === footprint0, "the capture stream must stay flat")
     import scala.jdk.CollectionConverters._
     val nd = Files.walk(java.nio.file.Paths.get(bulk)).iterator().asScala
       .filter(p => p.getFileName.toString.startsWith("part-") &&

@@ -61,4 +61,11 @@ abstract class SparkSuite extends AnyFunSuite {
       val done = q.awaitTermination(ms)
       assert(done, s"stream did not terminate within ${ms}ms")
     } finally { if (q.isActive) q.stop() }
+
+  /** (CacheManager entries, persistent RDD ids) right now — a scoped op
+    * or a drained stream must leave both as it found them.
+    */
+  def cacheFootprint: (Int, Set[Int]) =
+    (org.apache.spark.sql.graftext.CheckpointBlocks.cacheEntryCount(spark),
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
 }

@@ -338,9 +338,12 @@ class StreamingPipelineSpec extends SparkSuite {
     stage(eventsDir, 1L to 3L)
     stage(eventsDir, 4L to 6L)
     val before = Stages.snapshot()
+    val footprint0 = cacheFootprint
     val q = runPipeline(eventsDir, tmp("graft-stages-bulk"),
       tmp("graft-stages-dlq"), tmp("graft-stages-ckpt"))
     awaitDone(q)
+    assert(cacheFootprint === footprint0,
+      "each flush releases its two caches with its scope")
     val gained = Stages.since(before).filter(_._1.startsWith("sink."))
     val addBatchMs = q.recentProgress.toSeq
       .flatMap(p => Option(p.durationMs.get("addBatch")).map(_.longValue))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 
 import ProbeStages.stage
 
@@ -91,7 +92,7 @@ object XScaleProbe {
           graft.ops.CorpusOps.writeDecontamState(st, "xs", stateDir)
         }
         faceFiles()
-      case "patch" =>
+      case "patch" => Scratch.scope {
         graft.ops.CorpusOps.registerCleanState(spark, "xs", stateDir)
         faceFiles()
         val diff = graft.ops.CorpusOps.corpusDiff(v1, v2).cache()
@@ -107,7 +108,7 @@ object XScaleProbe {
           bit_xor(xxhash64(col("doc_id"), col("n_tokens"), col("quality"),
             col("detected_lang"))).as("h")).collect()(0)
         println(s"OUT n=${chk.getLong(0)} checksum=${chk.getLong(1)}")
-        graft.ops.CorpusOps.releasePatchScratch()
+      }
     }
     spark.stop()
   }
