@@ -2516,11 +2516,8 @@ object PretrainOps {
     * broadcast — the scores materialize once ([[pplScored]], shared
     * with the value variant in-session), ONE per-source window carries
     * rank and count together, and the bucket label is an in-row CASE.
+    * Takes the shared score table (see [[qualityPerplexityBucketsOn]]).
     */
-  def qualityPerplexityBucketsRank(docs: DataFrame): DataFrame =
-    qualityPerplexityBucketsRankOn(pplScored(docs))
-
-  /** Shared-score-table form (see [[qualityPerplexityBucketsOn]]). */
   def qualityPerplexityBucketsRankOn(scored: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source")

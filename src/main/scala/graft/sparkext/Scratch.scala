@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftext
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.storage.StorageLevel
 
@@ -35,7 +36,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object Scratch {
 
-  /** `pinned`: handed over materialized, so its checkpoint blocks go too. */
+  /** `pinned`: handed over materialized, so the checkpoint blocks at its
+    * root (if any) go too.
+    */
   private final case class Frame(df: DataFrame, pinned: Boolean)
 
   /** This thread's open scopes, innermost first. */
@@ -61,7 +64,10 @@ object Scratch {
   /** `df.cache()`, owned by the innermost open scope. */
   def cache(df: DataFrame): DataFrame = register(Frame(df.cache(), pinned = false))
 
-  /** A materialized frame (cache or checkpoint), owned by the innermost scope. */
+  /** A materialized frame (cache or checkpoint), owned by the innermost
+    * scope. Only a checkpoint AT the frame's root is its own: a cache over
+    * a caller's `localCheckpoint` frees the cache, never the caller's pin.
+    */
   def keep(df: DataFrame): DataFrame = register(Frame(df, pinned = true))
 
   /** Start the query `start` builds; the frames registered while building
@@ -96,6 +102,12 @@ object Scratch {
   private def release(frames: collection.Seq[Frame]): Unit =
     frames.reverseIterator.foreach { f =>
       if (f.df.storageLevel != StorageLevel.NONE) f.df.unpersist(blocking = false)
-      if (f.pinned) CheckpointBlocks.unpersist(f.df)
+      if (f.pinned) f.df.queryExecution.analyzed match {
+        // straight to the context: every read of the frame ran inside the
+        // scope, so RDD.unpersist's "cannot be recomputed" warning is moot
+        case lr: LogicalRDD =>
+          lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
+        case _ => ()
+      }
     }
 }

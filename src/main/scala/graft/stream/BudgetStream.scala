@@ -1,9 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.ops.{PretrainOps, TextOps}
 
@@ -36,12 +35,6 @@ import graft.ops.{PretrainOps, TextOps}
   */
 object BudgetStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
-
   /** In-batch order: a micro-batch is a SET of file rows with no
     * inherent arrival order, so inside a batch the stream uses the
     * batch operator's own deterministic (bucket, doc_id) order — which
@@ -52,19 +45,9 @@ object BudgetStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-budget-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val totalsRoot = s"$outDir/_totals"
-        val prior = VersionedState.latestBefore(spark, totalsRoot, batchId)
-          .map(spark.read.parquet(_))
-
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "budget-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      VersionedState.fold(spark, s"$outDir/_totals", batchId) { prior =>
         import org.apache.spark.sql.expressions.Window
         val inBatch = Window.partitionBy("source").orderBy("bucket", "doc_id")
           .rowsBetween(Window.unboundedPreceding, -1)
@@ -93,12 +76,9 @@ object BudgetStream {
         // one tokenization pass — review round-9)
         val batchTotals = t.groupBy("source")
           .agg(sum("n_tok").as("seen_tokens"))
-        val merged = prior.fold(batchTotals)(p =>
+        prior.fold(batchTotals)(p =>
           p.unionByName(batchTotals).groupBy("source")
-            .agg(sum("seen_tokens").as("seen_tokens")))
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(totalsRoot, batchId))
-        ()
+            .agg(sum("seen_tokens").as("seen_tokens"))).coalesce(1)
       }
-      .start()
+    }
 }

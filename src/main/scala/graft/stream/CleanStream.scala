@@ -54,11 +54,7 @@ object CleanStream {
       checkpointDir: String,
       benchGrams: Option[DataFrame] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    runFrom(spark,
-      spark.readStream
-        .schema(DedupStream.docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docsDir),
+    runFrom(spark, Leg.files(spark, DedupStream.docSchema, docsDir),
       outDir, checkpointDir, benchGrams, trigger)
 
   /** [[run]] over ANY streaming document source (file arrival, the
@@ -76,92 +72,83 @@ object CleanStream {
       benchGrams: Option[DataFrame] = None,
       trigger: Trigger = Trigger.AvailableNow(),
       onSurvivors: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
-    source
-      .writeStream
-      .queryName(s"graft-clean-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hashesRoot = s"$outDir/_hashes"
-        val priorDirs = VersionedState.allBefore(spark, hashesRoot, batchId)
-        val prior =
-          if (priorDirs.isEmpty) None
-          else Some(spark.read.parquet(priorDirs: _*)
-            .withColumn("in_prior", lit(true)))
+    Leg.start(source, "clean-stream", checkpointDir, trigger) { (batch, batchId) =>
+      val hashesRoot = s"$outDir/_hashes"
+      val priorDirs = VersionedState.allBefore(spark, hashesRoot, batchId)
+      val prior =
+        if (priorDirs.isEmpty) None
+        else Some(spark.read.parquet(priorDirs: _*)
+          .withColumn("in_prior", lit(true)))
 
-        // gates: the batch pipeline's own expressions, in-row
-        val (_, quality) = TextOps.qualityCols(col("text"))
-        val flagged = batch
-          .withColumn("fail_quality", quality < CorpusOps.QualityThreshold)
-          .withColumn("fail_lang",
-            !TextOps.detectLang(col("text")).isin(CorpusOps.AcceptedLangs: _*))
-          .withColumn("gated", !col("fail_quality") && !col("fail_lang"))
-          .withColumn("content_hash",
-            when(col("gated"), DedupOps.normalizedContentHash))
+      // gates: the batch pipeline's own expressions, in-row
+      val (_, quality) = TextOps.qualityCols(col("text"))
+      val flagged = batch
+        .withColumn("fail_quality", quality < CorpusOps.QualityThreshold)
+        .withColumn("fail_lang",
+          !TextOps.detectLang(col("text")).isin(CorpusOps.AcceptedLangs: _*))
+        .withColumn("gated", !col("fail_quality") && !col("fail_lang"))
+        .withColumn("content_hash",
+          when(col("gated"), DedupOps.normalizedContentHash))
 
-        // in-batch rep = min doc_id per hash among GATED rows; ungated
-        // rows get a singleton partition key (a shared NULL partition
-        // would funnel every rejected doc of the batch into one task)
-        val w = Window
-          .partitionBy(coalesce(col("content_hash"),
-            concat(lit("ungated:"), col("doc_id").cast("string"))))
-          .orderBy(col("doc_id"))
-        val ranked = flagged.withColumn("rn",
-          when(col("gated"), row_number().over(w)))
-        // prior is O(distinct ingested content) — NO broadcast hint; AQE
-        // broadcasts small early state and shuffle-joins once it grows
-        Scratch.scope {
-          // cached: feeds the contamination probe + three writes
-          val base = Scratch.cache(prior.fold(ranked.withColumn("in_prior", lit(false)))(p =>
-            ranked.join(p, Seq("content_hash"), "left")
-              .withColumn("in_prior", coalesce(col("in_prior"), lit(false))))
-            .withColumn("dup_exact", col("gated") && (col("rn") > 1 || col("in_prior"))))
-          // contamination: any production-width gram in the benchmark
-          // set — hit lists are per-mille, broadcast them back
-          val withContam = benchGrams match {
-            case Some(bg) =>
-              val hits = base.filter(col("gated"))
-                .select(col("doc_id"), explode_outer(
-                  PretrainOps.decontamGrams(PretrainOps.DecontamGramProd)).as("g"))
-                .filter(col("g").isNotNull)
-                .join(broadcast(bg), "g")
-                .select("doc_id").distinct()
-                .withColumn("is_contam", lit(true))
-              base.join(broadcast(hits), Seq("doc_id"), "left")
-                .withColumn("contaminated",
-                  coalesce(col("is_contam"), lit(false)))
-            case None => base.withColumn("contaminated", lit(false))
-          }
-          val classified = withContam.withColumn("keep",
-            col("gated") && !col("dup_exact") && !col("contaminated"))
-          // reasons audit: one row per INPUT doc (overwrite = replay-safe)
-          classified
-            .select(col("doc_id"), col("fail_quality"), col("fail_lang"),
-              col("dup_exact"), col("contaminated"), col("keep"))
-            .withColumn("batch_id", lit(batchId))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/reasons/batch_$batchId")
-          // the cleaned corpus shard
-          classified.filter(col("keep"))
-            .select("doc_id", "text")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch_$batchId")
-          // downstream fan-out (e.g. the ES bulk sink) INSIDE the batch:
-          // a hook failure fails the batch → checkpoint replay, and the
-          // downstream idempotent-batch contract absorbs the re-run
-          onSurvivors(classified.filter(col("keep"))
-            .select("doc_id", "text"), batchId)
-          // state delta: this batch's NEW gated first-occurrence hashes.
-          // Gated reps, not survivors: the batch operator dedups before
-          // decontamination, so a later copy of a contaminated-and-
-          // removed doc is still a duplicate.
-          base
-            .filter(col("content_hash").isNotNull && !col("dup_exact"))
-            .select(col("content_hash")).distinct()
-            .coalesce(1).write.mode("overwrite")
-            .parquet(VersionedState.versionDir(hashesRoot, batchId))
-        }
-        ()
+      // in-batch rep = min doc_id per hash among GATED rows; ungated
+      // rows get a singleton partition key (a shared NULL partition
+      // would funnel every rejected doc of the batch into one task)
+      val w = Window
+        .partitionBy(coalesce(col("content_hash"),
+          concat(lit("ungated:"), col("doc_id").cast("string"))))
+        .orderBy(col("doc_id"))
+      val ranked = flagged.withColumn("rn",
+        when(col("gated"), row_number().over(w)))
+      // prior is O(distinct ingested content) — NO broadcast hint; AQE
+      // broadcasts small early state and shuffle-joins once it grows
+      // cached: feeds the contamination probe + three writes
+      val base = Scratch.cache(prior.fold(ranked.withColumn("in_prior", lit(false)))(p =>
+        ranked.join(p, Seq("content_hash"), "left")
+          .withColumn("in_prior", coalesce(col("in_prior"), lit(false))))
+        .withColumn("dup_exact", col("gated") && (col("rn") > 1 || col("in_prior"))))
+      // contamination: any production-width gram in the benchmark
+      // set — hit lists are per-mille, broadcast them back
+      val withContam = benchGrams match {
+        case Some(bg) =>
+          val hits = base.filter(col("gated"))
+            .select(col("doc_id"), explode_outer(
+              PretrainOps.decontamGrams(PretrainOps.DecontamGramProd)).as("g"))
+            .filter(col("g").isNotNull)
+            .join(broadcast(bg), "g")
+            .select("doc_id").distinct()
+            .withColumn("is_contam", lit(true))
+          base.join(broadcast(hits), Seq("doc_id"), "left")
+            .withColumn("contaminated",
+              coalesce(col("is_contam"), lit(false)))
+        case None => base.withColumn("contaminated", lit(false))
       }
-      .start()
+      val classified = withContam.withColumn("keep",
+        col("gated") && !col("dup_exact") && !col("contaminated"))
+      // reasons audit: one row per INPUT doc (overwrite = replay-safe)
+      classified
+        .select(col("doc_id"), col("fail_quality"), col("fail_lang"),
+          col("dup_exact"), col("contaminated"), col("keep"))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/reasons/batch_$batchId")
+      // the cleaned corpus shard
+      classified.filter(col("keep"))
+        .select("doc_id", "text")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/batch_$batchId")
+      // downstream fan-out (e.g. the ES bulk sink) INSIDE the batch:
+      // a hook failure fails the batch → checkpoint replay, and the
+      // downstream idempotent-batch contract absorbs the re-run
+      onSurvivors(classified.filter(col("keep"))
+        .select("doc_id", "text"), batchId)
+      // state delta: this batch's NEW gated first-occurrence hashes.
+      // Gated reps, not survivors: the batch operator dedups before
+      // decontamination, so a later copy of a contaminated-and-
+      // removed doc is still a duplicate.
+      base
+        .filter(col("content_hash").isNotNull && !col("dup_exact"))
+        .select(col("content_hash")).distinct()
+        .coalesce(1).write.mode("overwrite")
+        .parquet(VersionedState.versionDir(hashesRoot, batchId))
+    }
 }

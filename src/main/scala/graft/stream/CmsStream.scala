@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 
 import graft.ops.PretrainOps
@@ -31,42 +30,22 @@ import graft.ops.PretrainOps
   */
 object CmsStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
-
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-cms-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_counters"
-        val mine = PretrainOps.cmsCounters(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) => mine.unionByName(spark.read.parquet(prev))
-            .groupBy("r", "b").agg(sum("c").as("c"))
-          case None => mine
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "cms-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      val mine = PretrainOps.cmsCounters(batch)
+      VersionedState.fold(spark, s"$outDir/_counters", batchId) {
+        case Some(prev) =>
+          mine.unionByName(prev).groupBy("r", "b").agg(sum("c").as("c"))
+        case None => mine
       }
-      .start()
+    }
 
   /** Point-query the newest published counter state for `tokens`. */
   def estimate(spark: SparkSession, outDir: String,
-      tokens: Seq[String]): DataFrame = {
-    val root = s"$outDir/_counters"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"CmsStream.estimate: no counter state under $root"))
-    PretrainOps.cmsPointQuery(spark.read.parquet(latest), tokens)
-  }
+      tokens: Seq[String]): DataFrame =
+    PretrainOps.cmsPointQuery(VersionedState.latest(spark,
+      s"$outDir/_counters", "CmsStream.estimate"), tokens)
 }

@@ -36,10 +36,7 @@ object DedupStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
+    Leg.files(spark, docSchema, docsDir)
       .withColumn("content_hash", contentHash)
       .dropDuplicates("content_hash")
       .writeStream
@@ -72,29 +69,20 @@ object DedupStream {
   def runIncrementalDedup(spark: SparkSession, docsDir: String,
       historyDocs: DataFrame, outDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-incremental-dedup-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // cacheIncoming=false: a per-batch cache entry would accumulate
-        // for the life of the query (each batch is a fresh plan); the
-        // history side still caches once (same plan every batch).
-        // Per-batch dir + overwrite, NOT blind append to outDir: a
-        // replayed micro-batch (crash between sink write and checkpoint
-        // commit) must clobber its own partial output, not duplicate
-        // every row of the batch — the same at-least-once idempotence
-        // contract as EsBulkSink.writeBatch
-        graft.ops.DedupOps.dedupAgainstIndex(batch, historyDocs,
-            cacheIncoming = false)
-          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .trigger(trigger)
-      .start()
+    Leg.start(Leg.files(spark, docSchema, docsDir), "incremental-dedup-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      // cacheIncoming=false: a per-batch cache entry would accumulate
+      // for the life of the query (each batch is a fresh plan); the
+      // history side still caches once (same plan every batch).
+      // Per-batch dir + overwrite, NOT blind append to outDir: a
+      // replayed micro-batch (crash between sink write and checkpoint
+      // commit) must clobber its own partial output, not duplicate
+      // every row of the batch — the same at-least-once idempotence
+      // contract as EsBulkSink.writeBatch
+      graft.ops.DedupOps.dedupAgainstIndex(batch, historyDocs,
+          cacheIncoming = false)
+        .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }
 
   /** Streaming decontamination: continuously-arriving documents are
     * checked against a STATIC benchmark corpus via a stream-static
@@ -127,10 +115,7 @@ object DedupStream {
         .filter(col("g").isNotNull)
         .distinct())
       val benchGrams = broadcast(benchGramsCached)
-      spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docsDir)
+      val incoming = Leg.files(spark, docSchema, docsDir)
         .select(col("doc_id"),
           sorted_distinct(word_shingle_hashes(tokens(col("text")),
             PretrainOps.DecontamGram)).as("gs"))
@@ -139,26 +124,21 @@ object DedupStream {
         .select(col("doc_id"), size(col("gs")).cast("long").as("n_grams"),
           explode_outer(col("gs")).as("g"))
         .filter(col("g").isNotNull)
-        .writeStream
-        .queryName(s"graft-decontaminate-stream-${QueryNames.suffix(checkpointDir)}")
-        .option("checkpointLocation", checkpointDir)
-        // join + per-doc agg run INSIDE the micro-batch: a doc's grams all
-        // arrive in one batch (file granularity), so a streaming groupBy
-        // would only add a state store keyed by every doc ever seen —
-        // stateless foreachBatch keeps the query scan-bound
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.join(benchGrams, "g")
-            .groupBy("doc_id", "n_grams")
-            .agg(count(lit(1)).as("n_hits"))
-            .select(col("doc_id"), col("n_grams"), col("n_hits"),
-              (col("n_hits").cast("double") / col("n_grams")).as("contamination"))
-            // per-batch dir + overwrite: replay-idempotent (see
-            // runIncrementalDedup)
-            .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          ()
-        }
-        .trigger(trigger)
-        .start()
+      // join + per-doc agg run INSIDE the micro-batch: a doc's grams all
+      // arrive in one batch (file granularity), so a streaming groupBy
+      // would only add a state store keyed by every doc ever seen —
+      // stateless foreachBatch keeps the query scan-bound
+      Leg.start(incoming, "decontaminate-stream",
+          checkpointDir, trigger) { (batch, batchId) =>
+        batch.join(benchGrams, "g")
+          .groupBy("doc_id", "n_grams")
+          .agg(count(lit(1)).as("n_hits"))
+          .select(col("doc_id"), col("n_grams"), col("n_hits"),
+            (col("n_hits").cast("double") / col("n_grams")).as("contamination"))
+          // per-batch dir + overwrite: replay-idempotent (see
+          // runIncrementalDedup)
+          .write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+      }
     }
   }
 
@@ -200,39 +180,31 @@ object DedupStream {
         hdf.filter(col("df") <= DedupOps.ContainFreqCap).select("g"), "g"))
       val stopGrams = Scratch.cache(hdf.filter(col("df") > DedupOps.ContainFreqCap)
         .select("g"))
-      spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docsDir)
+      val incoming = Leg.files(spark, docSchema, docsDir)
         .select(col("doc_id").as("doc_a"),
           PretrainOps.decontamGrams(DedupOps.ContainGramWords).as("gs"))
         .select(col("doc_a"), size(col("gs")).cast("long").as("n_a"),
           explode_outer(col("gs")).as("g"))
         .filter(col("g").isNotNull)
-        .writeStream
-        .queryName(s"graft-containment-stream-${QueryNames.suffix(checkpointDir)}")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val capped = batch.join(stopGrams, "g")
-            .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
-          val out = batch.join(histIdx, "g")
-            .groupBy("doc_a", "n_a", "doc_b")
-            .agg(count(lit(1)).as("shared"))
-            .join(capped, Seq("doc_a"), "left")
-            .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
-            .withColumn("n_eligible", col("n_a") - col("n_capped"))
-            .filter(col("shared").cast("double") / col("n_eligible")
-              >= DedupOps.ContainThreshold)
-            .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_eligible"),
-              col("n_capped"), col("shared"),
-              (col("shared").cast("double") / col("n_eligible")).as("containment"))
-          // per-batch dir + overwrite: replay-idempotent (see
-          // runIncrementalDedup)
-          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          ()
-        }
-        .trigger(trigger)
-        .start()
+      Leg.start(incoming, "containment-stream",
+          checkpointDir, trigger) { (batch, batchId) =>
+        val capped = batch.join(stopGrams, "g")
+          .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
+        val out = batch.join(histIdx, "g")
+          .groupBy("doc_a", "n_a", "doc_b")
+          .agg(count(lit(1)).as("shared"))
+          .join(capped, Seq("doc_a"), "left")
+          .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
+          .withColumn("n_eligible", col("n_a") - col("n_capped"))
+          .filter(col("shared").cast("double") / col("n_eligible")
+            >= DedupOps.ContainThreshold)
+          .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_eligible"),
+            col("n_capped"), col("shared"),
+            (col("shared").cast("double") / col("n_eligible")).as("containment"))
+        // per-batch dir + overwrite: replay-idempotent (see
+        // runIncrementalDedup)
+        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+      }
     }
   }
 
@@ -280,39 +252,31 @@ object DedupStream {
         .select("fp", "doc_b", "elig_b"))
       val stopFps = Scratch.cache(hdf.filter(col("df") > DedupOps.WinnowFreqCap)
         .select("fp"))
-      spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docsDir)
+      val incoming = Leg.files(spark, docSchema, docsDir)
         .select(col("doc_id").as("doc_a"),
           DedupOps.winnowFingerprints(col("text")).as("fps"))
         .select(col("doc_a"), size(col("fps")).cast("long").as("n_a"),
           explode_outer(col("fps")).as("fp"))
         .filter(col("fp").isNotNull)
-        .writeStream
-        .queryName(s"graft-winnow-stream-${QueryNames.suffix(checkpointDir)}")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val capped = batch.join(stopFps, "fp")
-            .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
-          val out = batch.join(histIdx, "fp")
-            .groupBy("doc_a", "n_a", "doc_b", "elig_b")
-            .agg(count(lit(1)).as("shared"))
-            .join(capped, Seq("doc_a"), "left")
-            .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
-            .withColumn("elig_a", col("n_a") - col("n_capped"))
-            .withColumn("jaccard", col("shared").cast("double") /
-              (col("elig_a") + col("elig_b") - col("shared")))
-            .filter(col("jaccard") >= DedupOps.WinnowThreshold)
-            .select(col("doc_a"), col("doc_b"), col("elig_a"), col("elig_b"),
-              col("n_capped"), col("shared"), col("jaccard"))
-          // per-batch dir + overwrite: replay-idempotent (see
-          // runIncrementalDedup)
-          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          ()
-        }
-        .trigger(trigger)
-        .start()
+      Leg.start(incoming, "winnow-stream",
+          checkpointDir, trigger) { (batch, batchId) =>
+        val capped = batch.join(stopFps, "fp")
+          .groupBy("doc_a").agg(count(lit(1)).as("n_capped"))
+        val out = batch.join(histIdx, "fp")
+          .groupBy("doc_a", "n_a", "doc_b", "elig_b")
+          .agg(count(lit(1)).as("shared"))
+          .join(capped, Seq("doc_a"), "left")
+          .withColumn("n_capped", coalesce(col("n_capped"), lit(0L)))
+          .withColumn("elig_a", col("n_a") - col("n_capped"))
+          .withColumn("jaccard", col("shared").cast("double") /
+            (col("elig_a") + col("elig_b") - col("shared")))
+          .filter(col("jaccard") >= DedupOps.WinnowThreshold)
+          .select(col("doc_a"), col("doc_b"), col("elig_a"), col("elig_b"),
+            col("n_capped"), col("shared"), col("jaccard"))
+        // per-batch dir + overwrite: replay-idempotent (see
+        // runIncrementalDedup)
+        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+      }
     }
   }
 
@@ -362,34 +326,25 @@ object DedupStream {
       val hist = Scratch.cache(assigned(historyEmb)
         .select(col("cluster_id"), col("vec_id").as("vec_b"),
           col("emb_d").as("eb"), col("norm").as("nb")))
-      spark.readStream
-        .schema(embSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(embDir)
-        .writeStream
-        .queryName(s"graft-semantic-dedup-stream-${QueryNames.suffix(checkpointDir)}")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val in = assigned(batch)
-          val sims = in.join(hist, Seq("cluster_id"))
-            .select(col("vec_id"), col("cluster_id"),
-              SimilarityOps.cosine(col("emb_d"), col("norm"),
-                col("eb"), col("nb")).as("sim"))
-            .filter(col("sim") >= DedupOps.SemanticDupThreshold)
-            .groupBy("vec_id")
-            .agg(count(lit(1)).as("n_dups"), max(col("sim")).as("max_sim"))
-          val out = in.select(col("vec_id"), col("cluster_id"))
-            .join(sims, Seq("vec_id"), "left")
-            .select(col("vec_id"), col("cluster_id"),
-              col("n_dups").isNull.as("keep"),
-              coalesce(col("n_dups"), lit(0L)).as("n_dups"), col("max_sim"))
-          // per-batch dir + overwrite: replay-idempotent (see
-          // runIncrementalDedup)
-          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          ()
-        }
-        .trigger(trigger)
-        .start()
+      Leg.start(Leg.files(spark, embSchema, embDir),
+          "semantic-dedup-stream", checkpointDir, trigger) { (batch, batchId) =>
+        val in = assigned(batch)
+        val sims = in.join(hist, Seq("cluster_id"))
+          .select(col("vec_id"), col("cluster_id"),
+            SimilarityOps.cosine(col("emb_d"), col("norm"),
+              col("eb"), col("nb")).as("sim"))
+          .filter(col("sim") >= DedupOps.SemanticDupThreshold)
+          .groupBy("vec_id")
+          .agg(count(lit(1)).as("n_dups"), max(col("sim")).as("max_sim"))
+        val out = in.select(col("vec_id"), col("cluster_id"))
+          .join(sims, Seq("vec_id"), "left")
+          .select(col("vec_id"), col("cluster_id"),
+            col("n_dups").isNull.as("keep"),
+            coalesce(col("n_dups"), lit(0L)).as("n_dups"), col("max_sim"))
+        // per-batch dir + overwrite: replay-idempotent (see
+        // runIncrementalDedup)
+        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+      }
     }
   }
 
@@ -428,29 +383,21 @@ object DedupStream {
       val histIdx = Scratch.cache(banded(historySig)
         .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
           col("band_idx"), col("band_val")))
-      spark.readStream
-        .schema(payloadSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inDir)
+      val incoming = Leg.files(spark, payloadSchema, inDir)
         .transform(sigFn)
-        .writeStream
-        .queryName(s"graft-$nameTag-stream-${QueryNames.suffix(checkpointDir)}")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val out = banded(batch)
-            .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
-              col("band_idx"), col("band_val"))
-            .join(histIdx, Seq("band_idx", "band_val"))
-            .select(col("doc_a"), col("doc_b"),
-              bit_count(col("sig_a").bitwiseXOR(col("sig_b")))
-                .cast("long").as("hamming"))
-            .filter(col("hamming") <= DedupOps.MaxHamming)
-            .distinct()
-          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          ()
-        }
-        .trigger(trigger)
-        .start()
+      Leg.start(incoming, s"$nameTag-stream",
+          checkpointDir, trigger) { (batch, batchId) =>
+        val out = banded(batch)
+          .select(col("doc_id").as("doc_a"), col("sig").as("sig_a"),
+            col("band_idx"), col("band_val"))
+          .join(histIdx, Seq("band_idx", "band_val"))
+          .select(col("doc_a"), col("doc_b"),
+            bit_count(col("sig_a").bitwiseXOR(col("sig_b")))
+              .cast("long").as("hamming"))
+          .filter(col("hamming") <= DedupOps.MaxHamming)
+          .distinct()
+        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+      }
     }
   }
 
@@ -517,37 +464,29 @@ object DedupStream {
           col("band_idx"), col("band_val")))
       val histCounts = Scratch.cache(histFrames.groupBy(col("doc_id").as("doc_b"))
         .agg(count(lit(1)).as("nf_b")))
-      spark.readStream
-        .schema(payloadSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(videosDir)
+      val incoming = Leg.files(spark, payloadSchema, videosDir)
         .transform(frames)
-        .writeStream
-        .queryName(s"graft-video-vote-stream-${QueryNames.suffix(checkpointDir)}")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val incCounts = batch.groupBy(col("doc_id").as("doc_a"))
-            .agg(count(lit(1)).as("nf_a"))
-          val out = banded(batch)
-            .select(col("doc_id").as("doc_a"), col("frame_idx").as("frame_a"),
-              col("sig").as("dhash_a"), col("band_idx"), col("band_val"))
-            .join(histIdx, Seq("band_idx", "band_val"))
-            .filter(bit_count(col("dhash_a").bitwiseXOR(col("dhash_b")))
-              <= DedupOps.MaxHamming)
-            .select(col("doc_a"), col("doc_b"), col("frame_a"))
-            .distinct()
-            .groupBy(col("doc_a"), col("doc_b"))
-            .agg(count(lit(1)).as("n_matched"))
-            .join(incCounts, "doc_a")
-            .join(histCounts, "doc_b")
-            .select(col("doc_a"), col("doc_b"), col("n_matched"),
-              least(col("nf_a"), col("nf_b")).as("min_frames"))
-            .filter(col("n_matched") * VideoOps.MinFrameVote >= col("min_frames"))
-          out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-          ()
-        }
-        .trigger(trigger)
-        .start()
+      Leg.start(incoming, "video-vote-stream",
+          checkpointDir, trigger) { (batch, batchId) =>
+        val incCounts = batch.groupBy(col("doc_id").as("doc_a"))
+          .agg(count(lit(1)).as("nf_a"))
+        val out = banded(batch)
+          .select(col("doc_id").as("doc_a"), col("frame_idx").as("frame_a"),
+            col("sig").as("dhash_a"), col("band_idx"), col("band_val"))
+          .join(histIdx, Seq("band_idx", "band_val"))
+          .filter(bit_count(col("dhash_a").bitwiseXOR(col("dhash_b")))
+            <= DedupOps.MaxHamming)
+          .select(col("doc_a"), col("doc_b"), col("frame_a"))
+          .distinct()
+          .groupBy(col("doc_a"), col("doc_b"))
+          .agg(count(lit(1)).as("n_matched"))
+          .join(incCounts, "doc_a")
+          .join(histCounts, "doc_b")
+          .select(col("doc_a"), col("doc_b"), col("n_matched"),
+            least(col("nf_a"), col("nf_b")).as("min_frames"))
+          .filter(col("n_matched") * VideoOps.MinFrameVote >= col("min_frames"))
+        out.write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+      }
     }
   }
 }

@@ -39,25 +39,16 @@ object DriftStream {
   def run(spark: SparkSession, embDir: String, outDir: String,
       checkpointDir: String, refMicro: Map[Long, Long],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-      .writeStream
-      .queryName(s"graft-drift-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PretrainOps.embedDriftWith(batch, refMicro)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/b_$batchId")
-        // publish AFTER the table is fully written: flip the pointer to
-        // the completed version (single small file, all-or-nothing) —
-        // readers resolving through `current` never observe a partial dir
-        publishLatest(spark, outDir, batchId)
-        ()
-      }
-      .start()
+    Leg.start(Leg.files(spark, embSchema, embDir), "drift-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      PretrainOps.embedDriftWith(batch, refMicro)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$outDir/b_$batchId")
+      // publish AFTER the table is fully written: flip the pointer to
+      // the completed version (single small file, all-or-nothing) —
+      // readers resolving through `current` never observe a partial dir
+      publishLatest(spark, outDir, batchId)
+    }
 
   /** Flip `outDir/_latest` to name `b_<batchId>` — rename with OVERWRITE
     * (one atomic op; POSIX rename / HDFS overwrite-rename), NOT

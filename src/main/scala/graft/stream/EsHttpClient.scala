@@ -61,20 +61,6 @@ final case class EsHttpConfig(
     requestTimeoutMs: Long = 30000L,
     retryBackoffBaseMs: Long = 50L)
 
-object EsHttpConfig {
-  /** Apply [[graft.conf.EsSinkConfig]]'s transport knobs onto a seeded
-    * transport config — the YAML-parity bridge (a reference user's
-    * elasticsearch section maps field-for-field).
-    */
-  def withSinkConfig(base: EsHttpConfig,
-      es: graft.conf.EsSinkConfig): EsHttpConfig =
-    base.copy(
-      discoverNodesOnStart = !es.disableDiscoverNodesOnStart,
-      discoverNodesIntervalMs = es.discoverNodesInterval.toMillis,
-      maxIdleConnDurationMs =
-        es.maxIdleConnDuration.map(_.toMillis).getOrElse(0L))
-}
-
 final class EsHttpClient(cfg: EsHttpConfig) extends AutoCloseable {
   require(cfg.urls.nonEmpty, "at least one Elasticsearch URL is required")
 

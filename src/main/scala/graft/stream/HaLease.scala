@@ -108,11 +108,6 @@ final class HaLease(dir: String, val instanceId: String, leaseMs: Long)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  def isHeldByLiveOther(nowMs: Long): Boolean =
-    read().exists { case (id, hb) =>
-      id != instanceId && nowMs - hb < leaseMs
-    }
-
   /** Atomically claim the ABSENT lease via `create(overwrite = false)` —
     * the one primitive that is genuinely one-winner on BOTH the local FS
     * and HDFS-like stores (LocalFileSystem.rename onto an existing file

@@ -1,9 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.ops.PretrainOps
 
@@ -30,50 +29,37 @@ object HllStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("source", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-hll-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // COMPACTED running state, not per-batch deltas: b_<id> holds the
-        // max-merge of every batch ≤ id, so each batch reads exactly ONE
-        // prior version (latestBefore) instead of re-merging the whole
-        // history — per-batch I/O stays O(S·HllM) over the stream's life
-        // where the delta form grew quadratically with batch count.
-        // Replay-safe for the same reason the delta form was: a replayed
-        // batch reads only versions strictly below its id (the compacted
-        // state through id−1) and max-merge is idempotent, so re-folding
-        // its own rows reproduces b_<id> exactly (spec-asserted).
-        val regsRoot = s"$outDir/_regs"
-        // b_<id> changed meaning round-9 from per-batch DELTA to
-        // cumulative COMPACTED state. latestBefore on dirs written by
-        // the delta scheme would silently treat one delta as the whole
-        // history (max-merge just yields smaller registers — no error),
-        // so the layout carries a format marker and a resume over
-        // unmarked pre-existing state fails LOUDLY instead.
-        assertCompactedFormat(spark, regsRoot, batchId)
-        val mine = PretrainOps.hllRegisters(batch)
-        val merged = VersionedState.latestBefore(spark, regsRoot, batchId) match {
-          case Some(prev) => mine.unionByName(spark.read.parquet(prev))
-            .groupBy("source", "bucket").agg(max("m").as("m"))
-          case None => mine
-        }
-        merged.write.mode("overwrite").parquet(s"$regsRoot/b_$batchId")
-        // estimate from the WRITTEN state — re-running the merge plan for
-        // a second action would double the aggregation on the ingest path
-        PretrainOps.hllEstimates(spark.read.parquet(s"$regsRoot/b_$batchId"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/estimate/b_$batchId")
-        ()
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "hll-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      // COMPACTED running state, not per-batch deltas: b_<id> holds the
+      // max-merge of every batch ≤ id, so each batch reads exactly ONE
+      // prior version instead of re-merging the whole history —
+      // per-batch I/O stays O(S·HllM) over the stream's life where the
+      // delta form grew quadratically with batch count. Replay-safe for
+      // the same reason the delta form was: a replayed batch reads only
+      // versions strictly below its id (the compacted state through
+      // id−1) and max-merge is idempotent, so re-folding its own rows
+      // reproduces b_<id> exactly (spec-asserted).
+      val regsRoot = s"$outDir/_regs"
+      // b_<id> changed meaning round-9 from per-batch DELTA to
+      // cumulative COMPACTED state. Reading the newest version of dirs
+      // written by the delta scheme would silently treat one delta as
+      // the whole history (max-merge just yields smaller registers — no
+      // error), so the layout carries a format marker and a resume over
+      // unmarked pre-existing state fails LOUDLY instead.
+      assertCompactedFormat(spark, regsRoot, batchId)
+      val mine = PretrainOps.hllRegisters(batch)
+      val regs = VersionedState.fold(spark, regsRoot, batchId) {
+        case Some(prev) => mine.unionByName(prev)
+          .groupBy("source", "bucket").agg(max("m").as("m"))
+        case None => mine
       }
-      .start()
+      // estimate from the WRITTEN state — re-running the merge plan for
+      // a second action would double the aggregation on the ingest path
+      PretrainOps.hllEstimates(regs)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$outDir/estimate/b_$batchId")
+    }
 
   /** Fail loudly when `regsRoot` holds versions written by the retired
     * per-batch-delta layout (no marker file): compacting on top of a

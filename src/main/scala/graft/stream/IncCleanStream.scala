@@ -63,21 +63,14 @@ object IncCleanStream {
   def run(spark: SparkSession, changesDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(changeSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .queryName(s"graft-incclean-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, outDir)
-      }
-      .start()
+    Leg.start(Leg.files(spark, changeSchema, changesDir), "incclean-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, outDir)
+    }
 
-  // one scope per batch: every face the patch returns is durable parquet
-  // by its end, so the patch's scratch frees there (a replay rebuilds it)
+  // one scope per batch, also for a caller outside the leg: every face the
+  // patch returns is durable parquet by its end, so the patch's scratch
+  // frees there (a replay rebuilds it)
   private[graft] def processBatch(spark: SparkSession, batch: DataFrame,
       batchId: Long, outDir: String): Unit = Scratch.scope {
     val docsRoot = s"$outDir/_docs"
@@ -91,54 +84,51 @@ object IncCleanStream {
     // pre-folds on its own sequence column).
     val live = batch.filter(!col("deleted")).select("doc_id", "text", "source")
     var migratedLegacy = false
-    val folded = VersionedState.latestBefore(spark, docsRoot, batchId) match {
-      case Some(prev) =>
-        val prevRaw = spark.read.parquet(prev)
-        // one-time migration (review round-11): a store written by the
-        // pre-snapshot format holds APPEND-ONLY deltas per version
-        // (doc_id,text,source,deleted,batch_id) — detectable by the
-        // tombstone column. Fold ALL prior delta versions once (newest
-        // batch wins per doc, tombstones out) into this batch's
-        // snapshot; every later batch takes the cheap snapshot path.
-        val prevSnap =
-          if (prevRaw.columns.contains("deleted")) {
-            migratedLegacy = true
-            import org.apache.spark.sql.expressions.Window
-            val wLast = Window.partitionBy("doc_id")
-              .orderBy(col("batch_id").desc)
-            spark.read
-              .parquet(VersionedState.allBefore(spark, docsRoot, batchId): _*)
-              .withColumn("rn", row_number().over(wLast))
-              .filter(col("rn") === 1 && !col("deleted"))
-              .select("doc_id", "text", "source")
-          } else prevRaw
-        prevSnap
-          // churn ids are batch-sized — AQE broadcasts the anti-join side
-          .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
-          .unionByName(live)
-      case None => live
-    }
-    // fan the snapshot out before writing (round 12, measured): a
-    // change feed arriving as one file leaves `folded` single-partition,
-    // so the snapshot lands as ONE file and every downstream
-    // corpus-wide scan of it — the whole batch-1 gate+hash+LSH state
-    // build — runs in one task (47.7 s vs 21.6 s at x32). The snapshot
-    // is the corpus artifact every later batch reads; one extra
-    // corpus-sized exchange at write time buys full parallelism on all
-    // of them. On a real cluster with multi-split feeds this shuffle
-    // is the same-sized insurance as DedupOps.fanout.
-    folded.repartition(
+    val docStore = VersionedState.fold(spark, docsRoot, batchId) { prior =>
+      val folded = prior match {
+        case Some(prevRaw) =>
+          // one-time migration (review round-11): a store written by the
+          // pre-snapshot format holds APPEND-ONLY deltas per version
+          // (doc_id,text,source,deleted,batch_id) — detectable by the
+          // tombstone column. Fold ALL prior delta versions once (newest
+          // batch wins per doc, tombstones out) into this batch's
+          // snapshot; every later batch takes the cheap snapshot path.
+          val prevSnap =
+            if (prevRaw.columns.contains("deleted")) {
+              migratedLegacy = true
+              import org.apache.spark.sql.expressions.Window
+              val wLast = Window.partitionBy("doc_id")
+                .orderBy(col("batch_id").desc)
+              spark.read
+                .parquet(VersionedState.allBefore(spark, docsRoot, batchId): _*)
+                .withColumn("rn", row_number().over(wLast))
+                .filter(col("rn") === 1 && !col("deleted"))
+                .select("doc_id", "text", "source")
+            } else prevRaw
+          prevSnap
+            // churn ids are batch-sized — AQE broadcasts the anti-join side
+            .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+            .unionByName(live)
+        case None => live
+      }
+      // fan the snapshot out before writing (round 12, measured): a
+      // change feed arriving as one file leaves `folded` single-partition,
+      // so the snapshot lands as ONE file and every downstream
+      // corpus-wide scan of it — the whole batch-1 gate+hash+LSH state
+      // build — runs in one task (47.7 s vs 21.6 s at x32). The snapshot
+      // is the corpus artifact every later batch reads; one extra
+      // corpus-sized exchange at write time buys full parallelism on all
+      // of them. On a real cluster with multi-split feeds this shuffle
+      // is the same-sized insurance as DedupOps.fanout.
+      folded.repartition(
         spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      .write.mode("overwrite")
-      .parquet(VersionedState.versionDir(docsRoot, batchId))
+    }
     // compaction: snapshots below the replay horizon (current - 1) are
     // unreachable — prune them so the store holds ≤ 2 versions. On the
     // migration batch the prior versions are DELTAS, each load-bearing
     // for a replay of this same batch — skip the prune once; the next
     // batch (prior = a complete snapshot) prunes them all.
     if (!migratedLegacy) VersionedState.prune(spark, docsRoot, batchId - 1)
-    val docStore =
-      spark.read.parquet(VersionedState.versionDir(docsRoot, batchId))
     // 3. patch (or, on the first batch, build) the clean state
     val (clean, next) = VersionedState.latestBefore(spark, stateRoot, batchId) match {
       case Some(prev) =>
@@ -183,10 +173,6 @@ object IncCleanStream {
     * version; identical to batch [[CorpusOps.cleanCorpus]] over the
     * folded document store (spec-asserted, across restarts).
     */
-  def currentClean(spark: SparkSession, outDir: String): DataFrame = {
-    val latest = VersionedState
-      .latestBefore(spark, s"$outDir/clean", Long.MaxValue)
-      .getOrElse(sys.error(s"IncCleanStream: no clean table under $outDir"))
-    spark.read.parquet(latest)
-  }
+  def currentClean(spark: SparkSession, outDir: String): DataFrame =
+    VersionedState.latest(spark, s"$outDir/clean", "IncCleanStream")
 }

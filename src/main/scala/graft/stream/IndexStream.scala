@@ -80,11 +80,7 @@ object IndexStream {
       rows: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : StreamingQuery = {
     guardStreamedDir(spark, indexDir, markerColumn)
-    val batches = spark.readStream
-      .schema(embSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(embDir)
-    rows(batches)
+    rows(Leg.files(spark, embSchema, embDir))
       .writeStream
       .queryName(s"$queryPrefix-${QueryNames.suffix(checkpointDir)}")
       .outputMode("append")

@@ -3,7 +3,6 @@ package graft.stream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.ops.PretrainOps
 
@@ -35,12 +34,6 @@ import graft.ops.PretrainOps
   */
 object ManifestStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
-
   /** Fold two manifests (or a manifest and a batch delta): counts add,
     * multiset checksums XOR. One definition point for the merge algebra.
     */
@@ -52,27 +45,13 @@ object ManifestStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-manifest-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stateRoot = s"$outDir/_manifest"
-        val prior = VersionedState.latestBefore(spark, stateRoot, batchId)
-          .map(spark.read.parquet(_))
-        val delta = PretrainOps.shardChecksums(batch)
-        val merged = prior.fold(delta)(p => fold(p, delta))
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(stateRoot, batchId))
-        // publish the current manifest from the read-back snapshot —
-        // replay-idempotent overwrite, and readers never see a partial fold
-        spark.read.parquet(VersionedState.versionDir(stateRoot, batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
-        ()
-      }
-      .start()
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "manifest-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      val delta = PretrainOps.shardChecksums(batch)
+      val state = VersionedState.fold(spark, s"$outDir/_manifest", batchId)(
+        prior => prior.fold(delta)(p => fold(p, delta)).coalesce(1))
+      // publish the current manifest from the read-back snapshot —
+      // replay-idempotent overwrite, and readers never see a partial fold
+      state.coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
+    }
 }

@@ -28,6 +28,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *
   * `stage_ms_total{stage=…}` is the cumulative wall of each
   * [[graft.obs.Stages]] stage: where a batch's time goes, same scrape.
+  * Every non-CDC leg ([[Leg.start]]) times its micro-batch as
+  * `leg.<stem>.batch` (e.g. `leg.cms-stream.batch`), so the legs show
+  * here although [[Listener]] keeps only the CDC queries' gauges.
   * It lives for the whole process: [[reset]] does not clear it, and
   * [[Connector.metrics]] ([[snapshotFor]]) leaves it out. One batch's
   * walls are the difference of two scrapes around it.

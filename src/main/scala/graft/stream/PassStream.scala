@@ -1,9 +1,8 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.ops.PostTrainOps
 
@@ -32,38 +31,20 @@ import graft.ops.PostTrainOps
   */
 object PassStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
-
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-pass-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_state"
-        val mine = PostTrainOps.passState(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) => mine.unionByName(spark.read.parquet(prev))
-            .groupBy("prompt_id")
-            .agg(sum("n_candidates").as("n_candidates"),
-              sum("n_passing").as("n_passing"))
-          case None => mine
-        }
-        merged.coalesce(1).write.mode("overwrite").parquet(s"$root/b_$batchId")
-        // estimates from the read-back snapshot (stable under re-planning)
-        PostTrainOps.passFromState(spark.read.parquet(s"$root/b_$batchId"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .start()
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "pass-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      val mine = PostTrainOps.passState(batch)
+      val state = VersionedState.fold(spark, s"$outDir/_state", batchId)(prior =>
+        prior.fold(mine)(prev => mine.unionByName(prev)
+          .groupBy("prompt_id")
+          .agg(sum("n_candidates").as("n_candidates"),
+            sum("n_passing").as("n_passing"))).coalesce(1))
+      // estimates from the read-back snapshot (stable under re-planning)
+      PostTrainOps.passFromState(state)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }
 }

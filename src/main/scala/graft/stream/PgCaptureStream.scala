@@ -48,10 +48,7 @@ object PgCaptureStream {
       deadLetterDir: String, checkpointDir: String,
       mapping: Map[String, String], concurrentRequest: Int = 2,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(captureSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(captureDir)
+    Leg.files(spark, captureSchema, captureDir)
       .writeStream
       .queryName(s"graft-pgcapture-${QueryNames.suffix(checkpointDir)}")
       .option("checkpointLocation", checkpointDir)

@@ -31,39 +31,25 @@ object PrefStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(CmsStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-pref-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_state"
-        val mine = PostTrainOps.prefState(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) =>
-            PostTrainOps.mergePrefStates(mine, spark.read.parquet(prev))
-          case None => mine
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        // pair-hygiene index: each batch ALSO appends its docs' simhash
-        // signatures (doc_id, simhash — never text) as its own delta,
-        // the UrlStream append-only discipline: a replayed batch
-        // overwrites only its own version. The batch_id column makes the
-        // read-side fold deterministic when a doc_id is RE-ingested in a
-        // later batch (changed text → changed signature): latest batch
-        // wins, mirroring the doc-store fold — without it the two left
-        // joins in [[pairsNodup]] would fan each affected pair into
-        // duplicate rows and diverge from batch dpoPairsNodup
-        graft.ops.DedupOps.simhashSignature(batch)
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(s"$outDir/_sims", batchId))
-        ()
-      }
-      .start()
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "pref-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      val mine = PostTrainOps.prefState(batch)
+      VersionedState.fold(spark, s"$outDir/_state", batchId)(prior =>
+        prior.fold(mine)(PostTrainOps.mergePrefStates(mine, _)))
+      // pair-hygiene index: each batch ALSO appends its docs' simhash
+      // signatures (doc_id, simhash — never text) as its own delta,
+      // the UrlStream append-only discipline: a replayed batch
+      // overwrites only its own version. The batch_id column makes the
+      // read-side fold deterministic when a doc_id is RE-ingested in a
+      // later batch (changed text → changed signature): latest batch
+      // wins, mirroring the doc-store fold — without it the two left
+      // joins in [[pairsNodup]] would fan each affected pair into
+      // duplicate rows and diverge from batch dpoPairsNodup
+      graft.ops.DedupOps.simhashSignature(batch)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(VersionedState.versionDir(s"$outDir/_sims", batchId))
+    }
 
   /** Current DPO pairs over everything ingested so far. */
   def pairs(spark: SparkSession, outDir: String): DataFrame =
@@ -126,11 +112,6 @@ object PrefStream {
       docs: DataFrame): DataFrame =
     PostTrainOps.advantageAgainst(docs, latestState(spark, outDir))
 
-  private def latestState(spark: SparkSession, outDir: String): DataFrame = {
-    val root = s"$outDir/_state"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"PrefStream: no state under $root"))
-    spark.read.parquet(latest)
-  }
+  private def latestState(spark: SparkSession, outDir: String): DataFrame =
+    VersionedState.latest(spark, s"$outDir/_state", "PrefStream")
 }

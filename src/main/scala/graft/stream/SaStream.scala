@@ -36,44 +36,31 @@ object SaStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(DedupStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-sa-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val docsRoot = s"$outDir/_docs"
-          val saRoot = s"$outDir/_sa"
-          // idempotent corpus accumulation: this batch's docs land in
-          // their own overwrite dir, and the union of b_0..b_id IS the
-          // corpus through id
-          batch.write.mode("overwrite")
-            .parquet(VersionedState.versionDir(docsRoot, batchId))
-          // build the shard from the WRITTEN copy: truncated lineage,
-          // and replays re-read identical bytes
-          val batchDocs = spark.read.parquet(
-            VersionedState.versionDir(docsRoot, batchId))
-          val batchSa = SuffixOps.suffixArray(batchDocs)
-          val merged = VersionedState.latestBefore(spark, saRoot, batchId) match {
-            case Some(prev) =>
-              val allDocs = VersionedState
-                .allBefore(spark, docsRoot, batchId + 1)
-                .map(spark.read.parquet(_))
-                .reduce(_ unionByName _)
-              SuffixOps.mergeShardArrays(
-                Seq(spark.read.parquet(prev), batchSa), allDocs)
-            case None => batchSa
-          }
-          merged.write.mode("overwrite")
-            .parquet(VersionedState.versionDir(saRoot, batchId))
+    Leg.start(Leg.files(spark, DedupStream.docSchema, docsDir), "sa-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val docsRoot = s"$outDir/_docs"
+        // idempotent corpus accumulation: this batch's docs land in
+        // their own overwrite dir, and the union of b_0..b_id IS the
+        // corpus through id
+        batch.write.mode("overwrite")
+          .parquet(VersionedState.versionDir(docsRoot, batchId))
+        // build the shard from the WRITTEN copy: truncated lineage,
+        // and replays re-read identical bytes
+        val batchDocs = spark.read.parquet(
+          VersionedState.versionDir(docsRoot, batchId))
+        val batchSa = SuffixOps.suffixArray(batchDocs)
+        VersionedState.fold(spark, s"$outDir/_sa", batchId) {
+          case Some(prev) =>
+            val allDocs = VersionedState
+              .allBefore(spark, docsRoot, batchId + 1)
+              .map(spark.read.parquet(_))
+              .reduce(_ unionByName _)
+            SuffixOps.mergeShardArrays(Seq(prev, batchSa), allDocs)
+          case None => batchSa
         }
-        ()
       }
-      .start()
+    }
 
   /** The newest compacted array at or below `batchId` (readers resolve
     * the published frontier the same way the stream itself does).

@@ -77,10 +77,7 @@ object SampleStream {
     */
   def reservoirStream(spark: SparkSession, docsDir: String): DataFrame = {
     import spark.implicits._
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
+    Leg.files(spark, docSchema, docsDir)
       .withColumn("h",
         TextOps.tokenHash(concat(lit("resv:"), col("doc_id").cast("string"))))
       .select(col("doc_id"), col("lang"), col("source"), col("h"))
@@ -100,25 +97,13 @@ object SampleStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    reservoirStream(spark, docsDir).writeStream
-      .queryName(s"graft-reservoir-stream-${QueryNames.suffix(checkpointDir)}")
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .start()
+    Leg.start(reservoirStream(spark, docsDir), "reservoir-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      batch.withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }
 
   // ------------------------------------------------------ mixture stream
-
-  val mixSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
 
   /** Streaming domain-mixture admission — the continuous face of
     * [[PretrainOps.sampleMixture]]: each micro-batch's docs are admitted
@@ -150,38 +135,24 @@ object SampleStream {
   def runMixture(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(mixSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-mixture-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val totalsRoot = s"$outDir/_totals"
-        val prior = VersionedState.latestBefore(spark, totalsRoot, batchId)
-          .map(spark.read.parquet(_))
-        val batchStats = PretrainOps.mixTokenTotals(batch)
-        val merged = prior.fold(batchStats)(p =>
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "mixture-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      val batchStats = PretrainOps.mixTokenTotals(batch)
+      val totals = VersionedState.fold(spark, s"$outDir/_totals", batchId)(prior =>
+        prior.fold(batchStats)(p =>
           p.unionByName(batchStats).groupBy("source")
-            .agg(sum("src_tokens").as("src_tokens")))
-        merged.coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(totalsRoot, batchId))
-        // rates from the read-back snapshot (stable under re-planning),
-        // covering the batch's own tokens — the batch operator's algebra
-        val rates = PretrainOps.mixtureRates(
-          spark.read.parquet(VersionedState.versionDir(totalsRoot, batchId)))
-        batch.select(col("doc_id"), col("source"),
-            PretrainOps.mixBucket().as("bucket"))
-          .join(broadcast(rates), "source")
-          .select(col("doc_id"), col("source"), col("bucket"), col("keep_rate"),
-            (col("bucket") < col("keep_rate") * lit(PretrainOps.MixBuckets.toDouble))
-              .as("keep"),
-            (lit(1.0) / col("keep_rate")).as("weight"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        ()
-      }
-      .start()
+            .agg(sum("src_tokens").as("src_tokens"))).coalesce(1))
+      // rates from the read-back snapshot (stable under re-planning),
+      // covering the batch's own tokens — the batch operator's algebra
+      val rates = PretrainOps.mixtureRates(totals)
+      batch.select(col("doc_id"), col("source"),
+          PretrainOps.mixBucket().as("bucket"))
+        .join(broadcast(rates), "source")
+        .select(col("doc_id"), col("source"), col("bucket"), col("keep_rate"),
+          (col("bucket") < col("keep_rate") * lit(PretrainOps.MixBuckets.toDouble))
+            .as("keep"),
+          (lit(1.0) / col("keep_rate")).as("weight"))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+    }
 }

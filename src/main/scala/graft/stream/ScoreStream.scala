@@ -31,11 +31,7 @@ object ScoreStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String, lamMicro: Map[Long, Long],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    runFrom(spark,
-      spark.readStream
-        .schema(DedupStream.docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docsDir),
+    runFrom(spark, Leg.files(spark, DedupStream.docSchema, docsDir),
       outDir, checkpointDir, lamMicro, trigger)
 
   /** [[run]] over ANY streaming document source mapped to the
@@ -44,16 +40,9 @@ object ScoreStream {
   def runFrom(spark: SparkSession, source: DataFrame, outDir: String,
       checkpointDir: String, lamMicro: Map[Long, Long],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source
-      .writeStream
-      .queryName(s"graft-score-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PretrainOps.dsirWeightWith(batch, lamMicro)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outDir/b_$batchId")
-        ()
-      }
-      .start()
+    Leg.start(source, "score-stream", checkpointDir, trigger) { (batch, batchId) =>
+      PretrainOps.dsirWeightWith(batch, lamMicro)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("overwrite").parquet(s"$outDir/b_$batchId")
+    }
 }

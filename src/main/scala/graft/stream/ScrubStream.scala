@@ -24,21 +24,11 @@ object ScrubStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(CmsStream.docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-scrub-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_linedf"
-        TextOps.lineDfCounts(batch)
-          .write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
-      }
-      .start()
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "scrub-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      TextOps.lineDfCounts(batch).write.mode("overwrite")
+        .parquet(VersionedState.versionDir(s"$outDir/_linedf", batchId))
+    }
 
   /** The accumulated line-df table over everything ingested. */
   def currentDf(spark: SparkSession, outDir: String): DataFrame = {

@@ -2,7 +2,6 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.ops.TextOps
 
@@ -25,45 +24,21 @@ import graft.ops.TextOps
   */
 object SketchStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
-
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-sketch-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_sketch"
-        val lv = TextOps.sketchLevels(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) =>
-            TextOps.sketchCompact(lv, Some(spark.read.parquet(prev)))
-          case None => TextOps.sketchCompact(lv, None)
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
-      }
-      .start()
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "sketch-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      VersionedState.fold(spark, s"$outDir/_sketch", batchId)(
+        TextOps.sketchCompact(TextOps.sketchLevels(batch), _))
+    }
 
   /** The query face: estimated percentile points per source from the
     * newest published state — identical output schema (and, by the merge
     * property, identical VALUES) to the batch operator over everything
     * ingested so far.
     */
-  def percentiles(spark: SparkSession, outDir: String): DataFrame = {
-    val root = s"$outDir/_sketch"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"SketchStream.percentiles: no state under $root"))
-    TextOps.sketchPercentiles(spark.read.parquet(latest))
-  }
+  def percentiles(spark: SparkSession, outDir: String): DataFrame =
+    TextOps.sketchPercentiles(VersionedState.latest(spark,
+      s"$outDir/_sketch", "SketchStream.percentiles"))
 }

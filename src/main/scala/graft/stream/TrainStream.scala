@@ -1,9 +1,7 @@
 package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.ops.TextOps
 
@@ -35,47 +33,28 @@ import graft.ops.TextOps
   */
 object TrainStream {
 
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)
-  ))
-
-  private def readWeights(spark: SparkSession, path: String): Map[Long, Long] = {
+  private def readWeights(spark: SparkSession, state: DataFrame): Map[Long, Long] = {
     import spark.implicits._
-    spark.read.parquet(path).select("bucket", "w_micro")
-      .as[(Long, Long)].collect().toMap
+    state.select("bucket", "w_micro").as[(Long, Long)].collect().toMap
   }
 
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-train-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import spark.implicits._
-        val stateRoot = s"$outDir/_weights"
-        val prior = VersionedState.latestBefore(spark, stateRoot, batchId)
-          .map(readWeights(spark, _))
-        val weights = prior.getOrElse(TextOps.seedWeightsMicro)
+    Leg.start(Leg.files(spark, Leg.Docs, docsDir), "train-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      import spark.implicits._
+      val state = VersionedState.fold(spark, s"$outDir/_weights", batchId) { prior =>
+        val weights = prior.map(readWeights(spark, _))
+          .getOrElse(TextOps.seedWeightsMicro)
         val grads = TextOps.qualityLinearTrainStepWith(batch, Some(weights))
           .collect()
           .map(r => r.getAs[Long]("bucket") -> r.getAs[Long]("grad_micro"))
           .toSeq
         val next = TextOps.applyGradient(weights, grads, batch.count())
-        next.toSeq.toDF("bucket", "w_micro")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(stateRoot, batchId))
-        // publish from the read-back snapshot — replay-idempotent overwrite
-        spark.read.parquet(VersionedState.versionDir(stateRoot, batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
-        ()
+        next.toSeq.toDF("bucket", "w_micro").coalesce(1)
       }
-      .start()
+      // publish from the read-back snapshot — replay-idempotent overwrite
+      state.coalesce(1).write.mode("overwrite").parquet(s"$outDir/current")
+    }
 }

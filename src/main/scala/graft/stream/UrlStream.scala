@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -44,33 +44,24 @@ object UrlStream {
   def run(spark: SparkSession, urlsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(urlSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(urlsDir)
-      .writeStream
-      .queryName(s"graft-url-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val seenRoot = s"$outDir/_seen"
-        val inBatch = batch
-          .select(col("doc_id"), TextOps.canonUrl(col("url_raw")).as("url_canon"))
-          .groupBy("url_canon")
-          .agg(min("doc_id").as("rep_doc_id"), count(lit(1)).as("n_in_batch"))
-          .withColumn("h", md5(col("url_canon")))
-        val seenDirs = VersionedState.allBefore(spark, seenRoot, batchId)
-        val fresh =
-          if (seenDirs.isEmpty) inBatch
-          else inBatch.join(spark.read.parquet(seenDirs: _*), Seq("h"), "left_anti")
-        fresh
-          .select(col("url_canon"), col("rep_doc_id"), col("n_in_batch"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
-        fresh.select(col("h"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(VersionedState.versionDir(seenRoot, batchId))
-        ()
-      }
-      .start()
+    Leg.start(Leg.files(spark, urlSchema, urlsDir), "url-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      val seenRoot = s"$outDir/_seen"
+      val inBatch = batch
+        .select(col("doc_id"), TextOps.canonUrl(col("url_raw")).as("url_canon"))
+        .groupBy("url_canon")
+        .agg(min("doc_id").as("rep_doc_id"), count(lit(1)).as("n_in_batch"))
+        .withColumn("h", md5(col("url_canon")))
+      val seenDirs = VersionedState.allBefore(spark, seenRoot, batchId)
+      val fresh =
+        if (seenDirs.isEmpty) inBatch
+        else inBatch.join(spark.read.parquet(seenDirs: _*), Seq("h"), "left_anti")
+      fresh
+        .select(col("url_canon"), col("rep_doc_id"), col("n_in_batch"))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("overwrite").parquet(s"$outDir/batch_$batchId")
+      fresh.select(col("h"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(VersionedState.versionDir(seenRoot, batchId))
+    }
 }

@@ -35,33 +35,17 @@ object ValidateStream {
   def run(spark: SparkSession, docsDir: String, outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(docsDir)
-      .writeStream
-      .queryName(s"graft-validate-stream-${QueryNames.suffix(checkpointDir)}")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = s"$outDir/_rules"
-        val mine = ProfileOps.validateCorpus(batch)
-        val merged = VersionedState.latestBefore(spark, root, batchId) match {
-          case Some(prev) => mine.unionByName(spark.read.parquet(prev))
-            .groupBy("rule").agg(sum("n_violations").as("n_violations"))
-          case None => mine
-        }
-        merged.write.mode("overwrite").parquet(s"$root/b_$batchId")
-        ()
+    Leg.start(Leg.files(spark, docSchema, docsDir), "validate-stream",
+        checkpointDir, trigger) { (batch, batchId) =>
+      val mine = ProfileOps.validateCorpus(batch)
+      VersionedState.fold(spark, s"$outDir/_rules", batchId) {
+        case Some(prev) => mine.unionByName(prev)
+          .groupBy("rule").agg(sum("n_violations").as("n_violations"))
+        case None => mine
       }
-      .start()
+    }
 
   /** The current running rule table over everything ever ingested. */
-  def current(spark: SparkSession, outDir: String): DataFrame = {
-    val root = s"$outDir/_rules"
-    val latest = VersionedState
-      .latestBefore(spark, root, Long.MaxValue)
-      .getOrElse(sys.error(s"ValidateStream.current: no state under $root"))
-    spark.read.parquet(latest)
-  }
+  def current(spark: SparkSession, outDir: String): DataFrame =
+    VersionedState.latest(spark, s"$outDir/_rules", "ValidateStream.current")
 }

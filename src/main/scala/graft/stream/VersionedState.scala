@@ -1,14 +1,14 @@
 package graft.stream
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The versioned-parquet streaming-state convention shared by
-  * [[SampleStream.runMixture]], [[ManifestStream]], [[TrainStream]] and
-  * [[CleanStream]]: per-batch state lands under `root/b_<batchId>`
-  * (overwrite = replay-safe), and a batch READS only versions with id
-  * strictly BELOW its own — a replayed batch must never see its own
-  * partial write. One definition of the lookup, so a fix to the
+/** The versioned-parquet streaming-state convention: per-batch state
+  * lands under `root/b_<batchId>` (overwrite = replay-safe), and a batch
+  * READS only versions with id strictly BELOW its own — a replayed batch
+  * must never see its own partial write. A compacted leg folds through
+  * [[fold]] and answers queries through [[latest]]; append-only deltas
+  * read [[allBefore]]. One definition of the lookup, so a fix to the
   * replay-safety filter or the naming cannot miss a leg.
   */
 object VersionedState {
@@ -39,6 +39,29 @@ object VersionedState {
 
   /** The write-side path for this batch's version. */
   def versionDir(root: String, batchId: Long): String = s"$root/b_$batchId"
+
+  /** One compacted-state step: `step` gets the newest version below
+    * `batchId` (None on the first batch), its result is written as this
+    * batch's version (overwrite), and the written version is read back —
+    * truncated lineage, the same bytes a replay would see. `step` sets
+    * the write layout (e.g. `.coalesce(1)`) and may write the batch's
+    * own outputs before returning the state.
+    */
+  def fold(spark: SparkSession, root: String, batchId: Long)(
+      step: Option[DataFrame] => DataFrame): DataFrame = {
+    val next = step(latestBefore(spark, root, batchId).map(spark.read.parquet(_)))
+    val dir = versionDir(root, batchId)
+    next.write.mode("overwrite").parquet(dir)
+    // the known schema skips a footer-inference job per batch
+    spark.read.schema(next.schema).parquet(dir)
+  }
+
+  /** The newest version under `root`; fails naming `who` and `root`
+    * when no batch has written one yet.
+    */
+  def latest(spark: SparkSession, root: String, who: String): DataFrame =
+    spark.read.parquet(latestBefore(spark, root, Long.MaxValue)
+      .getOrElse(sys.error(s"$who: no state under $root")))
 
   /** Compaction sweep for SNAPSHOT-per-version stores (each `b_<id>` is a
     * full fold, not a delta): delete versions with id < `keepFrom`. A

@@ -4,7 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import graft.ops.PretrainOps
-import graft.stream.{CmsStream, VersionedState}
+import graft.obs.Stages
+import graft.stream.{CmsStream, Metrics, MetricsEndpoint, VersionedState}
 
 /** Cross-batch CMS accumulation: the streamed compacted counters equal
   * the batch sketch over everything ingested, across restarts; the
@@ -37,6 +38,7 @@ class CmsStreamSpec extends SparkSuite {
 
     f1.coalesce(1).write.mode(SaveMode.Append).parquet(docsDir)
     f2.coalesce(1).write.mode(SaveMode.Append).parquet(docsDir)
+    val stagesBefore = Stages.snapshot()
     awaitDone(CmsStream.run(spark, docsDir, outDir, ckpt))
     assert(counterMap(latestCounters(outDir)) ==
       counterMap(PretrainOps.cmsCounters(f1.unionByName(f2))),
@@ -48,6 +50,13 @@ class CmsStreamSpec extends SparkSuite {
     assert(counterMap(latestCounters(outDir)) ==
       counterMap(PretrainOps.cmsCounters(fixture)),
       "post-restart counters must cover everything ever ingested")
+
+    // the leg is on /metrics: one timed batch per file (2, then 1)
+    assert(Stages.since(stagesBefore).get("leg.cms-stream.batch").map(_.calls)
+      === Some(3L))
+    val scrape = MetricsEndpoint.render(Metrics.snapshot())
+    assert(scrape.contains("""graft_stage_ms_total{stage="leg.cms-stream.batch"}"""),
+      scrape)
 
     // the estimate face: never undercounts, and agrees with the batch
     // self-evaluation on the corpus top-K

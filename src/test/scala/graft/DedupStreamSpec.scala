@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
+import graft.obs.Stages
 import graft.stream.DedupStream
 
 /** Cross-batch streaming dedup: duplicates are suppressed across
@@ -47,6 +48,7 @@ class DedupStreamSpec extends SparkSuite {
     Seq((100L, base), (101L, "novel content not seen in history before now " * 4))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode(SaveMode.Append).parquet(docsDir)
+    val stagesBefore = Stages.snapshot()
     val q1 = DedupStream.runIncrementalDedup(spark, docsDir, history, outDir, ckpt)
     awaitDone(q1)
     val got1 = spark.read.parquet(s"$outDir/*")
@@ -68,6 +70,9 @@ class DedupStreamSpec extends SparkSuite {
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got2(102L) == ((Some(10L), false)), s"got $got2")
     assert(got2.keySet == Set(100L, 101L, 102L), "batch 1 rows not re-emitted")
+    // one timed leg batch per run (one file each)
+    assert(Stages.since(stagesBefore).get("leg.incremental-dedup-stream.batch")
+      .map(_.calls) === Some(2L))
   }
 
   test("streaming incremental containment: incoming quote of a history doc is flagged") {

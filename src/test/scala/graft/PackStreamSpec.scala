@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.obs.Stages
 import graft.ops.PretrainOps
 import graft.stream.{CleanStream, PackStream}
 
@@ -51,6 +52,7 @@ class PackStreamSpec extends SparkSuite {
 
     appendPinned(docsDir, f1, 1)
     appendPinned(docsDir, f2, 2)
+    val stagesBefore = Stages.snapshot()
     awaitDone(PackStream.run(spark, docsDir, outDir, ckpt))
     val ingested = f1.unionByName(f2)
     assert(rows(PackStream.packedTable(spark, outDir)) ==
@@ -63,6 +65,9 @@ class PackStreamSpec extends SparkSuite {
     val streamed = PackStream.packedTable(spark, outDir)
     assert(rows(streamed) == rows(PretrainOps.packSequences(fixture)),
       "post-restart pack table must cover everything ever ingested")
+    // one timed leg batch per file across both runs (2, then 1)
+    assert(Stages.since(stagesBefore).get("leg.pack-stream.batch").map(_.calls)
+      === Some(3L))
 
     // fill accounting: the shared manifest aggregation over the streamed
     // table equals the batch sequence_manifest

@@ -85,6 +85,22 @@ class ScratchSpec extends SparkSuite {
     assert(cacheFootprint === before)
   }
 
+  test("keep frees only a pin at its own root: a caller's checkpoint survives a nested scope") {
+    val before = cacheFootprint
+    Scratch.scope {
+      val input = Scratch.keep(spark.range(0, 120).toDF("id").localCheckpoint(true))
+      Scratch.scope {
+        // a patch-style cache over the caller's checkpointed input
+        val patch = Scratch.keep(input.selectExpr("id * 2 AS id2").cache())
+        assert(patch.count() === 120)
+      }
+      assert(input.collect().map(_.getLong(0)).sum === (0L until 120L).sum,
+        "the nested scope must not free the caller's checkpoint blocks")
+    }
+    assert(Scratch.pending === 0)
+    assert(cacheFootprint === before, "the caller's scope frees its own pin")
+  }
+
   test("forQuery frees its frames when start() throws") {
     val before = cacheFootprint
     val ckpt = java.nio.file.Files.createTempDirectory("scratch-ckpt").toString
