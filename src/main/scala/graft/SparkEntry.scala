@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import graft.ops.{AudioOps, BinaryOps, CdcOps, CorpusOps, DedupOps, PgOutputOps, PostTrainOps, PretrainOps, ProfileOps, SessionOps, SimilarityOps, SuffixOps, TextOps, TokenizerOps, VideoOps}
 
 /** Driver contract — see SURVEY.md §7 + the builder prompt.
@@ -79,7 +80,8 @@ object SparkEntry {
     * the write+read round-trip costs more than the intra-query
     * recompute it saves. The 100 TB answer to post-eviction recompute
     * is the parquet checkpoint ([[graft.ops.DedupOps.CheckpointDirConf]]),
-    * not an in-memory re-persist.
+    * not an in-memory re-persist. The build runs [[Scratch.unscoped]]: the
+    * table outlives the key that first reads it, and so must its pins.
     */
   private def cachedFor(cache: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
       s: SparkSession, dir: String)(build: String => DataFrame): DataFrame =
@@ -88,7 +90,7 @@ object SparkEntry {
         prev
       } else {
         if (prev != null) { try prev.unpersist() catch { case _: Exception => () } }
-        build(d)
+        Scratch.unscoped(build(d))
       })
 
   private def docsT(s: SparkSession, dir: String): DataFrame =

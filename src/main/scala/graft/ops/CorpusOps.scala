@@ -152,7 +152,6 @@ object CorpusOps {
     * the shared span table; corpus text never shuffles.
     */
   def corpusToSequences(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // the cleaned corpus is consumed twice (trim input + shard/source
     // join) and its subtree is the whole multi-stage clean pipeline —
     // materialize its ID SET once (exactly what a production pipeline
@@ -1215,47 +1214,23 @@ object CorpusOps {
   def cleanStateDecontam(docs: DataFrame,
       gramWidth: Int = PretrainOps.DecontamGramProd): DecontamState = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
+    // the returned state faces read these, so they go to the caller's
+    // Scratch.scope like cleanState's own rounds
     def trunc(df: DataFrame, name: String): DataFrame =
-      DedupOps.truncateIter(df, s"decontamstate-$runId", name)
+      Scratch.keep(DedupOps.truncateIter(df, s"decontamstate-$runId", name))
     // the three decontam faces are INDEPENDENT of the clean-state build
     // (different pass over the same docs), but each side is a chain of
     // eager checkpoint rounds — overlap them on a second driver thread
-    // (guide §2.6; the [[SimilarityOps.communityRepresentativesOn]]
-    // discipline). cleanState stays on the CALLER thread deliberately:
-    // its rounds register in the caller thread's Scratch.scope. The
-    // decontam truncs register nothing (returned state faces).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val decontamF = Future((
-        trunc(PretrainOps.decontaminate(docs, gramWidth)
+    // (the [[SimilarityOps.communityRepresentativesOn]] discipline);
+    // cleanState stays on the caller thread
+    val ((contamIds, benchIds, benchGrams), cs) = Scratch.overlap {
+      (trunc(PretrainOps.decontaminate(docs, gramWidth)
           .select("doc_id").distinct(), "contam_ids"),
         trunc(docs.filter(col("source") === PretrainOps.BenchmarkSource)
           .select("doc_id"), "bench_ids"),
-        trunc(PretrainOps.benchGramSetOf(docs, gramWidth), "bench_grams")))
-      val cs =
-        try cleanState(docs)
-        catch {
-          case t: Throwable =>
-            // a caller-thread failure must not leak the background chain
-            // (review r14): its eager rounds run to completion on the
-            // pool thread whatever we do — pool.shutdown() cancels
-            // nothing — so drain it and DROP the checkpoint blocks its
-            // truncation rounds pinned; no caller will ever read them
-            try {
-              val (c, b, g) = Await.result(decontamF, Duration.Inf)
-              Seq(c, b, g).foreach(
-                org.apache.spark.sql.graftext.CheckpointBlocks.unpersist)
-            } catch { case _: Throwable => () }
-            throw t
-        }
-      val (contamIds, benchIds, benchGrams) =
-        Await.result(decontamF, Duration.Inf)
-      DecontamState(cs, contamIds, benchIds, benchGrams)
-    } finally pool.shutdown()
+        trunc(PretrainOps.benchGramSetOf(docs, gramWidth), "bench_grams"))
+    }(cleanState(docs))
+    DecontamState(cs, contamIds, benchIds, benchGrams)
   }
 
   /** The FULL published pipeline patched — [[cleanCorpusIncremental]]
@@ -1326,7 +1301,7 @@ object CorpusOps {
     import DedupOps.materialize
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def trunc(df: DataFrame, name: String): DataFrame =
-      DedupOps.truncateIter(df, s"decontaminc-$runId", name)
+      Scratch.keep(DedupOps.truncateIter(df, s"decontaminc-$runId", name))
     val (clean, nextClean) = cleanCore
     val diffM = materialize(diff, "incd_diff")
     val diffIds = diffM.select("doc_id")

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 import org.apache.spark.sql.graftext.ArrayFunctions.{char_gram_hashes, md5_prefix_hashes, minhash_signature, simhash_bits, sliding_min, sorted_distinct, sorted_intersect_size, word_shingle_hashes}
 
 /** Deduplication operators for the training-data pipeline: exact
@@ -26,7 +27,7 @@ import org.apache.spark.sql.graftext.ArrayFunctions.{char_gram_hashes, md5_prefi
   * Hash parity with the DuckDB oracle via [[TextOps.tokenHash]] (md5-based).
   */
 object DedupOps {
-  import TextOps.{sqlTokenHash, sqlTokens, tokenHash, tokens}
+  import TextOps.{sqlTokenHash, sqlTokens, tokens}
 
   /** MinHash parameters: K = Bands × RowsPerBand signature length. */
   val K = 16
@@ -1250,7 +1251,8 @@ object DedupOps {
     * pathological million-hop chains would switch to the alternating
     * small-star/large-star variant — same join shape, O(log d) rounds.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+  def connectedComponents(pairs: DataFrame,
+      maxIter: Int = 50): DataFrame = Scratch.rounds { loop =>
     // per-round lineage truncation: without it the label table's logical
     // plan doubles every round (labels feed both join sides) and a
     // 10-round chain already holds a 2^10-node plan. localCheckpoint
@@ -1265,20 +1267,12 @@ object DedupOps {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def truncate(df: DataFrame, name: String): DataFrame =
       truncateIter(df, s"cc-$runId", name)
-    val edges = truncate(
+    val edges = loop.keep(truncate(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
-      "cc_edges")
+      "cc_edges"))
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
-    // localCheckpoint pins each round's label table in the block manager
-    // for the life of the JVM (clearCache does NOT free it); a round's
-    // checkpoint is dead the moment the NEXT round has materialized —
-    // free it then, or a long-lived session accumulates one pinned RDD
-    // per round per invocation. The FINAL round's checkpoint backs the
-    // returned frame and stays pinned until the caller is done with the
-    // result (parquet-checkpoint mode pins nothing).
-    var spent: DataFrame = null
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
@@ -1287,39 +1281,28 @@ object DedupOps {
           col("dst") === col("dst_id"))
         .groupBy(col("src").as("doc_id"))
         .agg(min(col("label")).as("nlabel"))
-      val next = truncate(
+      val next = loop.next(truncate(
         labels.withColumnRenamed("label", "old")
           .join(neighborMin, Seq("doc_id"), "left")
           .select(col("doc_id"), col("old"),
             least(col("old"), coalesce(col("nlabel"), col("old"))).as("label")),
-        s"cc_labels_${iter % 2}")
+        s"cc_labels_${iter % 2}"))
       changed = next.filter(col("label") =!= col("old")).count()
-      if (spent != null)
-        org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
-      spent = next
       labels = next.drop("old")
       iter += 1
     }
-    // the edge list fed its last join when the final round materialized
-    org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(edges)
     // loud beats silently wrong: an unconverged exit would emit one real
     // component as several fragments (each with its own is_rep=true) and
-    // disagree with the recursive-CTE oracle. Free the final round's
-    // pinned blocks FIRST — nothing backs a result on the throw path,
-    // and localCheckpoint blocks outlive clearCache for the life of the
-    // context (the star variant's failure path does the same)
-    if (changed > 0) {
-      if (spent != null)
-        org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
+    // disagree with the recursive-CTE oracle
+    if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           s"($changed labels still changing) — a component's diameter " +
           "exceeds maxIter; raise it (or switch to the log-diameter " +
           "small-star/large-star variant for pathological chain graphs)")
-    }
-    labels
+    loop.out(labels
       .select(col("label").as("component_id"), col("doc_id"),
-        (col("label") === col("doc_id")).as("is_rep"))
+        (col("label") === col("doc_id")).as("is_rep")))
   }
 
   /** Connected components by alternating small-star/large-star rounds —
@@ -1344,7 +1327,8 @@ object DedupOps {
     * input-shape decision (near-dup graphs are shallow → min-label;
     * chain-like graphs → this).
     */
-  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
+  def connectedComponentsStar(pairs: DataFrame,
+      maxRounds: Int = 30): DataFrame = Scratch.rounds { loop =>
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def truncate(df: DataFrame, name: String): DataFrame =
       truncateIter(df, s"ccstar-$runId", name)
@@ -1366,47 +1350,37 @@ object DedupOps {
           .union(mins.select(col("src"), col("m").as("dst")))
       moved.filter(col("src") =!= col("dst")).distinct()
     }
-    val nodes = truncate(
+    val nodes = loop.keep(truncate(
       bothDirs(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-        .select("src").distinct(), "nodes")
-    var edges = truncate(
+        .select("src").distinct(), "nodes"))
+    var edges = loop.next(truncate(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct(), "edges")
-    var spent: DataFrame = null
+        .filter(col("src") =!= col("dst")).distinct(), "edges"))
     var stable = false
     var round = 0
     while (!stable && round < maxRounds) {
       val next = truncate(star(star(edges, large = true), large = false),
         s"edges_${round % 2}")
-      // set equality via two anti-joins (the frames are O(nodes) by now)
+      // set equality via two anti-joins (the frames are O(nodes) by now);
+      // the check reads the round `next` replaces, so `next` registers
+      // after it
       stable = next.join(edges, Seq("src", "dst"), "left_anti").isEmpty &&
         edges.join(next, Seq("src", "dst"), "left_anti").isEmpty
-      if (spent != null)
-        org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
-      spent = edges
-      edges = next
+      edges = loop.next(next)
       round += 1
     }
-    // the round-(R-1) frame is dead once the loop exits (the result
-    // reads only `nodes` + the FINAL edges); on the failure path free
-    // everything — nothing survives a throw
-    if (spent != null)
-      org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
-    if (!stable) {
-      org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(edges)
-      org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(nodes)
+    if (!stable)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxRounds rounds — " +
           "star contraction is O(log n); this indicates a bug or an " +
           "adversarial id space, not a deep graph")
-    }
     // converged: edges = (node → component min) stars; roots appear only
     // as dst — join the full node set to label roots with themselves
-    nodes
+    loop.out(nodes
       .join(edges.withColumnRenamed("src", "node_id"), col("src") === col("node_id"), "left")
       .select(coalesce(col("dst"), col("src")).as("component_id"),
         col("src").as("doc_id"),
-        (coalesce(col("dst"), col("src")) === col("src")).as("is_rep"))
+        (coalesce(col("dst"), col("src")) === col("src")).as("is_rep")))
   }
 
   /** Near-dup clusters of the corpus: connected components of the

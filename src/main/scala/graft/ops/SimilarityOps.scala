@@ -681,12 +681,13 @@ object SimilarityOps {
     */
   def knnPagerank(emb: DataFrame,
       centroids: Seq[IndexedSeq[Double]] = defaultCentroids): DataFrame =
-    pagerankOn(DedupOps.materialize(knnEdges(emb, centroids), "pr_edges"))
+    pagerankOn(Scratch.keep(
+      DedupOps.materialize(knnEdges(emb, centroids), "pr_edges")))
 
   /** PR over an explicit (already-materialized) edge list — split out so
     * [[communityRepresentatives]] runs LP and PR over ONE knn build.
     */
-  private[graft] def pagerankOn(edges: DataFrame): DataFrame = {
+  private[graft] def pagerankOn(edges: DataFrame): DataFrame = Scratch.rounds { loop =>
     // same per-round truncation as [[labelPropagate]] (review round-10):
     // checkpointed rank/degree tables are sized blocks, so the
     // rank⋈edges⋈degree joins broadcast instead of sort-merging on the
@@ -694,15 +695,14 @@ object SimilarityOps {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def truncate(df: DataFrame, name: String): DataFrame =
       DedupOps.truncateIter(df, s"pr-$runId", name)
-    val outDeg = truncate(
-      edges.groupBy("src").agg(count(lit(1)).as("deg")), "pr_deg")
-    val nodes = truncate(
+    val outDeg = loop.keep(truncate(
+      edges.groupBy("src").agg(count(lit(1)).as("deg")), "pr_deg"))
+    val nodes = loop.keep(truncate(
       edges.select(col("src").as("vec_id"))
         .union(edges.select(col("dst").as("vec_id"))).distinct(),
-      "pr_nodes")
+      "pr_nodes"))
     val teleport = (15L * 1000000L) / 100L
     var pr = nodes.withColumn("pr_micro", lit(1000000L))
-    var spent: DataFrame = null
     for (i <- 1 to PrIters) {
       val contrib = pr
         .join(edges, pr("vec_id") === edges("src"))
@@ -710,22 +710,16 @@ object SimilarityOps {
         .select(col("dst").as("vec_id"),
           expr("pr_micro div deg").as("c"))
         .groupBy("vec_id").agg(sum(col("c")).as("in_sum"))
-      val next = truncate(
+      pr = loop.next(truncate(
         nodes.join(contrib, Seq("vec_id"), "left")
           .select(col("vec_id"),
             (lit(teleport) +
               expr(s"($PrDampNum * coalesce(in_sum, 0)) div 100"))
               .as("pr_micro")),
-        s"pr_rank_${i % 2}")
-      if (spent != null)
-        org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
-      spent = next
-      pr = next
+        s"pr_rank_${i % 2}"))
     }
-    org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(outDeg)
-    org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(nodes)
-    pr.select(col("vec_id"), col("pr_micro"),
-      (col("pr_micro").cast("double") / 1000000.0).as("pr"))
+    loop.out(pr.select(col("vec_id"), col("pr_micro"),
+      (col("pr_micro").cast("double") / 1000000.0).as("pr")))
   }
 
   /** DuckDB twin: the graph CTE is [[sqlKnnGraph]]'s; the five rounds
@@ -802,26 +796,23 @@ object SimilarityOps {
   /** LP over an explicit edge list — split out so the spec can feed a
     * hand-built graph with a known community structure.
     */
-  private[graft] def labelPropagate(knn: DataFrame): DataFrame = {
+  private[graft] def labelPropagate(knn: DataFrame): DataFrame = Scratch.rounds { loop =>
     // per-round lineage truncation (the connectedComponents discipline,
     // review round-10): a cache-backed label table gives AQE no size
     // stats on the iterative lineage, so the mid-pipeline label⋈edges
     // joins fell back to sort-merge; a checkpointed round is a sized
-    // block AQE broadcasts. Same pinned-RDD hygiene: each round's
-    // checkpoint is freed when the next materializes, the final one
-    // backs the returned frame.
+    // block AQE broadcasts.
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def truncate(df: DataFrame, name: String): DataFrame =
       DedupOps.truncateIter(df, s"lp-$runId", name)
-    val edges = truncate(
+    val edges = loop.keep(truncate(
       knn.union(knn.select(col("dst").as("src"), col("src").as("dst")))
         .distinct(),
-      "lp_edges")
+      "lp_edges"))
     var labels = edges.select(col("src").as("vec_id")).distinct()
       .withColumn("label", col("vec_id"))
-    var spent: DataFrame = null
     for (i <- 1 to LpIters) {
-      val next = truncate(
+      labels = loop.next(truncate(
         labels
           .join(edges, labels("vec_id") === edges("src"))
           .groupBy(col("dst"), col("label"))
@@ -829,17 +820,12 @@ object SimilarityOps {
           .groupBy(col("dst"))
           .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
           .select(col("dst").as("vec_id"), (-col("m.nl")).as("label")),
-        s"lp_labels_${i % 2}")
-      if (spent != null)
-        org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
-      spent = next
-      labels = next
+        s"lp_labels_${i % 2}"))
     }
-    org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(edges)
     val sizes = labels.groupBy(col("label"))
       .agg(count(lit(1)).as("n_members"))
-    labels.join(sizes, "label")
-      .select(col("vec_id"), col("label").as("community_id"), col("n_members"))
+    loop.out(labels.join(sizes, "label")
+      .select(col("vec_id"), col("label").as("community_id"), col("n_members")))
   }
 
   /** DuckDB twin: [[sqlKnnPagerank]]'s graph CTEs with the rounds
@@ -904,8 +890,8 @@ object SimilarityOps {
     // because at fixture scale the 8 iterative rounds' fixed per-stage
     // overhead dominates, not the 25k-edge build — the sharing pays at
     // real scale where the blocked pair join is the cost
-    communityRepresentativesOn(DedupOps.materialize(
-      knnEdges(emb, centroids), "cr_edges"))
+    communityRepresentativesOn(Scratch.keep(DedupOps.materialize(
+      knnEdges(emb, centroids), "cr_edges")))
 
   /** The knn graph as a bare (src, dst) edge list — THE shared serving
     * artifact of the graph family: a production deployment builds the
@@ -926,39 +912,18 @@ object SimilarityOps {
     // LP and PR are INDEPENDENT given the edge list, but each is a chain
     // of driver-serialized truncation rounds (3 LP + 5 PR + 3 one-off
     // checkpoints) whose per-round fixed cost dominates at small scale.
-    // Run the two chains on two driver threads (guide §2.6 overlap —
-    // Spark schedules concurrent jobs FIFO and back-fills executors):
-    // identical frames, identical results, the rounds of one chain fill
-    // the scheduling gaps of the other. Measured at sf0.1 x32:
-    // 3.36 s -> 2.18 s. The edge input is materialized/persisted by
-    // every caller, so the two threads share one build.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val lpF = Future(labelPropagate(edges))
-      val prF = Future(pagerankOn(edges))
-      // one chain failing must not leak the other (review r14): the pool
-      // thread runs its eager rounds to completion regardless — drain the
-      // survivor and drop the checkpoint blocks nobody will read
-      def drained(t: Throwable, other: => DataFrame): Nothing = {
-        try org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(other)
-        catch { case _: Throwable => () }
-        throw t
-      }
-      val lp = try Await.result(lpF, Duration.Inf)
-        catch { case t: Throwable => drained(t, Await.result(prF, Duration.Inf)) }
-      val pr = try Await.result(prF, Duration.Inf)
-        catch { case t: Throwable => drained(t, lp) }
-      lp.join(pr.select(col("vec_id"), col("pr_micro")), "vec_id")
-        .groupBy(col("community_id"))
-        .agg(count(lit(1)).as("n_members"),
-          max(struct(col("pr_micro"), (-col("vec_id")).as("nv"))).as("m"))
-        .select(col("community_id"), (-col("m.nv")).as("rep_vec_id"),
-          col("m.pr_micro").as("rep_pr_micro"), col("n_members"))
-    } finally pool.shutdown()
+    // Run the two chains on two driver threads: identical frames,
+    // identical results, the rounds of one chain fill the scheduling gaps
+    // of the other. Measured at sf0.1 x32: 3.36 s -> 2.18 s. The edge
+    // input is materialized/persisted by every caller, so the two threads
+    // share one build.
+    val (lp, pr) = Scratch.overlap(labelPropagate(edges))(pagerankOn(edges))
+    lp.join(pr.select(col("vec_id"), col("pr_micro")), "vec_id")
+      .groupBy(col("community_id"))
+      .agg(count(lit(1)).as("n_members"),
+        max(struct(col("pr_micro"), (-col("vec_id")).as("nv"))).as("m"))
+      .select(col("community_id"), (-col("m.nv")).as("rep_vec_id"),
+        col("m.pr_micro").as("rep_pr_micro"), col("n_members"))
   }
 
   /** DuckDB twin: ONE shared e/g graph prefix, the LP and PR round

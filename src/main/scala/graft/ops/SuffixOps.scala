@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.ArrayFunctions.common_prefix_len
+import org.apache.spark.sql.graftext.Scratch
 
 /** Corpus SUFFIX ARRAY by distributed prefix doubling, and its first
   * consumer — the exact-repeat detector that underpins substring-level
@@ -78,7 +79,7 @@ object SuffixOps {
     * by suffix string (byte order), ties by (doc_id, pos). Output:
     * (sa_rank, doc_id, pos) with 0-based pos.
     */
-  def suffixArray(docs: DataFrame): DataFrame = {
+  def suffixArray(docs: DataFrame): DataFrame = Scratch.rounds { loop =>
     val spark = docs.sparkSession
     import spark.implicits._
     // seed windows in ONE kernel pass per doc (char_windows) — the
@@ -108,24 +109,13 @@ object SuffixOps {
       .zipWithIndex()
       .map { case ((_, w), i) => (w, i) }
       .toDF("w", "r0")
-    var elems = truncate(
+    var elems = loop.next(truncate(
       chars.join(seedRanks, Seq("w"))
         .select(col("doc_id"), col("pos"), col("r0").as("r")),
-      "sa_iter_0")
-    var spent: DataFrame = null
-    val total = elems.count()
-    if (total == 0L) return spark.emptyDataFrame
-      .sparkSession.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("sa_rank",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("pos",
-            org.apache.spark.sql.types.LongType))))
-    val maxLen = docs
-      .agg(max(length(coalesce(col("text"), lit(""))))).head().getInt(0).toLong
+      "sa_iter_0"))
+    // 0 for an empty corpus: no rounds, and the emit yields an empty array
+    val maxLen = docs.agg(coalesce(max(length(coalesce(col("text"), lit("")))),
+      lit(0))).head().getInt(0).toLong
     // fixed ⌈log₂(maxLen/seed)⌉ rounds — no per-round convergence count:
     // the early-exit check cost a job per round and only fires on
     // corpora with NO repeated structure (real text converges in the
@@ -144,23 +134,15 @@ object SuffixOps {
         .sortBy(identity).zipWithIndex()
         .map { case ((a, b), i) => (a, b, i) }
         .toDF("r", "r2", "nr")
-      val next = truncate(
+      elems = loop.next(truncate(
         paired.join(rankedKeys, Seq("r", "r2"))
           .select(col("doc_id"), col("pos"), col("nr").as("r")),
-        s"sa_iter_$k")
-      // free the round that `next` no longer needs (the CC discipline:
-      // localCheckpoint pins blocks for the JVM's life otherwise)
-      if (spent != null)
-        org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
-      spent = elems
-      elems = next
+        s"sa_iter_$k"))
       k *= 2
     }
-    if (spent != null)
-      org.apache.spark.sql.graftext.CheckpointBlocks.unpersist(spent)
     // final emit: ranks order suffix CONTENT; (doc_id, pos) breaks the
     // identical-suffix ties — a unique key, so the sort is deterministic
-    elems.as[(Long, Long, Long)].rdd
+    loop.out(elems).as[(Long, Long, Long)].rdd
       .map { case (d, p, r) => (r, d, p) }
       .sortBy(identity).zipWithIndex()
       .map { case ((_, d, p), i) => (i, d, p) }
@@ -407,22 +389,24 @@ object SuffixOps {
     val docLens = docs.select(col("doc_id"),
       length(coalesce(col("text"), lit(""))).cast("long").as("n"))
     // every (doc_id, pos, window) — the probe table, one kernel pass/doc
-    val wins = DedupOps.materialize(
+    val wins = Scratch.keep(DedupOps.materialize(
       docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
         .select(col("doc_id"),
           posexplode(org.apache.spark.sql.graftext.ArrayFunctions
             .char_windows(col("t"), SaLcpCap)))
         .toDF("doc_id", "pos", "w")
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("w")),
-      "sa_merge_windows")
+      "sa_merge_windows"))
     val entries = sas.zipWithIndex.map { case (sa, i) =>
       sa.select(lit(i).as("shard"), col("sa_rank").as("lr"),
         col("doc_id"), col("pos"))
     }.reduce(_ unionByName _)
       .join(docLens, "doc_id")
     val runId = java.util.UUID.randomUUID().toString.take(8)
+    // every round goes to the caller's scope: the parked frames read
+    // them lazily until the caller's action
     def truncate(df: DataFrame, name: String): DataFrame =
-      DedupOps.truncateIter(df, s"sa-merge-$runId", name)
+      Scratch.keep(DedupOps.truncateIter(df, s"sa-merge-$runId", name))
     // ambiguity of a key-equal group, decided from counts + doc lengths
     def ambiguity(df: DataFrame, off: Long): DataFrame =
       df.groupBy("key").agg(

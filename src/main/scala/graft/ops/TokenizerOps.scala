@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Scratch
 
 /** BPE tokenizer training over the corpus — the step a training-data
   * pipeline runs BEFORE token counting/packing means anything: learn the
@@ -20,7 +21,7 @@ import org.apache.spark.sql.functions._
   * canonical low/lower/newest/widest example.
   */
 object TokenizerOps {
-  import TextOps.{sqlTokens, tokens}
+  import TextOps.sqlTokens
   import DedupOps.fanout
 
   /** Distinct-word frequency table (word, cnt) — one map-side-combined
@@ -294,8 +295,7 @@ object TokenizerOps {
        |    CAST(sum(n_tokens) AS BIGINT) AS n_tokens
        |  FROM per_doc GROUP BY source)""".stripMargin
 
-  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[BpeMerge] = {
-    import org.apache.spark.sql.graftext.CheckpointBlocks
+  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[BpeMerge] = Scratch.rounds { loop =>
     // Each step must TRUNCATE the logical plan, not merely cache:
     // caching truncates execution but every action still re-ANALYZES the
     // full lineage, and an iteration built by withColumn on the previous
@@ -307,12 +307,12 @@ object TokenizerOps {
     // (the connectedComponents loop): eager localCheckpoint locally, the
     // durable parquet round-trip under [[DedupOps.CheckpointDirConf]];
     // both reset analysis to a leaf. Eagerness also means each step is
-    // materialized before its parent's blocks are freed.
+    // materialized before `loop.next` frees its parent's blocks.
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def step(df: DataFrame, name: String): DataFrame =
       DedupOps.truncateIter(df, s"bpe-$runId", name)
-    var vocab = step(
-      wordFreq(docs).withColumn("syms", split(col("word"), "")), "bpe_vocab")
+    var vocab = loop.next(step(
+      wordFreq(docs).withColumn("syms", split(col("word"), "")), "bpe_vocab"))
     val merges = Seq.newBuilder[BpeMerge]
     var i = 0
     var done = false
@@ -323,17 +323,14 @@ object TokenizerOps {
       else {
         val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += BpeMerge(a, b, c)
-        val prev = vocab
         // alternating names: this round's table is read lazily by the
         // NEXT round's eager write, which must not clobber it first
-        vocab = step(
+        vocab = loop.next(step(
           vocab.withColumn("syms", mergePair(col("syms"), a, b)),
-          s"bpe_vocab_${i % 2}")
-        CheckpointBlocks.unpersist(prev)
+          s"bpe_vocab_${i % 2}"))
       }
       i += 1
     }
-    CheckpointBlocks.unpersist(vocab)
     merges.result()
   }
 

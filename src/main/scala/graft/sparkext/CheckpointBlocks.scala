@@ -1,37 +1,21 @@
 package org.apache.spark.sql.graftext
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{CacheManager, CachedData, LogicalRDD}
 import org.apache.spark.sql.execution.columnar.CachedRDDBuilder
 
-/** Block-manager hygiene for `localCheckpoint`-truncated frames and for
-  * per-query measurement isolation in a shared JVM.
+/** Measurement helpers for a shared JVM: the per-query barrier that
+  * drops every cache entry and pinned RDD outside a keep-set, the
+  * CacheManager entry count and storage bytes a flatness check reads,
+  * the memory-pressure drop counter, and a job-free partition probe.
   *
   * `Dataset.localCheckpoint(eager = true)` pins the computed partitions in
   * the block manager for the life of the SparkContext — and, unlike the
-  * SQL cache, `spark.catalog.clearCache()` does NOT free them. An
-  * iterative algorithm that checkpoints per round (connected components)
-  * therefore accumulates one pinned RDD per round; in a shared JVM those
-  * blocks pressure every later query (round 3's bench misattributed ~7 s
-  * to untouched queries exactly this way). These helpers let the loop free
-  * each round's checkpoint as soon as the next round has materialized.
+  * SQL cache, `spark.catalog.clearCache()` does NOT free them, so the
+  * barrier sweeps pinned RDDs by id. Releasing an op's own pins as it
+  * runs is [[Scratch]]'s job, not this object's.
   */
 object CheckpointBlocks {
-
-  /** The pinned RDD behind a `localCheckpoint`'d DataFrame (None for
-    * frames whose plan has no `LogicalRDD` leaf — e.g. the parquet
-    * checkpoint path, where there is nothing to free).
-    */
-  def pinnedRdd(df: DataFrame): Option[RDD[_]] =
-    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
-
-  /** Free the checkpoint blocks behind `df`. Only call once every
-    * consumer of `df` has materialized: the checkpoint truncated the
-    * lineage, so a post-unpersist access cannot recompute.
-    */
-  def unpersist(df: DataFrame): Unit =
-    pinnedRdd(df).foreach { r => r.unpersist(blocking = false); () }
 
   /** The CacheManager's entry list. No public enumerator exists
     * (`clearCache` is all-or-nothing), so the measurement barrier reads

@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 
 /** X3 — active/passive availability (reference README.md:185-198): the
   * reference's deployments watch the Postgres replication SLOT — the

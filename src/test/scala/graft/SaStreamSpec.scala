@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.graftext.Scratch
 import graft.ops.SuffixOps
 
 class SaStreamSpec extends SparkSuite {
@@ -16,9 +17,9 @@ class SaStreamSpec extends SparkSuite {
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
 
   private def directRows(docs: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
-    SuffixOps.suffixArray(docs)
+    Scratch.scope(SuffixOps.suffixArray(docs)
       .select("sa_rank", "doc_id", "pos")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq)
 
   test("streamed merged array == direct build on the union; cross-batch repeat visible; restart continues from compacted state") {
     val docsDir = tmp("sastream-in")
@@ -37,6 +38,7 @@ class SaStreamSpec extends SparkSuite {
       .write.mode(SaveMode.Append).parquet(docsDir)
     b2.toDF("doc_id", "text").coalesce(1)
       .write.mode(SaveMode.Append).parquet(docsDir)
+    val footprint0 = cacheFootprint
     awaitDone(graft.stream.SaStream.run(spark, docsDir, outDir, ckpt))
     val published = graft.stream.SaStream.latestArray(spark, outDir)
     assert(published.isDefined, "no array published")
@@ -54,5 +56,7 @@ class SaStreamSpec extends SparkSuite {
     val streamed2 = saRows(graft.stream.SaStream.latestArray(spark, outDir).get)
     val direct2 = directRows((b1 ++ b2 ++ b3).toDF("doc_id", "text"))
     assert(streamed2 == direct2, "post-restart array must track the union")
+    assert(cacheFootprint === footprint0,
+      "each batch's shard build and merge release with the batch scope")
   }
 }

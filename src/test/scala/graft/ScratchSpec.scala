@@ -9,10 +9,12 @@ import org.apache.spark.storage.StorageLevel
 /** [[Scratch]]'s ownership rules: a scope frees exactly its own frames,
   * last registered first, on return and on throw; `forQuery` frees the
   * frames of a query whose start fails. (Release on termination is
-  * pinned by DedupStreamSpec's persistent-RDD baselines.) Plus the guard
-  * that keeps every scratch cache in `src/main` behind it.
+  * pinned by DedupStreamSpec's persistent-RDD baselines.) Every iterative
+  * op hands a scoped caller its footprint back. Plus the guards that keep
+  * every scratch cache and every release in `src/main` behind it.
   */
 class ScratchSpec extends SparkSuite {
+  import spark.implicits._
 
   /** Cache `df` in the innermost scope and build it; returns the frame
     * and the id of the buffer RDD its build persisted.
@@ -117,12 +119,116 @@ class ScratchSpec extends SparkSuite {
     assert(cacheFootprint === before)
   }
 
-  test("guard: src/main caches only through Scratch, SparkEntry's session tables and DedupOps.materialize") {
-    val Def = """\bdef\s+(\w+)""".r
+  // ---------------------------------------------- iterative op footprint
+
+  private val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (5L, 6L))
+    .toDF("doc_a", "doc_b")
+  private val edges = pairs.toDF("src", "dst")
+  private val saDocs = Seq((1L, "abracadabra"), (2L, "cadabra abra"),
+    (3L, "bra")).toDF("doc_id", "text")
+
+  test("every iterative op hands its scoped caller's footprint back") {
+    import graft.ops.{DedupOps, SimilarityOps, SuffixOps, TokenizerOps}
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "connectedComponents" -> (() => DedupOps.connectedComponents(pairs).collect()),
+      "connectedComponentsStar" -> (() => DedupOps.connectedComponentsStar(pairs).collect()),
+      "labelPropagate" -> (() => SimilarityOps.labelPropagate(edges).collect()),
+      "pagerankOn" -> (() => SimilarityOps.pagerankOn(edges).collect()),
+      "communityRepresentativesOn" ->
+        (() => SimilarityOps.communityRepresentativesOn(edges).collect()),
+      "suffixArray" -> (() => SuffixOps.suffixArray(saDocs).collect()),
+      "mergeShardArrays" -> { () =>
+        val (a, b) = (saDocs.filter("doc_id = 1"), saDocs.filter("doc_id <> 1"))
+        SuffixOps.mergeShardArrays(
+          Seq(SuffixOps.suffixArray(a), SuffixOps.suffixArray(b)), saDocs).collect()
+      },
+      "bpeTrain" -> (() => TokenizerOps.bpeTrain(saDocs, 3)))
+    for ((name, op) <- ops) {
+      val before = cacheFootprint
+      Scratch.scope(op())
+      assert(Scratch.pending === 0)
+      assert(cacheFootprint === before, s"$name left frames behind its caller's scope")
+    }
+  }
+
+  test("a loop that throws releases every round it registered") {
+    import graft.ops.DedupOps
+    val chain = (1L to 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val before = cacheFootprint
+    Scratch.scope {
+      val err = intercept[IllegalStateException](
+        DedupOps.connectedComponents(chain, maxIter = 3))
+      assert(err.getMessage.contains("did not converge in 3 rounds"))
+      assert(Scratch.pending === 0, "nothing passes to the caller on a throw")
+    }
+    assert(cacheFootprint === before)
+  }
+
+  test("unscoped, a loop keeps exactly the round its result reads") {
+    import graft.ops.DedupOps
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val comps = DedupOps.connectedComponents(pairs)
+    assert(comps.collect().length === 6)
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(left.size === 1, s"the last round backs the lazy result, got $left")
+    assert(comps.count() === 6, "the unscoped result stays readable")
+    left.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+  }
+
+  test("overlap: a failing side awaits the other, and the scope frees both") {
+    val before = cacheFootprint
+    val slowSide = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val err = intercept[IllegalStateException] {
+      Scratch.scope {
+        Scratch.overlap {
+          Thread.sleep(300)
+          Scratch.keep(spark.range(0, 40).toDF("id").localCheckpoint(true))
+          slowSide.set(true)
+        } {
+          Scratch.keep(spark.range(0, 30).toDF("id").localCheckpoint(true))
+          throw new IllegalStateException("boom")
+        }
+      }
+    }
+    assert(err.getMessage === "boom")
+    assert(slowSide.get, "the pool side ran to completion before the rethrow")
+    assert(cacheFootprint === before)
+    // on success both sides' frames pass to the caller's scope
+    Scratch.scope {
+      Scratch.overlap(Scratch.keep(spark.range(0, 5).toDF("id").localCheckpoint(true)))(
+        Scratch.keep(spark.range(0, 6).toDF("id").localCheckpoint(true)))
+      assert(Scratch.pending === 2)
+    }
+    assert(cacheFootprint === before)
+  }
+
+  test("unscoped: a session table's pins outlive the scope that builds it") {
+    val before = cacheFootprint
+    val table = Scratch.scope {
+      val t = Scratch.unscoped(
+        Scratch.keep(spark.range(0, 25).toDF("id").localCheckpoint(true)))
+      assert(Scratch.pending === 0, "nothing registers in the caller's scope")
+      t
+    }
+    assert(table.count() === 25, "the pin survives the building scope")
+    val (_, pins) = cacheFootprint
+    (pins -- before._2).foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+    assert(cacheFootprint === before)
+  }
+
+  // ------------------------------------------------------------- guards
+
+  private val Def = """\bdef\s+(\w+)""".r
+
+  /** `src/main` code lines (comments skipped) holding any of `calls`,
+    * except where `allowed(file name, enclosing def, code)` says so.
+    */
+  private def mainHits(calls: String*)(
+      allowed: (String, Option[String], String) => Boolean): Seq[String] = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 10, "the scan must see the main sources")
-    val hits = for {
+    for {
       f <- files
       name = f.getFileName.toString
       if name != "Scratch.scala"
@@ -131,13 +237,30 @@ class ScratchSpec extends SparkSuite {
       code = line.trim
       if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
       stripped = code.split("//", 2)(0)
-      if stripped.contains(".cache()") || stripped.contains(".persist(")
+      if calls.exists(stripped.contains)
       enclosing = lines.take(i + 1).reverseIterator
         .flatMap(l => Def.findFirstMatchIn(l).map(_.group(1))).nextOption()
-      if !(name == "SparkEntry.scala" && stripped.contains(".persist(")) &&
-        !(name == "DedupOps.scala" && enclosing.contains("materialize"))
+      if !allowed(name, enclosing, stripped)
     } yield s"$f:${i + 1}: $code"
+  }
+
+  test("guard: src/main caches only through Scratch, SparkEntry's session tables and DedupOps.materialize") {
+    val hits = mainHits(".cache()", ".persist(") { (name, enclosing, code) =>
+      (name == "SparkEntry.scala" && code.contains(".persist(")) ||
+        (name == "DedupOps.scala" && enclosing.contains("materialize"))
+    }
     assert(hits.isEmpty,
       "scratch caches must go through Scratch.cache/keep:\n" + hits.mkString("\n"))
+  }
+
+  test("guard: src/main pins and releases only through Scratch, the measurement barrier, SparkEntry's session tables and truncateIter") {
+    val hits = mainHits(".unpersist(", ".localCheckpoint(") { (name, enclosing, _) =>
+      Map("CheckpointBlocks.scala" -> "resetForMeasurement",
+        "SparkEntry.scala" -> "cachedFor",
+        "DedupOps.scala" -> "truncateIter").get(name).exists(enclosing.contains)
+    }
+    assert(hits.isEmpty,
+      "checkpoint pins must be registered with Scratch (keep/rounds), never freed by hand:\n" +
+        hits.mkString("\n"))
   }
 }
