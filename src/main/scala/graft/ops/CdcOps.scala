@@ -257,9 +257,12 @@ object CdcOps {
     * key replaces the earlier. Window keyed exactly like the reference —
     * including `routing` when the action layout carries it — ordered by
     * arrival sequence desc; shuffle is by the dedup key, the minimal
-    * possible exchange; AQE handles skewed keys.
+    * possible exchange; AQE handles skewed keys. `extraKey` extends the
+    * key: the sink's flush gives each key-less action one of its own, so
+    * every one survives, while keyed rows (null extra key) dedup as here.
     */
-  def dedupLastWriteWins(actions: DataFrame): DataFrame = {
+  def dedupLastWriteWins(actions: DataFrame,
+      extraKey: Seq[Column] = Nil): DataFrame = {
     val keyCols = Seq(col("doc_id"), col("index_name")) ++
       (if (actions.columns.contains("routing")) Seq(col("routing")) else Nil)
     // secondary order: a handler may emit several actions for one key from
@@ -268,7 +271,7 @@ object CdcOps {
     val orderCols = Seq(col("event_id").desc) ++
       (if (actions.columns.contains("action_ord")) Seq(col("action_ord").desc) else Nil)
     val w = Window
-      .partitionBy(keyCols: _*)
+      .partitionBy(keyCols ++ extraKey: _*)
       .orderBy(orderCols: _*)
     actions
       .withColumn("rn", row_number().over(w))
@@ -469,31 +472,45 @@ object CdcOps {
     * canonical path as index/delete.
     */
   private def encodeMeta(actions: DataFrame, typePart: Column): DataFrame = {
+    val withMeta = actions.withColumn("meta", metaLine(actions, typePart))
+    if (!actions.columns.contains("source")) withMeta
+    else withMeta.withColumn("source", sourceLine)
+  }
+
+  private def metaLine(actions: DataFrame, typePart: Column): Column = {
     val routingPart =
       if (actions.columns.contains("routing"))
         when(col("routing").isNotNull,
           concat(lit(",\"routing\":\""), col("routing"), lit("\"")))
           .otherwise(lit(""))
       else lit("")
-    val withMeta = actions.withColumn(
-      "meta",
-      concat(
-        lit("{\""), col("action_type"), lit("\":{\"_index\":\""),
-        col("index_name"), lit("\""),
-        lit(",\"_id\":\""), escapeDocId(col("doc_id")), lit("\""),
-        routingPart,
-        typePart, lit("}}")
-      )
+    concat(
+      lit("{\""), col("action_type"), lit("\":{\"_index\":\""),
+      col("index_name"), lit("\""),
+      lit(",\"_id\":\""), escapeDocId(col("doc_id")), lit("\""),
+      routingPart,
+      typePart, lit("}}")
     )
-    if (!actions.columns.contains("source")) withMeta
-    else withMeta.withColumn(
-      "source",
-      when(col("action_type") === graft.model.ActionType.ScriptUpdate &&
-          col("source").isNotNull,
-        concat(lit("{\"script\":"), col("source"),
-          lit(",\"scripted_upsert\":true}")))
-        .otherwise(col("source"))
-    )
+  }
+
+  private def sourceLine: Column =
+    when(col("action_type") === graft.model.ActionType.ScriptUpdate &&
+        col("source").isNotNull,
+      concat(lit("{\"script\":"), col("source"),
+        lit(",\"scripted_upsert\":true}")))
+      .otherwise(col("source"))
+
+  /** One action's `_bulk` body lines as a column over `actions`: the
+    * meta line of [[versionGatedMeta]] at a fixed `esMajor`, then the
+    * source line. concat_ws skips NULLs, so a delete is its meta line
+    * alone (bulk.go:231-235). The sink's payload and the rejection-log
+    * payload ship these lines; the frame's own columns stay as they are.
+    */
+  private[graft] def bulkLines(actions: DataFrame, esMajor: Int,
+      typeName: String): Column = {
+    val typePart = if (esMajor < 8) lit(s""","_type":"$typeName"""") else lit("")
+    val source = if (actions.columns.contains("source")) Seq(sourceLine) else Nil
+    concat_ws("\n", metaLine(actions, typePart) +: source: _*)
   }
 
   /** X2 type_version_gate — include `"_type"` in action metadata only when

@@ -457,7 +457,7 @@ object CorpusOps {
     val (nTok, quality) = TextOps.qualityColsWith(col("text"), toks)
     // materialized: feeds both the rep election and the join-back —
     // uncached, the gate+hash scan over the corpus would run twice
-    val gatedRaw = Scratch.keep(DedupOps.materialize(docs
+    val gatedRaw = DedupOps.materializeScoped(docs
       .withColumn("n_tokens", nTok)
       .withColumn("quality", quality)
       .withColumn("detected_lang", TextOps.detectLangWith(toks))
@@ -466,7 +466,7 @@ object CorpusOps {
       .select(col("doc_id"),
         DedupOps.normalizedContentHash.as("content_hash"),
         col("n_tokens"), col("quality"), col("detected_lang")),
-      "clean_state_gated_raw"))
+      "clean_state_gated_raw")
     val reps = gatedRaw.groupBy("content_hash")
       .agg(min("doc_id").as("rep_id"))
     val gated = trunc(
@@ -620,7 +620,7 @@ object CorpusOps {
     */
   def cleanCorpusIncremental(v2docs: DataFrame, state: CleanState,
       diff: DataFrame): (DataFrame, CleanState) = {
-    import DedupOps.materialize
+    import DedupOps.materializeScoped
     // BASE + DELTA state discipline (review round-10, measured): an
     // eager checkpoint of each returned face re-COPIES the corpus-sized
     // state every version, making patch cost ∝ corpus however small the
@@ -647,14 +647,14 @@ object CorpusOps {
         Scratch.keep(DedupOps.truncateIter(df, s"cleaninc-$runId", name)))
     // the diff materializes ONCE: it is a two-corpus-scan full-outer
     // join, and every churn-keyed step below reads it
-    val diffM = Scratch.keep(materialize(diff, "inc_diff"))
+    val diffM = materializeScoped(diff, "inc_diff")
     val diffIds = diffM.select("doc_id")
     val churnNewIds = diffM
       .filter(col("status").isin("added", "changed")).select("doc_id")
     // 1. re-gate the churn (per-doc pure — the only text the gates read)
     val toks = TextOps.toksOf(v2docs)
     val (nTok, quality) = TextOps.qualityColsWith(col("text"), toks)
-    val gatedChurn = Scratch.keep(materialize(v2docs.join(churnNewIds, "doc_id")
+    val gatedChurn = materializeScoped(v2docs.join(churnNewIds, "doc_id")
       .withColumn("n_tokens", nTok)
       .withColumn("quality", quality)
       .withColumn("detected_lang", TextOps.detectLangWith(toks))
@@ -663,7 +663,7 @@ object CorpusOps {
       .select(col("doc_id"),
         DedupOps.normalizedContentHash.as("content_hash"),
         col("n_tokens"), col("quality"), col("detected_lang"),
-        lit(false).as("is_rep")), "inc_gated_churn"))
+        lit(false).as("is_rep")), "inc_gated_churn")
     // 2. exact-dedup reps: recompute min-per-hash ONLY inside AFFECTED
     // hash groups (a hash a churned doc had in v1 or has in v2); every
     // other group's membership — hence its rep — is untouched and rides
@@ -716,10 +716,10 @@ object CorpusOps {
     // cached, not checkpointed: three consumers (touched-band build +
     // both verify sides) would each re-scan the base otherwise; cache
     // materializes once and keeps the delta-state lineage intact
-    val sigsV2 = Scratch.keep(materialize(
+    val sigsV2 = materializeScoped(
       state.sigs.join(minus, Seq("doc_id"), "left_anti")
         .unionByName(plusSigs),
-      "inc_sigs_v2"))
+      "inc_sigs_v2")
     val affectedBuckets = trunc(
       DedupOps.bandRows(
         plusSigs.unionByName(state.sigs.join(minus, "doc_id")
@@ -1036,7 +1036,7 @@ object CorpusOps {
     // of cache blocks per batch forever.
     val toks = TextOps.toksOf(v2docs)
     val (nTok, quality) = TextOps.qualityColsWith(col("text"), toks)
-    val gatedChurn = Scratch.keep(DedupOps.materialize(
+    val gatedChurn = DedupOps.materializeScoped(
       keepIdsPushdown(v2docs, "doc_id", churnNewIds)
         .withColumn("n_tokens", nTok)
         .withColumn("quality", quality)
@@ -1047,7 +1047,7 @@ object CorpusOps {
           DedupOps.normalizedContentHash.as("content_hash"),
           col("n_tokens"), col("quality"), col("detected_lang"),
           lit(false).as("is_rep")),
-      "inset_gated_churn"))
+      "inset_gated_churn")
 
     // 2. affected hash groups: old rows of churned docs (ONE doc-id
     // probe of the gated face — hash AND old survivor bit together, so
@@ -1071,7 +1071,7 @@ object CorpusOps {
     // no extra pass: an affected-group member's OLD survivor bit is
     // st.gated's is_rep (false for churn rows — their old bit, if any,
     // came back on the oldRows probe)
-    val gatedDelta = Scratch.keep(DedupOps.materialize(
+    val gatedDelta = DedupOps.materializeScoped(
       touched
         .withColumn("was_rep",
           when(col("is_rep").isNull, lit(false)).otherwise(col("is_rep")))
@@ -1081,7 +1081,7 @@ object CorpusOps {
         .drop("rep_id")
         .select("doc_id", "content_hash", "n_tokens", "quality",
           "detected_lang", "is_rep", "was_rep"),
-      "inset_gated_delta"))
+      "inset_gated_delta")
 
     // 3. survivor-set delta, all driver-side set algebra over the ONE
     // churn-sized delta collect
@@ -1100,10 +1100,10 @@ object CorpusOps {
 
     // 4. signature delta + affected band buckets (plus docs' fresh band
     // rows; minus docs' rows off the persisted bands face)
-    val plusSigs = Scratch.keep(DedupOps.materialize(
+    val plusSigs = DedupOps.materializeScoped(
       DedupOps.historySignatureTable(
         keepIdsPushdown(v2docs, "doc_id", plusSet)),
-      "inset_plus_sigs"))
+      "inset_plus_sigs")
     val affPairs = Stages.time("patch.affected_bands")(DedupOps.bandRows(plusSigs)
       .select("band_idx", "band_sig")
       .unionByName(keepIds(bandsV1, "doc_id", minusSet)
@@ -1122,7 +1122,7 @@ object CorpusOps {
       DedupOps.capBuckets(touchedBands, DedupOps.BandBucketCap)
     val ca = cappedTouched.alias("ca")
     val cb = cappedTouched.alias("cb")
-    val candsTouched = Scratch.keep(DedupOps.materialize(
+    val candsTouched = DedupOps.materializeScoped(
       ca.join(cb,
           col("ca.band_idx") === col("cb.band_idx") &&
             col("ca.band_sig") === col("cb.band_sig") &&
@@ -1130,7 +1130,7 @@ object CorpusOps {
         .select(col("ca.band_idx").as("band_idx"),
           col("ca.band_sig").as("band_sig"),
           col("ca.doc_id").as("doc_a"), col("cb.doc_id").as("doc_b")),
-      "inset_cands_touched"))
+      "inset_cands_touched")
 
     // 6. verdicts: fresh pairs = touched-bucket pairs without a kept
     // verdict. The churn-key guard above bounds KEYS, not PAIRS: pair
@@ -1298,7 +1298,7 @@ object CorpusOps {
   private def decontamPatchBody(v2docs: DataFrame, state: DecontamState,
       diff: DataFrame, gramWidth: Int,
       cleanCore: => (DataFrame, CleanState)): (DataFrame, DecontamState) = {
-    import DedupOps.materialize
+    import DedupOps.{materialize, materializeScoped}
     val runId = java.util.UUID.randomUUID().toString.take(8)
     def trunc(df: DataFrame, name: String): DataFrame =
       Scratch.keep(DedupOps.truncateIter(df, s"decontaminc-$runId", name))
@@ -1317,12 +1317,12 @@ object CorpusOps {
     val churnIdProbe = diffM
       .filter(col("status").isin("added", "changed")).select("doc_id")
       .limit(PrunedPatchMaxChurn + 1).collect().map(_.getLong(0))
-    val churnDocs = Scratch.keep(materialize(
+    val churnDocs = materializeScoped(
       if (churnIdProbe.length <= PrunedPatchMaxChurn)
         keepIdsPushdown(v2docs, "doc_id",
           scala.collection.immutable.ArraySeq.unsafeWrapArray(churnIdProbe))
       else v2docs.join(churnNewIds, "doc_id"),
-      "decontam_churn_docs"))
+      "decontam_churn_docs")
     val benchChurned = state.benchIds
       .join(diffIds, Seq("doc_id"), "left_semi")
       .unionByName(churnDocs

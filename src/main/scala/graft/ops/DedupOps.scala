@@ -199,6 +199,14 @@ object DedupOps {
         else df
     }
 
+  /** [[materialize]] owned by the caller's [[Scratch]] scope, unless an
+    * equivalent plan is already cached: that cache stays its owner's.
+    */
+  private[ops] def materializeScoped(df: DataFrame, name: String): DataFrame =
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      materialize(df, name)
+    else Scratch.keep(materialize(df, name))
+
   // ------------------------------------------------------- shared helpers
 
   /** Normalized-content hash (lower, strip non-alnum, collapse whitespace

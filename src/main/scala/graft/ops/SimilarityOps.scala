@@ -681,8 +681,8 @@ object SimilarityOps {
     */
   def knnPagerank(emb: DataFrame,
       centroids: Seq[IndexedSeq[Double]] = defaultCentroids): DataFrame =
-    pagerankOn(Scratch.keep(
-      DedupOps.materialize(knnEdges(emb, centroids), "pr_edges")))
+    pagerankOn(
+      DedupOps.materializeScoped(knnEdges(emb, centroids), "pr_edges"))
 
   /** PR over an explicit (already-materialized) edge list — split out so
     * [[communityRepresentatives]] runs LP and PR over ONE knn build.
@@ -890,8 +890,8 @@ object SimilarityOps {
     // because at fixture scale the 8 iterative rounds' fixed per-stage
     // overhead dominates, not the 25k-edge build — the sharing pays at
     // real scale where the blocked pair join is the cost
-    communityRepresentativesOn(Scratch.keep(DedupOps.materialize(
-      knnEdges(emb, centroids), "cr_edges")))
+    communityRepresentativesOn(DedupOps.materializeScoped(
+      knnEdges(emb, centroids), "cr_edges"))
 
   /** The knn graph as a bare (src, dst) edge list — THE shared serving
     * artifact of the graph family: a production deployment builds the

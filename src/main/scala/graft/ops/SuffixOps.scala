@@ -389,14 +389,14 @@ object SuffixOps {
     val docLens = docs.select(col("doc_id"),
       length(coalesce(col("text"), lit(""))).cast("long").as("n"))
     // every (doc_id, pos, window) — the probe table, one kernel pass/doc
-    val wins = Scratch.keep(DedupOps.materialize(
+    val wins = DedupOps.materializeScoped(
       docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("t"))
         .select(col("doc_id"),
           posexplode(org.apache.spark.sql.graftext.ArrayFunctions
             .char_windows(col("t"), SaLcpCap)))
         .toDF("doc_id", "pos", "w")
         .select(col("doc_id"), col("pos").cast("long").as("pos"), col("w")),
-      "sa_merge_windows"))
+      "sa_merge_windows")
     val entries = sas.zipWithIndex.map { case (sa, i) =>
       sa.select(lit(i).as("shard"), col("sa_rank").as("lr"),
         col("doc_id"), col("pos"))

@@ -42,7 +42,8 @@ object EsHttpSink {
       responseHandler: ResponseHandler, concurrentRequest: Int,
       esMajor: Int = 8, typeName: String = "_doc",
       batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): Unit =
-    EsBulkSink.flush(batch, batchId, responseHandler, esMajor, typeName) { payload =>
+    EsBulkSink.flush(batch, batchId, responseHandler, esMajor, typeName) {
+        (payload, nActions, nBytes) =>
       val spark = payload.sparkSession
       import spark.implicits._
       // Request assembly vs concurrency are SEPARATE dials: the byte/count
@@ -53,7 +54,7 @@ object EsHttpSink {
       // slot count exists to prevent. Every row gets a REQUEST id `_rid`:
       //   - limits unset (the hot default): an event-id hash modulo
       //     concurrentRequest — no bound to enforce per request, so no
-      //     ordinal machinery and no extra agg job;
+      //     ordinal machinery;
       //   - a limit set: exact ids via the two-pass global ordinals
       //     (round-robin repartition is only APPROXIMATELY even and AQE
       //     may coalesce it — either breaks the per-request bound).
@@ -63,12 +64,12 @@ object EsHttpSink {
       // contiguous rid run, sequentially — in-flight = tasks = the
       // reference's goroutine slots regardless of the split width.
       val cap = math.max(1, concurrentRequest)
-      val ridded = EsBulkSink.limitSplit(payload, concurrentRequest,
+      val ridded = EsBulkSink.limitSplit(nActions, nBytes, concurrentRequest,
           batchByteSizeLimit, batchSizeLimit) match {
         case None =>
           payload.withColumn("_rid",
             pmod(xxhash64(col("event_id")), lit(cap.toLong)))
-        case Some((nActions, nRequests)) =>
+        case Some(nRequests) =>
           val perReq = math.max(1L,
             math.ceil(nActions.toDouble / math.max(1, nRequests)).toLong)
           val (stamped, _) = CdcOps.globalOrdinals(payload, Seq.empty, "event_id")

@@ -11,7 +11,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   *
   *   - `index_total{index}` / `delete_total{index}`: per-index action
   *     counters, lazily registered per index name (metric.go:56-96) —
-  *     here a concurrent counter map fed by the sink after each flush;
+  *     here a concurrent counter map fed from each flush's census once
+  *     its ship returns;
+  *   - `dead_letter_total{index}`: key-less actions routed to OnError,
+  *     from the same census (label `""` when the index is null too);
   *   - `process_latency_current` (event-time → ack lag) and
   *     `bulk_request_process_latency_current` (flush RTT) gauges
   *     (metric.go:35-54, set at bulk.go:168-170,312) — here fed from
@@ -41,6 +44,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   */
 object Metrics {
 
+  // (family, index) → count
   private val counters = new ConcurrentHashMap[(String, String), LongAdder]()
   private val processLatency = new ConcurrentHashMap[String, java.lang.Long]()
   private val bulkLatency = new ConcurrentHashMap[String, java.lang.Long]()
@@ -49,7 +53,16 @@ object Metrics {
   private val queryIds = new ConcurrentHashMap[java.util.UUID, String]()
 
   private[stream] def record(indexName: String, actionType: String, n: Long): Unit =
-    counters.computeIfAbsent((indexName, actionType), _ => new LongAdder).add(n)
+    count(if (actionType == "delete") "delete_total" else "index_total", indexName, n)
+
+  private[stream] def recordDeadLetter(indexName: String, n: Long): Unit =
+    count("dead_letter_total", Option(indexName).getOrElse(""), n)
+
+  private def count(family: String, indexName: String, n: Long): Unit =
+    counters.computeIfAbsent((family, indexName), _ => new LongAdder).add(n)
+
+  private def putCounters(m: scala.collection.mutable.Map[String, Long]): Unit =
+    counters.forEach((k, v) => m(s"${k._1}{index=${k._2}}") = v.sum())
 
   /** Listener entry, factored out for unit tests. */
   private[graft] def recordProgress(queryName: String,
@@ -80,10 +93,7 @@ object Metrics {
     */
   def snapshot(): Map[String, Long] = {
     val m = scala.collection.mutable.Map[String, Long]()
-    counters.forEach { (k, v) =>
-      val metric = if (k._2 == "delete") "delete_total" else "index_total"
-      m(s"$metric{index=${k._1}}") = v.sum()
-    }
+    putCounters(m)
     processLatency.forEach { (q, v) =>
       m(s"process_latency_current_ms{query=$q}") = v.longValue
     }
@@ -101,10 +111,7 @@ object Metrics {
     */
   def snapshotFor(queryName: String): Map[String, Long] = {
     val m = scala.collection.mutable.Map[String, Long]()
-    counters.forEach { (k, v) =>
-      val metric = if (k._2 == "delete") "delete_total" else "index_total"
-      m(s"$metric{index=${k._1}}") = v.sum()
-    }
+    putCounters(m)
     m("process_latency_current_ms") = processLatencyMs(queryName)
     m("bulk_request_process_latency_current_ms") = bulkRequestLatencyMs(queryName)
     m.toMap

@@ -455,12 +455,8 @@ object ResponseHandler {
             .as("doc_id"),
           lit(rl.index).as("index_name"),
           to_json(struct(bodyFields: _*)).as("source"))
-        val payload =
-          (if (esMajor < 8)
-            CdcOps.versionGatedMeta(rej, lit(esMajor), typeName)
-          else CdcOps.ndjsonEncode(rej))
-            .select(concat_ws("\n", col("meta"), col("source")).as("value"))
-        ship(payload, batchId)
+        ship(rej.select(CdcOps.bulkLines(rej, esMajor, typeName).as("value")),
+          batchId)
       }
     }
 
@@ -560,103 +556,67 @@ object EsBulkSink {
     }
   }
 
-  /** Shared flush prologue of the file and HTTP sinks — bad-key demux →
-    * LWW dedup (cached: the window runs once per flush) → version-gated
-    * NDJSON encode — so the two transports can never drift on WHAT they
-    * ship. Returns (deduped, payload(event_id, value)); `deduped` is
-    * owned by the caller's [[Scratch.scope]]. The demux runs BEFORE
-    * dedup: a null doc key is not a document identity, so key-less
-    * actions must not collapse into one null-keyed window row.
-    * concat_ws skips NULLs: deletes emit the meta line only
-    * (bulk.go:231-235).
+  /** B2 flush triggers (bulk.go:164-173), shared by both sinks: the
+    * request count that keeps each `_bulk` request within the byte (UTF-8
+    * octets, as the reference counts) and action limits, never below
+    * `concurrentRequest`; None when no limit is set. Runs no job.
     */
-  private[stream] def flushPrologue(cached: DataFrame, batchId: Long,
-      responseHandler: ResponseHandler, esMajor: Int, typeName: String)
-      : (DataFrame, DataFrame) = {
-    val bad = cached.filter(col("doc_id").isNull || col("index_name").isNull)
-    if (!bad.isEmpty) responseHandler.onError(bad, batchId)
-    val deduped = Scratch.cache(CdcOps.dedupLastWriteWins(
-      cached.filter(col("doc_id").isNotNull && col("index_name").isNotNull)))
-    // X2: `_type` in the action metadata only for ES major < 8
-    // (bulk.go:194-206,227-230; version from config ≙ Info-API detect)
-    val payload =
-      (if (esMajor < 8) CdcOps.versionGatedMeta(deduped, lit(esMajor), typeName)
-       else CdcOps.ndjsonEncode(deduped))
-      .select(col("event_id"),
-        concat_ws("\n", col("meta"), col("source")).as("value"))
-    (deduped, payload)
-  }
-
-  /** B2 flush triggers (bulk.go:164-173), shared by both sinks: when a
-    * byte and/or action-count limit is set, size the request split so no
-    * single `_bulk` request exceeds either, never fewer than
-    * `concurrentRequest` — payload sized in UTF-8 BYTES (octet_length;
-    * the reference counts bytes, not chars). One tiny post-agg collect
-    * computes both measures; None (and no job) when no limit binds.
-    * Returns (actions, requests).
-    */
-  private[stream] def limitSplit(payload: DataFrame, concurrentRequest: Int,
-      batchByteSizeLimit: Long, batchSizeLimit: Int): Option[(Long, Int)] =
+  private[stream] def limitSplit(nActions: Long, totalBytes: Long,
+      concurrentRequest: Int, batchByteSizeLimit: Long,
+      batchSizeLimit: Int): Option[Int] =
     if (batchByteSizeLimit <= 0L && batchSizeLimit <= 0) None
     else {
-      val m = payload
-        .agg(sum(octet_length(col("value"))), count(lit(1))).collect()(0)
-      val totalBytes = if (m.isNullAt(0)) 0L else m.getLong(0)
-      val nActions = m.getLong(1)
-      val byBytes =
-        if (batchByteSizeLimit <= 0L) 1
-        else math.ceil(totalBytes.toDouble / batchByteSizeLimit).toInt
-      val byCount =
-        if (batchSizeLimit <= 0) 1
-        else math.ceil(nActions.toDouble / batchSizeLimit).toInt
-      Some((nActions, math.max(concurrentRequest, math.max(byBytes, byCount))))
+      def over(total: Long, limit: Long): Int =
+        if (limit <= 0L) 1 else math.ceil(total.toDouble / limit).toInt
+      Some(Seq(concurrentRequest, over(totalBytes, batchByteSizeLimit),
+        over(nActions, batchSizeLimit.toLong)).max)
     }
 
-  /** The flush skeleton of both transports (bulk.go:253-278): cache the
-    * batch → [[flushPrologue]] → `ship` the payload → R3 counters →
-    * response demux, in one [[Scratch.scope]]. Only `ship` differs
-    * between the file and HTTP sinks; it gets the payload
-    * `(event_id, value)` and returns the per-item failures by event id
-    * (a file write has none — it is all-or-nothing). Each step is timed
-    * as a `sink.*` [[Stages]] stage: a slow batch names the step that
-    * owns its wall on /metrics.
-    *
-    * Two-level cache, both measured on the 1M-event load test: the raw
-    * batch feeds the bad-split probe AND the dedup window (recomputing
-    * the upstream chain twice loses to one materialization), and the
-    * post-dedup frame feeds the ship, the counters and the demux —
-    * caching it runs the dedup window once per flush. The scope releases
-    * both (deduped first) on a failure anywhere too, incl. the
-    * dead-letter write — a streaming engine retries failed batches, and
-    * a leak per retry accumulates for the life of the query.
+  /** The flush skeleton of both transports (bulk.go:253-278): one cache
+    * and one census pass over it before the ship, in one [[Scratch.scope]]
+    * (it frees the cache when a step throws too: a streaming engine
+    * retries failed batches). Each step is a `sink.*` [[Stages]] stage.
+    *  1. `sink.cache_build`: cache the last-write-wins survivors (B1) with
+    *     their `_bulk` lines, plus every key-less action (no doc id or
+    *     index): a null key is no document identity, so each gets a
+    *     window key of its own instead of collapsing into one null-keyed
+    *     row. One census per (key-less, index, action) — rows and payload
+    *     bytes — forces the whole cache.
+    *  2. `sink.dead_letter`: OnError with the key-less rows, only when the
+    *     census counted any.
+    *  3. `sink.ship`: `ship(payload, actions, bytes)` gets the keyed
+    *     `(event_id, value)` rows and their census totals, and returns the
+    *     per-item failures by event id (a file write has none). Only this
+    *     step differs between the sinks.
+    *  4. The R3 counters (metric.go:56-96) and `dead_letter_total`, from
+    *     the census once the ship returns: at-least-once like the
+    *     reference (bulk.go:392-411 vs 271-276), a replayed batch
+    *     re-counts.
+    *  5. `sink.demux`: the response demux over the keyed rows.
     */
   private[stream] def flush(batch: DataFrame, batchId: Long,
       responseHandler: ResponseHandler, esMajor: Int, typeName: String)(
-      ship: DataFrame => Map[Long, String]): Unit = Scratch.scope {
-    val cached = Scratch.cache(batch)
-    // force the cache with one full pass BEFORE the demux probe, so the
-    // whole upstream-chain materialization lands in ONE named stage
-    // (the probe's early-terminating isEmpty otherwise caches only the
-    // partitions it touches and smears the build across later
-    // consumers, which makes a slow batch unattributable). Measured on
-    // the 4M-event pgoutput batch: this build IS the sink's dominant
-    // cost (25-28 s of a ~37 s sink wall; payload write 8-9 s) — the
-    // reason batch sizing, not sink tuning, is the throughput knob
-    // (README "size the admission knobs").
-    Stages.time("sink.cache_build")(cached.count())
-    val (deduped, payload) = Stages.time("sink.prologue")(
-      flushPrologue(cached, batchId, responseHandler, esMajor, typeName))
-    val errors = Stages.time("sink.ship")(ship(payload))
-    // R3 per-index action counters (metric.go:56-96): one tiny agg over
-    // the cached batch after the flush succeeds. At-least-once like the
-    // reference (its counters bump in handleResponse BEFORE the LSN ack,
-    // bulk.go:392-411 vs 271-276): a crash between flush and checkpoint
-    // commit replays the batch and re-counts it.
-    Stages.time("sink.metrics_agg")(
-      deduped.groupBy("index_name", "action_type").count().collect()
-        .foreach(r => Metrics.record(r.getString(0), r.getString(1), r.getLong(2))))
-    Stages.time("sink.demux")(
-      handleResponseByEventId(deduped, errors, responseHandler, batchId))
+      ship: (DataFrame, Long, Long) => Map[Long, String]): Unit = Scratch.scope {
+    val keyless = col("doc_id").isNull || col("index_name").isNull
+    val kept = CdcOps.dedupLastWriteWins(
+      batch.withColumn("_lone", when(keyless, monotonically_increasing_id())),
+      Seq(col("_lone"))).drop("_lone")
+    val cached = Scratch.cache(
+      kept.withColumn("value", CdcOps.bulkLines(kept, esMajor, typeName)))
+    val (bad, good) = Stages.time("sink.cache_build")(
+      cached.groupBy(keyless, col("index_name"), col("action_type"))
+        .agg(count(lit(1)), sum(octet_length(col("value"))))
+        .collect().toSeq.partition(_.getBoolean(0)))
+    val actions = cached.drop("value")
+    if (bad.nonEmpty) Stages.time("sink.dead_letter")(
+      responseHandler.onError(actions.filter(keyless), batchId))
+    val errors = Stages.time("sink.ship")(
+      ship(cached.filter(!keyless).select("event_id", "value"),
+        good.map(_.getLong(3)).sum, good.map(_.getLong(4)).sum))
+    good.foreach(r => Metrics.record(r.getString(1), r.getString(2), r.getLong(3)))
+    bad.foreach(r => Metrics.recordDeadLetter(r.getString(1), r.getLong(3)))
+    Stages.time("sink.demux")(handleResponseByEventId(
+      actions.filter(!keyless), errors, responseHandler, batchId))
   }
 
   /** A batch write ≙ one flush (bulk.go:253-278) as NDJSON payload files:
@@ -674,9 +634,10 @@ object EsBulkSink {
       responseHandler: ResponseHandler, concurrentRequest: Int,
       esMajor: Int = 8, typeName: String = "_doc",
       batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): Unit =
-    flush(batch, batchId, responseHandler, esMajor, typeName) { payload =>
-      val nRequests = limitSplit(payload, concurrentRequest,
-        batchByteSizeLimit, batchSizeLimit).fold(concurrentRequest)(_._2)
+    flush(batch, batchId, responseHandler, esMajor, typeName) {
+        (payload, nActions, nBytes) =>
+      val nRequests = limitSplit(nActions, nBytes, concurrentRequest,
+        batchByteSizeLimit, batchSizeLimit).getOrElse(concurrentRequest)
       // overwrite INTO the per-batch directory: a replayed batch (failure
       // after partial write, before checkpoint commit) clobbers its own
       // partial output instead of duplicating it — effectively-once files

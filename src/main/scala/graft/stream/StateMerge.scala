@@ -69,7 +69,7 @@ object StateMerge {
       "ctx._source.updated_at_us = params.updated_at_us"
 
   /** The scripted-upsert `_bulk` NDJSON encoding, THROUGH the canonical
-    * encoder (CdcOps.ndjsonEncode handles the `update` action kind and the
+    * encoder (CdcOps.bulkLines handles the `update` action kind and the
     * `{"script":…,"scripted_upsert":true}` body wrap, bulk.go:237-241):
     * meta `{"update":{"_index":…,"_id":…}}`, script JSON in Go marshal
     * order (params, then source — action.go:21-24).
@@ -84,8 +84,7 @@ object StateMerge {
       col("docId").as("doc_id"),
       lit(indexName).as("index_name"),
       CdcOps.scriptJson(UpsertScript, params).as("source"))
-    CdcOps.ndjsonEncode(actions)
-      .select(concat_ws("\n", col("meta"), col("source")).as("value"))
+    actions.select(CdcOps.bulkLines(actions, 8, "_doc").as("value"))
   }
 
   /** RocksDB state-store provider (ships with Spark 4): the scale path

@@ -151,6 +151,20 @@ class ScratchSpec extends SparkSuite {
     }
   }
 
+  test("a scope owns only the caches its ops create: an equivalent cached plan stays its owner's") {
+    import graft.ops.SuffixOps
+    Scratch.scope { // owns the array's last round
+      val sa = SuffixOps.suffixArray(saDocs)
+      // registers nothing: its adjacent-LCP windows cache stays for the
+      // session, and mergeShardArrays' windows plan is equivalent to it
+      assert(SuffixOps.saLongestRepeatOn(sa, saDocs).collect().length === 1)
+      val entries = CheckpointBlocks.cacheEntryCount(spark)
+      Scratch.scope(SuffixOps.mergeShardArrays(Seq(sa), saDocs).collect())
+      assert(CheckpointBlocks.cacheEntryCount(spark) === entries,
+        "the scope released a cache an earlier caller built")
+    }
+  }
+
   test("a loop that throws releases every round it registered") {
     import graft.ops.DedupOps
     val chain = (1L to 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")

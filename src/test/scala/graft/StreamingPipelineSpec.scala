@@ -343,13 +343,14 @@ class StreamingPipelineSpec extends SparkSuite {
       tmp("graft-stages-dlq"), tmp("graft-stages-ckpt"))
     awaitDone(q)
     assert(cacheFootprint === footprint0,
-      "each flush releases its two caches with its scope")
+      "each flush releases its cache with its scope")
     val gained = Stages.since(before).filter(_._1.startsWith("sink."))
     val addBatchMs = q.recentProgress.toSeq
       .flatMap(p => Option(p.durationMs.get("addBatch")).map(_.longValue))
     assert(addBatchMs.size == 2, "one batch per staged segment")
-    assert(gained.keySet == Set("sink.cache_build", "sink.prologue",
-      "sink.ship", "sink.metrics_agg", "sink.demux"), gained)
+    // no key-less rows, so no sink.dead_letter stage
+    assert(gained.keySet == Set("sink.cache_build", "sink.ship", "sink.demux"),
+      gained)
     assert(gained.values.forall(_.calls == addBatchMs.size), gained)
     // the flush runs inside addBatch; addBatch is whole ms off a
     // millisecond clock, so each batch may read up to 1 ms short
@@ -366,11 +367,20 @@ class StreamingPipelineSpec extends SparkSuite {
     val bulkDir = tmp("graft-bulk3")
     val dlqDir = tmp("graft-dlq3")
     stage(eventsDir, 1L to 3L, nullUserIds = Seq(100L, 101L))
+    import graft.stream.{Metrics, MetricsEndpoint}
+    val deadTotal = "dead_letter_total{index=users_idx}"
+    val before = Metrics.snapshot().getOrElse(deadTotal, 0L)
     val q = runPipeline(eventsDir, bulkDir, dlqDir, tmp("graft-ckpt3"),
       concurrentRequest = 1)
     awaitDone(q)
     assert(bulkDocIds(bulkDir).toSet == Set("1", "2", "3"))
     val dead = spark.read.parquet(dlqDir)
     assert(dead.select("event_id").as[Long].collect().toSet == Set(100L, 101L))
+    // both key-less rows count, under the index they were routed to
+    val snap = Metrics.snapshot()
+    assert(snap.getOrElse(deadTotal, 0L) - before == 2L, snap)
+    val text = MetricsEndpoint.render(snap)
+    assert(text.contains("# TYPE graft_dead_letter_total counter"), text)
+    assert(text.contains("""graft_dead_letter_total{index="users_idx"}"""), text)
   }
 }
