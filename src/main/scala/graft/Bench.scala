@@ -1,465 +1,272 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftext.{CheckpointBlocks, Scratch}
 import graft.obs.Stages
 import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Benchmark main: one JSON line with per-query timings over
-  * `SPARK_GRAFT_SF_DIR`.
+/** Benchmark main: times every `SparkEntry.queries` key — or only the keys
+  * named as arguments (`runMain graft.Bench dedup_lww knn_graph`) — over
+  * `SPARK_GRAFT_SF_DIR` at `local[SPARK_GRAFT_CPUS]`, and writes one
+  * per-key record three ways:
   *
-  * Self-defending against box contention (BENCH_r04 lesson: a co-scheduled
-  * sbt session inflated trivial 1-scan projections 10-70x and only a clean
-  * re-run exposed it): alongside wall time each query records the JVM's
-  * process-CPU seconds for the measured run and the OS load average at
-  * measurement time. Heuristic for readers: wall >> cpu on a 1-scan/
-  * 0-exchange query means the box was contended — rerun before believing a
-  * regression. Failures are NOT swallowed into flattering ~0.1 s entries:
-  * failed queries are listed in `"failed"` and the process exits nonzero.
+  *  - `bench/last_run.json` (`SPARK_GRAFT_BENCH_OUT`), the only full-detail
+  *    output: `_meta` (totals, contention verdicts, `top5_clean`, staged
+  *    walls) plus one `{wall, cpu, load, eff_cores, gc_sec, blocks_dropped,
+  *    storage_mb, contended, low_par, div_baseline, retimed, failed}`
+  *    entry per key, slowest first — the layout `scripts/bench_diff.py`
+  *    and the committed `bench/r*.json` snapshots share;
+  *  - the second-to-last stdout line, `{"metric":"queries",…}`: each key's
+  *    wall at 2 decimals;
+  *  - the LAST stdout line, `{"metric":"total",…}`: total wall,
+  *    `cpu_total_sec`, the failure count, `median_wall_vs_baseline`,
+  *    `cpus` and `sf` — a fixed set of scalars, so it stays under 1500
+  *    chars for any key count and survives a tail capture of stdout
+  *    (190 key names alone are ~3 KB). Nothing of Bench's follows it.
   *
-  * Truncation defense (BENCH_r05 lesson: the harness keeps only the last
-  * 2000 chars of stdout, and the full JSON line grew past it — the artifact
-  * lost its per-query map entirely, `"parsed": null`): a SECOND, compact
-  * summary line is printed AFTER the full line, so the tail of stdout alone
-  * always tells a reader the total, the failure count, the contention
-  * verdict, and the slowest five queries. The wall>>cpu heuristic is also
-  * made mechanical here (`contended`), and the 1-minute load average is
-  * checked BEFORE the sweep (`contended_at_start`) so a run that began on a
-  * busy box says so up front.
+  * Method. A warm-up runs one query, reads every base table into the page
+  * cache and materializes the sweep-lifetime shared tables
+  * (`SparkEntry.warmShared`, the deployment's load-artifacts step). Every
+  * timed run sits behind the keep-set barrier
+  * (`CheckpointBlocks.resetForMeasurement`): all other keys' caches and
+  * pinned checkpoints drop, the shared corpus tables stay. Each key is
+  * timed twice (noop write: full column evaluation) and keeps the faster
+  * successful run; a failed key is reported as failed, never as a
+  * flattering ~0.1 s entry, and makes the process exit nonzero.
   *
-  * Self-adjudication (BENCH_r06 lesson: contention arrived MID-run, so the
-  * start stamp cleared a sweep whose top5 was still noise — the judge had
-  * to clean-probe by hand): each query carries its own `contended` flag
-  * (cpu ≪ wall), flagged queries get ONE extra clean-context run at sweep
-  * end (best-of-3 wins, `retimed` marks them), and the trailing line adds
-  * `top5_clean` — the slowest queries whose timings the heuristic trusts.
+  * Self-adjudication against box contention: a key is `contended`
+  * (starved) when its process CPU is well under its wall, `low_par` when
+  * a slow key ran far below the sweep's own median effective cores, and
+  * `div_baseline` when it lands > 3x its row in the committed quiet-box
+  * baseline (`bench/baseline.json`, `SPARK_GRAFT_BENCH_BASELINE`). The
+  * slowest suspects plus the top 8 by wall get one more run at sweep end
+  * (best of 3, `retimed`). `median_wall_vs_baseline` reads a uniform
+  * drift of the whole box that the 3x gate cannot see.
   *
-  * Shared-cache measurement discipline (BENCH_r10 lesson: the old
-  * all-or-nothing barrier dropped the shared token/suffix-array tables
-  * before EVERY timed run and `SparkEntry` deliberately doesn't
-  * re-persist, so ~100 token consumers re-tokenized the corpus per
-  * measurement — per-query CPU inflated 5-10x and the artifact stopped
-  * measuring plan cost): the barrier now takes `SparkEntry.sharedCaches`
-  * as a keep-set, the warm-up materializes those tables and trains the
-  * tokenizer models ONCE (the deployment's "load artifacts" step), and
-  * each query is isolated from every OTHER query's scratch caches but
-  * never from the corpus-level shared state. Two adjudication channels
-  * ride the artifact so cache-churn vs contention resolves from the file
-  * alone: per-query GC seconds (heap thrash is CPU a profiler would
-  * otherwise have to find) and per-query storage-block drop counts +
-  * post-query storage bytes (eviction churn / state accumulation).
+  * Baseline-refresh policy: the committed baseline is the last
+  * consolidated quiet sweep. A deliberate plan change updates its own
+  * rows from the next quiet sweep in the same commit (never hand-typed);
+  * untouched rows are never edited.
   *
-  * Cross-environment comparability (the round-10 verdict compared a
-  * 4-cpu quiet-box file against the driver's 32-cpu run and read the gap
-  * as a 1.45x regression): the artifact now records `cpus` and heap, and
-  * a committed per-query BASELINE (`bench/baseline.json`, a quiet-box
-  * x32 sweep) drives a divergence guard — any query whose wall lands
-  * > 3x its baseline is re-timed like a contention suspect and flagged
-  * `div_baseline`, so an inflated number never ships unchallenged.
-  *
-  * Baseline-refresh policy (round 12): the committed baseline is the
-  * LAST consolidated quiet sweep. When a deliberate plan/sharing change
-  * moves a query's honest wall, its baseline row is updated from the
-  * next quiet sweep IN THE SAME COMMIT as the change (never hand-typed)
-  * so the guard keeps adjudicating against intent, not history; rows
-  * for untouched queries are never edited. A whole-file reseed happens
-  * only at consolidation points, recorded in the commit message.
-  *
-  * Staged sub-walls (round 12): the three incremental-clean oracle keys
-  * deliberately price v1-build + patch in one cell (the from-scratch
-  * oracle hash is the patch ≡ rebuild proof), so after the normal
-  * measurement Bench runs `SparkEntry.stagedWalls` (twice per key, the
-  * run with the lower total kept whole) and ships a `"stages"` map —
-  * the top of the table then reads as "the deliberate rebuild costs X,
-  * the daily patch costs Y" from the artifact alone.
-  *
-  * Driver parse contract (round 15): stdout ends with a COMPACT
-  * `{"metric":"total",...,"queries":{name:2-decimal wall,...},...}` line —
-  * BENCH_r01-r14 all carry `"parsed": null` because the full line never
-  * fit the driver's stdout capture and the trailing summary line had no
-  * "queries". The full-precision line with `queries_detail` still prints
-  * first and is written byte-identical to `bench/driver_line.json`; the
-  * compact line keeps its summary scalars AFTER the queries map so a
-  * 2000-char tail capture still ends with complete totals.
+  * Staged walls: the incremental-clean keys price v1-build + patch in one
+  * cell (the from-scratch oracle hash is the patch ≡ rebuild proof), so
+  * after the sweep `SparkEntry.stagedWalls` splits each into `v1_build`
+  * and `patch` (two runs, the one with the lower total kept whole) under
+  * `_meta.stages`.
   */
 object Bench {
+  /** One key's kept measurement; `cpu` is -1 where the JVM reads none. */
+  final case class Timing(wall: Double, cpu: Double, load: Double,
+      failed: Boolean, retimed: Boolean = false, gc: Double = 0.0,
+      dropped: Long = 0L, storageMb: Double = 0.0, divBaseline: Boolean = false)
+
+  /** A 1-minute load average above this marks the box busy — before the
+    * sweep (`contended_at_start`) or at a low-parallel key's measurement
+    * (`low_par_hot_load`). */
+  val LoadThreshold = 4.0
+
+  // waiting for cores: cpu ≪ wall after table warm-up (no I/O wait left)
+  def isStarved(t: Timing): Boolean =
+    !t.failed && t.wall > 0.5 && t.cpu >= 0 && t.cpu < 0.6 * t.wall
+  def effCores(t: Timing): Double =
+    if (t.wall > 0 && t.cpu >= 0) t.cpu / t.wall else -1.0
+  private def median(xs: Iterable[Double]): Double =
+    xs.toSeq.sorted.lift(xs.size / 2).getOrElse(-1.0)
+  /** The sweep as its own parallelism control group: the median effective
+    * cores of its non-trivial successful keys. */
+  def medianEffCores(ts: Iterable[Timing]): Double =
+    median(ts.filter(t => !t.failed && t.wall > 0.5 && t.cpu >= 0).map(effCores))
+
+  /** A sweep and what it is judged against: all the outputs render. */
+  final case class Sweep(results: Map[String, Timing], medianEff: Double,
+      baseline: Map[String, Double], cpus: Int, sf: String,
+      loadAtStart: Double, heapMaxMb: Long,
+      stages: Map[String, Map[String, Double]] = Map.empty) {
+    // slow AND low-parallel only: sub-second CDC ops legitimately run at
+    // 1-2 cores, and a sweep's own load keeps any load clause hot; the
+    // 1.5-core floor survives a median dragged down by whole-box contention
+    def lowPar(t: Timing): Boolean = !t.failed && t.wall > 2.0 && t.cpu >= 0 &&
+      effCores(t) < math.max(1.5, 0.25 * medianEff)
+    def diverges(key: String, t: Timing): Boolean =
+      !t.failed && baseline.get(key).exists(b => t.wall > 3.0 * b && t.wall > 1.0)
+    def suspect(key: String, t: Timing): Boolean =
+      isStarved(t) || lowPar(t) || diverges(key, t)
+    def slowest: Seq[(String, Timing)] = results.toSeq.sortBy(-_._2.wall)
+    def keysWhere(p: Timing => Boolean): Seq[String] = slowest.collect {
+      case (k, t) if p(t) => k }
+    def total: Double = results.values.map(_.wall).sum
+    def cpuTotal: Double = results.values.map(t => math.max(t.cpu, 0.0)).sum
+    def nFailed: Int = results.values.count(_.failed)
+    def contendedAtStart: Boolean = loadAtStart > LoadThreshold
+    def contended: Boolean = contendedAtStart ||
+      keysWhere(isStarved).size >= 3 || keysWhere(lowPar).size >= 3
+    // median per-key wall ratio vs the baseline; sub-0.2 s rows are noise
+    def medianVsBaseline: Double = median(results.collect {
+      case (k, t) if !t.failed && baseline.get(k).exists(_ > 0.2) =>
+        t.wall / baseline(k) })
+  }
+
+  private val json = new ObjectMapper()
+  private def round(d: Double, places: Int): Double =
+    math.rint(d * math.pow(10, places)) / math.pow(10, places)
+  private def walls(keys: Seq[(String, Timing)], places: Int): ObjectNode =
+    keys.foldLeft(json.createObjectNode())((n, kt) =>
+      n.put(kt._1, round(kt._2.wall, places)))
+
+  /** The last stdout line: fixed scalars only, whatever the key count. */
+  def summaryLine(s: Sweep): String = json.writeValueAsString(
+    json.createObjectNode().put("metric", "total")
+      .put("value", round(s.total, 2)).put("unit", "sec")
+      .put("cpu_total_sec", round(s.cpuTotal, 2)).put("failed", s.nFailed)
+      .put("median_wall_vs_baseline", round(s.medianVsBaseline, 4))
+      .put("cpus", s.cpus).put("sf", s.sf))
+
+  /** The second-to-last stdout line: every key's wall, slowest first. */
+  def compactLine(s: Sweep): String = json.writeValueAsString(json.createObjectNode()
+    .put("metric", "queries").put("unit", "sec").set("queries", walls(s.slowest, 2)))
+
+  /** `bench/last_run.json`: `_meta` plus one full entry per key. */
+  def lastRunJson(s: Sweep): String = {
+    val root = json.createObjectNode()
+    val meta = root.putObject("_meta").put("sf", s.sf).put("total_sec", round(s.total, 4))
+      .put("cpu_total_sec", round(s.cpuTotal, 4))
+      .put("gc_total_sec", round(s.results.values.map(_.gc).sum, 4))
+      .put("cpus", s.cpus).put("heap_max_mb", s.heapMaxMb)
+      .put("n_queries", s.results.size).put("failed", s.nFailed)
+      .put("contended", s.contended).put("contended_at_start", s.contendedAtStart)
+      .put("load_at_start", round(s.loadAtStart, 4))
+      .put("median_eff_cores", round(s.medianEff, 4))
+      .put("starved", s.keysWhere(isStarved).size)
+      .put("low_par", s.keysWhere(s.lowPar).size)
+    // a low_par flag measured under a hot load is about the box, not the plan
+    s.keysWhere(t => s.lowPar(t) && t.load > LoadThreshold)
+      .foldLeft(meta.putArray("low_par_hot_load"))(_.add(_))
+    meta.put("div_baseline", s.keysWhere(_.divBaseline).size)
+      .put("median_wall_vs_baseline", round(s.medianVsBaseline, 4))
+      .put("baseline_entries", s.baseline.size).put("retimed", s.keysWhere(_.retimed).size)
+      .set[ObjectNode]("top5", walls(s.slowest.take(5), 4))
+    // the slowest keys whose timing no heuristic doubts; fewer than five
+    // when contention ate the tail, which is itself the signal
+    meta.set[ObjectNode]("top5_clean",
+      walls(s.slowest.filterNot { case (k, t) => s.suspect(k, t) }.take(5), 4))
+    val stages = meta.putObject("stages")
+    for ((k, m) <- s.stages.toSeq.sortBy(_._1); (st, v) <- m.toSeq.sortBy(_._1))
+      stages.withObjectProperty(k).put(st, round(v, 4))
+    s.slowest.foreach { case (k, t) =>
+      root.putObject(k).put("wall", round(t.wall, 4)).put("cpu", round(t.cpu, 4))
+        .put("load", round(t.load, 4)).put("eff_cores", round(effCores(t), 4))
+        .put("gc_sec", round(t.gc, 4)).put("blocks_dropped", t.dropped)
+        .put("storage_mb", round(t.storageMb, 4)).put("contended", isStarved(t))
+        .put("low_par", s.lowPar(t)).put("div_baseline", t.divBaseline)
+        .put("retimed", t.retimed).put("failed", t.failed)
+    }
+    json.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+  }
+
+  /** Per-key walls of a baseline file in any JSON layout; `_meta` skipped. */
+  def loadBaseline(text: String): Map[String, Double] =
+    json.readTree(text).properties().asScala.collect {
+      case e if e.getKey != "_meta" && e.getValue.path("wall").isNumber =>
+        e.getKey -> e.getValue.get("wall").asDouble
+    }.toMap
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val queries = SparkEntry.queries
+    val unknown = args.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown bench keys: ${unknown.mkString(" ")}")
+    val keys = if (args.nonEmpty) args.toSeq.distinct else queries.keys.toSeq
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val osBean = ManagementFactory.getOperatingSystemMXBean
-    // Pre-sweep contention stamp: on this 32-core box a 1-minute load
-    // average above ~4 before we have started ANY work means someone else
-    // is burning cores — the artifact should carry that verdict itself
-    // rather than leave a reviewer to infer it from inflated timings.
-    val loadThreshold =
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_THRESHOLD", "4.0").toDouble
     val loadAtStart = osBean.getSystemLoadAverage
-    val contendedAtStart = loadAtStart > loadThreshold
-    if (contendedAtStart)
-      System.err.println(
-        s"[bench] WARNING: 1-min load average $loadAtStart > $loadThreshold " +
-          "before sweep start — timings below are suspect (contended_at_start)")
+    if (loadAtStart > LoadThreshold) System.err.println(
+      s"[bench] WARNING: 1-min load average $loadAtStart > $LoadThreshold " +
+        "before sweep start — timings below are suspect (contended_at_start)")
+    // stderr notes a failure; every note precedes the two stdout lines
+    def attempt[A](what: String)(f: => A): Option[A] =
+      try Some(f) catch { case e: Throwable =>
+        System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
+        None }
     // noop write forces FULL column evaluation — count() would let
-    // Catalyst prune projection-only columns (an encode query would
-    // benchmark the parquet scan, not the encoding)
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // warm-up: JVM/codegen/parquet-footer costs land here, not on the
-    // first measured query
-    try exec(SparkEntry.queries("message_typing")(spark, sfDir))
-    catch { case _: Throwable => () }
-    // warm the OS page cache for EVERY base table, not just events: the
-    // first measured query touching a cold parquet file otherwise pays the
-    // disk read (BENCH_r02's 5.6 s token_count was exactly this — both
-    // best-of-2 runs of the first documents-table query read cold bytes)
+    // Catalyst prune projection-only columns
+    def exec(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    attempt("warm-up")(exec(queries("message_typing")(spark, sfDir)))
     for (t <- Seq("documents", "embeddings", "customer"))
-      try exec(spark.read.parquet(s"$sfDir/$t.parquet"))
-      catch { case _: Throwable => () }
-    // materialize the sweep-lifetime shared tables (token table, suffix
-    // arrays, perplexity scores) and train the tokenizer models ONCE —
-    // the deployment's load-artifacts step; the keep-set barrier below
-    // preserves them across queries
-    try SparkEntry.warmShared(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warmShared failed: ${e.getMessage}") }
-    def keepSet: Seq[org.apache.spark.sql.DataFrame] =
+      attempt(s"warm-up $t")(exec(spark.read.parquet(s"$sfDir/$t.parquet")))
+    attempt("warmShared")(SparkEntry.warmShared(spark, sfDir))
+    def keepSet: Seq[DataFrame] =
       try SparkEntry.sharedCaches(spark, sfDir)
       catch { case _: Throwable => Nil }
     val drops = CheckpointBlocks.installDropCounter(spark)
-    // best of 2 runs per query: steady-state timing, robust to one-off
-    // JIT/GC/page-cache noise (first run still pays any plan-specific
-    // codegen compile). Scratch caches cleared per RUN behind the
-    // keep-set, so 188 queries' intermediates never pile into
-    // storage-eviction noise that inflates later queries — while the
-    // shared corpus tables stay warm (see object doc).
-    final case class Timing(wall: Double, cpu: Double, load: Double,
-        failed: Boolean, retimed: Boolean = false, gc: Double = 0.0,
-        dropped: Long = 0L, storageMb: Double = 0.0, divBaseline: Boolean = false)
-    // the mechanical per-query contention read (BENCH_r06 lesson: the
-    // box contended MID-run, so the start-stamp alone cleared a sweep
-    // whose top5 was still noise): a query that spent its wall waiting
-    // for cores (cpu ≪ wall after table warm-up) was starved, whatever
-    // the load gauge said; a hot load average at measurement corroborates
-    def isStarved(t: Timing): Boolean =
-      !t.failed && t.wall > 0.5 && t.cpu >= 0 && t.cpu < 0.6 * t.wall
-    def timeOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Timing = {
+    def timeOnce(name: String): Timing = {
       CheckpointBlocks.resetForMeasurement(spark, keepSet)
-      // attribute the barrier's own block-drop events to the barrier,
-      // not the timed window
+      // the barrier's own block drops are not the timed window's
       CheckpointBlocks.flushListeners(spark)
       val d0 = drops.count
       // the key's scratch is released after the timed window
       val (ok, d) = Scratch.scope(Stages.measure(
-        try { exec(fn(spark, sfDir)); true }
-        catch {
-          case e: Throwable =>
-            System.err.println(
-              s"[bench] FAILED $name: ${e.getClass.getName}: ${e.getMessage}")
-            false
-        }))
+        attempt(name)(exec(queries(name)(spark, sfDir))).isDefined))
       CheckpointBlocks.flushListeners(spark)
-      val dropped = drops.count - d0
-      val storageMb = CheckpointBlocks.storageBytesUsed(spark) / 1048576.0
       Timing(d.wallSec, if (d.cpuNanos >= 0) d.cpuSec else -1.0,
-        osBean.getSystemLoadAverage, failed = !ok,
-        gc = d.gcSec, dropped = dropped, storageMb = storageMb)
+        osBean.getSystemLoadAverage, failed = !ok, gc = d.gcSec,
+        dropped = drops.count - d0,
+        storageMb = CheckpointBlocks.storageBytesUsed(spark) / 1048576.0)
     }
-    // committed quiet-box x32 per-query baseline (bench/baseline.json,
-    // refreshed with each consolidation): any query landing > 3x its
-    // baseline wall is re-timed like a contention suspect and flagged —
-    // the in-sweep vs standalone divergence class
-    // (length_percentiles_sketch 0.79 s standalone vs 5.34 s in-sweep in
-    // round 10) adjudicates itself instead of waiting for a judge probe
     val baselinePath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench/baseline.json")
-    val baseline: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(baselinePath)), "UTF-8")
-      // \s* after the brace: baseline.json has shipped both compact
-      // ({"wall": …) and pretty-printed ({\n  "wall": …) — the compact-only
-      // form of this regex silently parsed 0 entries after the round-13
-      // reseed rewrote the file pretty-printed, which turned the whole
-      // divergence gate off while still reporting div_baseline: 0
-      val re = """"([A-Za-z0-9_]+)":\s*\{\s*"wall":\s*([0-9.]+)""".r
-      val m = re.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap - "_meta"
-      if (m.isEmpty) System.err.println(
-        s"[bench] WARNING: $baselinePath present but parsed 0 baseline " +
-          "entries — divergence adjudication is OFF this run")
-      m
-    } catch { case _: Throwable => Map.empty }
-    def divergesBaseline(name: String, t: Timing): Boolean =
-      !t.failed && baseline.get(name).exists(b => t.wall > 3.0 * b && t.wall > 1.0)
-    val firstPass = SparkEntry.queries.map { case (name, fn) =>
-      // best of 2 runs; shared hygiene per query (see
-      // CheckpointBlocks.resetForMeasurement): without the pinned-RDD
-      // drop, the CC family's final-round localCheckpoint blocks land
-      // ~7 s of storage pressure on later queries (BENCH_r03's
-      // dedup_ngram_jaccard: 5.79 s in-sweep, 1.49 s isolated)
-      val runs = (1 to 2).map(_ => timeOnce(name, fn))
-      // min wall among SUCCESSFUL runs when any succeeded — a throw's
-      // time-to-failure is not a measurement
+    val baseline = try loadBaseline(Files.readString(Paths.get(baselinePath)))
+      catch { case _: java.io.IOException => Map.empty[String, Double] }
+    if (baseline.isEmpty && Files.exists(Paths.get(baselinePath)))
+      System.err.println(s"[bench] WARNING: $baselinePath holds no baseline " +
+        "entries — divergence adjudication is OFF this run")
+    val firstPass = keys.map { name =>
+      // best of 2; a throw's time-to-failure is not a measurement
+      val runs = (1 to 2).map(_ => timeOnce(name))
       val good = runs.filter(!_.failed)
-      val best = (if (good.nonEmpty) good else runs).minBy(_.wall)
-      name -> best.copy(failed = good.isEmpty)
-    }
-    // The BENCH_r07 blind spot: `isStarved` detects WAITING (cpu ≪ wall)
-    // but is blind to CORE COMPETITION — an external tenant stealing 31
-    // of 32 cores leaves a query burning cpu ≈ wall at ~1 effective core
-    // (r07: domain_stats 12.1 cpu / 11.2 wall self-certified clean while
-    // 10× inflated). Parallelism signal: a query's effective core count
-    // (cpu/wall) far below the sweep's OWN median — the sweep is its own
-    // control group, since the mix is dominated by 32-thread scans — or a
-    // hot load average AT measurement, means the wall number is about the
-    // box, not the plan.
-    def effCores(t: Timing): Double =
-      if (t.wall > 0 && t.cpu >= 0) t.cpu / t.wall else -1.0
-    val effSamples = firstPass.values.toSeq
-      .filter(t => !t.failed && t.wall > 0.5 && t.cpu >= 0)
-      .map(effCores).sorted
-    val medianEff =
-      if (effSamples.isEmpty) -1.0 else effSamples(effSamples.size / 2)
-    // SLOW + low-parallel only: wall > 2 s at < max(1.5, 25%·median)
-    // effective cores. Two deliberate exclusions, both measured on a
-    // clean sweep: (a) fast queries — sub-second CDC/scheduling-bound
-    // ops legitimately run at 1-2 effective cores; (b) the system load
-    // average — a 32-thread sweep keeps its OWN 1-min load above any
-    // absolute threshold, so a load clause self-flags every clean run.
-    // The 1.5-core absolute floor keeps the signal alive even when
-    // whole-sweep contention drags the median down with it (the r07
-    // mode: domain_stats at 11.2 s wall / ~1.1 effective cores).
-    def isLowParallelism(t: Timing): Boolean =
-      !t.failed && t.wall > 2.0 && t.cpu >= 0 &&
-        effCores(t) < math.max(1.5, 0.25 * medianEff)
-    def isSuspect(name: String, t: Timing): Boolean =
-      isStarved(t) || isLowParallelism(t) || divergesBaseline(name, t)
-    // end-of-sweep re-time: (a) queries any heuristic flags — starved,
-    // low-parallel, or >3x the committed baseline — capped (slowest
-    // first — re-timing adjudicates the top of the table, not the
-    // sweep); (b) UNCONDITIONALLY the top-8 by wall, flags or not —
-    // the r07 artifact would have been fixed outright by this ~15 s of
-    // re-runs, and no heuristic earns trust it hasn't paid for. Reported
-    // timing is the min across all runs (best-of-3 for re-timed).
+      name -> (if (good.nonEmpty) good else runs).minBy(_.wall)
+        .copy(failed = good.isEmpty)
+    }.toMap
+    val first = Sweep(firstPass, medianEffCores(firstPass.values), baseline,
+      cpus, sfDir, loadAtStart, Runtime.getRuntime.maxMemory / 1048576)
+    // re-time the 8 slowest suspects AND, unconditionally, the top 8 by
+    // wall; the reported timing is the best of all runs
     val retimeCap = 8
-    val flagged = firstPass.toSeq.filter(kv => isSuspect(kv._1, kv._2))
-      .sortBy(-_._2.wall).take(retimeCap).map(_._1).toSet
-    val top8 = firstPass.toSeq.filter(!_._2.failed)
-      .sortBy(-_._2.wall).take(retimeCap).map(_._1).toSet
-    val suspects = flagged ++ top8
+    val suspects = (first.slowest.filter { case (k, t) => first.suspect(k, t) }
+      .take(retimeCap) ++ first.slowest.filter(!_._2.failed).take(retimeCap))
+      .map(_._1).toSet
     val results = firstPass.map { case (name, t) =>
-      val adjudicated = if (!suspects(name)) t
-      else {
-        val again = timeOnce(name, SparkEntry.queries(name))
-        val best = if (!again.failed && again.wall < t.wall)
-          again.copy(retimed = true) else t.copy(retimed = true)
-        best
+      val adjudicated = if (!suspects(name)) t else {
+        val again = timeOnce(name)
+        (if (!again.failed && again.wall < t.wall) again else t).copy(retimed = true)
       }
-      // div_baseline reports on the FINAL number: a query that came back
-      // under 3x after its re-time earned a clean bill
-      name -> adjudicated.copy(
-        divBaseline = divergesBaseline(name, adjudicated))
+      // div_baseline judges the FINAL number
+      name -> adjudicated.copy(divBaseline = first.diverges(name, adjudicated))
     }
-    // staged sub-walls for the deliberately double-priced incremental
-    // trio (see object doc): after the competitive measurements, behind
-    // the same barrier; failures degrade to an absent entry rather than
-    // a failed sweep. Best-of-2 per staged key (round 15, after the r14
-    // driver artifact shipped a one-shot 34 s contended patch reading
-    // that six repo sweeps place at 4.8-6.9 s): the published map is the
-    // whole run with the lower total — a per-stage min across runs would
-    // sum to a wall that never happened.
-    val stages: Map[String, Map[String, Double]] =
-      SparkEntry.stagedWalls.flatMap { case (name, fn) =>
-        def once(): Option[Map[String, Double]] = {
+    // staged sub-walls behind the same barrier; a failure drops the entry
+    val stages = SparkEntry.stagedWalls.filter(kv => results.contains(kv._1))
+      .flatMap { case (name, fn) =>
+        (1 to 2).flatMap { _ =>
           CheckpointBlocks.resetForMeasurement(spark, keepSet)
-          try Some(Scratch.scope(fn(spark, sfDir)))
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] staged $name failed: ${e.getMessage}")
-              None
-          }
-        }
-        Seq(once(), once()).flatten.minByOption(_.values.sum).map(name -> _)
+          attempt(s"staged $name")(Scratch.scope(fn(spark, sfDir)))
+        }.minByOption(_.values.sum).map(name -> _)
       }
-    // Locale.ROOT: a comma-decimal default locale (de_DE, fr_FR) would
-    // render 1,2345 and corrupt the one-line JSON artifact
-    def f(d: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, d)
-    def stagesJson: String = stages.map { case (k, m) =>
-      s"\"$k\":" + m.toSeq.sortBy(_._1)
-        .map { case (st, v) => s"\"$st\":${f(v)}" }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    // "queries" stays name->wall-seconds for driver compatibility;
-    // "queries_detail" carries {wall,cpu,load,gc,...} per query
-    val qs = results.map { case (k, t) => s"\"$k\":${f(t.wall)}" }
-      .mkString("{", ",", "}")
-    val detail = results.map { case (k, t) =>
-      s"""\"$k\":{"wall":${f(t.wall)},"cpu":${f(t.cpu)},"load":${f(t.load)},""" +
-        s""""eff_cores":${f(effCores(t))},"gc_sec":${f(t.gc)},""" +
-        s""""blocks_dropped":${t.dropped},"storage_mb":${f(t.storageMb)},""" +
-        s""""contended":${isStarved(t)},""" +
-        s""""low_par":${isLowParallelism(t)},"div_baseline":${t.divBaseline},""" +
-        s""""retimed":${t.retimed}}"""
-    }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, t) if t.failed => s"\"$k\"" }
-      .mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.map(_.wall).sum else 0.0
-    val cpuTotal = results.values.map(t => math.max(t.cpu, 0.0)).sum
-    val gcTotal = results.values.map(_.gc).sum
-    val heapMaxMb = Runtime.getRuntime.maxMemory / 1048576
-    val driverLine =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,""" +
-        s""""queries_detail":$detail,"stages":$stagesJson,"failed":$failed,""" +
-        s""""cpu_total_sec":${f(cpuTotal)},"gc_total_sec":${f(gcTotal)},""" +
-        s""""cpus":$cpus,"heap_max_mb":$heapMaxMb,""" +
-        s""""load_avg":${f(osBean.getSystemLoadAverage)},""" +
-        s""""contended_at_start":$contendedAtStart,"load_at_start":${f(loadAtStart)},""" +
-        s""""sf":"$sfDir"}"""
-    println(driverLine)
-    // The driver tail-scrapes sbt stdout for this line and has landed
-    // `"parsed": null` two rounds running (sbt [info] prefixes + 2000-char
-    // truncation). The line itself, byte-identical, also goes to a
-    // dedicated file so the parseable artifact always exists on disk.
-    val linePath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_LINE", "bench/driver_line.json")
-    try {
-      val lp = java.nio.file.Paths.get(linePath)
-      if (lp.getParent != null) java.nio.file.Files.createDirectories(lp.getParent)
-      java.nio.file.Files.write(lp, (driverLine + "\n").getBytes("UTF-8"))
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] could not write $linePath: ${e.getMessage}")
-    }
-    // Compact trailing summary — must survive a 2000-char (even 500-char)
-    // tail capture on its own. `contended` mechanizes the wall>>cpu read:
-    // a query whose process-CPU seconds are well under its wall seconds
-    // spent that wall waiting for cores (after table warm-up there is no
-    // I/O wait to confuse it); a handful of such starved queries, or a hot
-    // load average at start, adjudicates the run as contention-poisoned.
-    val nFailed = results.values.count(_.failed)
-    val starved = results.collect { case (k, t) if isStarved(t) => k }
-    val lowPar = results.collect { case (k, t) if isLowParallelism(t) => k }
-    // final-tail adjudication (round 13, after the r12 chunk_split
-    // episode: the driver's contended-tail sweep flagged low_par:1 while
-    // the quiet sweep showed 0, and the artifact could not say which to
-    // believe): a low_par flag measured under a HOT load average is
-    // about the box, not the plan — name those queries so a reader
-    // discounts them without a quiet re-probe
-    val lowParHotLoad = results.collect {
-      case (k, t) if isLowParallelism(t) && t.load > loadThreshold => k }
-    val diverged = results.collect { case (k, t) if t.divBaseline => k }
-    // uniform-drift self-adjudication (round 13): the per-key divergence
-    // gate (3x) is blind to a GLOBAL multiplicative slide — the whole
-    // box running 10-40% slower inflates the total while div_baseline
-    // stays 0, and a reader comparing round totals cannot tell
-    // environment drift from plan regressions. The median per-key wall
-    // ratio vs the committed baseline IS that signal: ~1.0 → totals
-    // comparable; uniformly above 1 with div_baseline 0 and cpu_total
-    // flat-or-down → the box, not the code (the r13 episode: median
-    // 1.12, cpu_total DOWN 1690→1587, bisected to environment by
-    // re-measuring at the prior commit). Sub-0.2 s baselines are
-    // excluded — their ratios are scheduling noise.
-    val driftRatios = results.collect {
-      case (k, t) if !t.failed && baseline.get(k).exists(_ > 0.2) =>
-        t.wall / baseline(k)
-    }.toSeq.sorted
-    val medianVsBaseline =
-      if (driftRatios.isEmpty) -1.0 else driftRatios(driftRatios.size / 2)
-    val contended = contendedAtStart || starved.size >= 3 || lowPar.size >= 3
-    val top5 = results.toSeq.sortBy(-_._2.wall).take(5)
-      .map { case (k, t) => s"\"$k\":${f(t.wall)}" }.mkString("{", ",", "}")
-    // top5_clean: the slowest queries whose timing the heuristic TRUSTS
-    // (not starved even after their re-time) — the list a reader can
-    // take as real plan cost without a judge-side clean probe. A query
-    // still starved after best-of-3 stays out; if contention ate the
-    // whole tail this may hold fewer than 5 entries, which is itself
-    // the honest signal.
-    val top5Clean = results.toSeq.filter(kv => !isSuspect(kv._1, kv._2))
-      .sortBy(-_._2.wall).take(5)
-      .map { case (k, t) => s"\"$k\":${f(t.wall)}" }.mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","summary":true,""" +
-        s""""failed":$nFailed,"contended":$contended,""" +
-        s""""contended_at_start":$contendedAtStart,"starved":${starved.size},""" +
-        s""""low_par":${lowPar.size},""" +
-        s""""low_par_hot_load":${lowParHotLoad.map(k => s"\"$k\"").mkString("[", ",", "]")},""" +
-        s""""div_baseline":${diverged.size},""" +
-        s""""median_wall_vs_baseline":${f(medianVsBaseline)},""" +
-        s""""median_eff_cores":${f(medianEff)},"cpus":$cpus,""" +
-        s""""gc_total_sec":${f(gcTotal)},""" +
-        s""""retimed":${results.values.count(_.retimed)},""" +
-        s""""top5":$top5,"top5_clean":$top5Clean}""")
-    // FINAL stdout line (round 15, the judging-loop contract): the driver
-    // parses the END of stdout and BENCH_r01-r14 all carry "parsed": null —
-    // the full line above (~40 KB with queries_detail) never fit its
-    // capture, and the summary line lacks "queries". This line is the
-    // compact contract form — per-query walls at 2 decimals, no detail
-    // (detail lives in bench/last_run.json and bench/driver_line.json).
-    // Field order is deliberate: the summary scalars and top5_clean come
-    // AFTER the queries map, so even a capture that keeps only the last
-    // ~2000 characters of stdout still ends with complete totals plus the
-    // tail of the per-query map (the stored 2000-char artifact tails can
-    // never hold all 190 query names — those alone are ~3 KB).
-    def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    val qsCompact = results.map { case (k, t) => s"\"$k\":${f2(t.wall)}" }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qsCompact,""" +
-        s""""failed":$nFailed,"contended":$contended,""" +
-        s""""cpu_total_sec":${f2(cpuTotal)},""" +
-        s""""median_wall_vs_baseline":${f(medianVsBaseline)},""" +
-        s""""median_eff_cores":${f2(medianEff)},"cpus":$cpus,""" +
-        s""""retimed":${results.values.count(_.retimed)},""" +
-        s""""low_par":${lowPar.size},"div_baseline":${diverged.size},""" +
-        s""""top5_clean":$top5Clean,"sf":"$sfDir"}""")
-    // Complete per-query history to a repo file (BENCH_r* artifact tails
-    // truncate to ~13 of 115 entries): every entry with wall/cpu/load/
-    // eff_cores/flags, pretty-enough for git diffs, so round-over-round
-    // per-query regressions are detectable without artifact archaeology.
+    val sweep = first.copy(results = results, stages = stages)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/last_run.json")
-    try {
-      val p = java.nio.file.Paths.get(outPath)
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      val entries = results.toSeq.sortBy(-_._2.wall).map { case (k, t) =>
-        s"""  "$k": {"wall": ${f(t.wall)}, "cpu": ${f(t.cpu)}, """ +
-          s""""load": ${f(t.load)}, "eff_cores": ${f(effCores(t))}, """ +
-          s""""gc_sec": ${f(t.gc)}, "blocks_dropped": ${t.dropped}, """ +
-          s""""storage_mb": ${f(t.storageMb)}, """ +
-          s""""contended": ${isStarved(t)}, "low_par": ${isLowParallelism(t)}, """ +
-          s""""div_baseline": ${t.divBaseline}, """ +
-          s""""retimed": ${t.retimed}, "failed": ${t.failed}}"""
-      }.mkString(",\n")
-      val body =
-        s"""{
-           |"_meta": {"sf": "$sfDir", "total_sec": ${f(total)},
-           |  "cpu_total_sec": ${f(cpuTotal)}, "gc_total_sec": ${f(gcTotal)},
-           |  "cpus": $cpus, "heap_max_mb": $heapMaxMb,
-           |  "n_queries": ${results.size},
-           |  "failed": $nFailed, "contended": $contended,
-           |  "contended_at_start": $contendedAtStart,
-           |  "load_at_start": ${f(loadAtStart)},
-           |  "median_eff_cores": ${f(medianEff)},
-           |  "starved": ${starved.size}, "low_par": ${lowPar.size},
-           |  "low_par_hot_load": ${lowParHotLoad.map(k => s"\"$k\"").mkString("[", ",", "]")},
-           |  "div_baseline": ${diverged.size},
-           |  "median_wall_vs_baseline": ${f(medianVsBaseline)},
-           |  "baseline_entries": ${baseline.size},
-           |  "retimed": ${results.values.count(_.retimed)},
-           |  "stages": $stagesJson},
-           |$entries
-           |}""".stripMargin
-      java.nio.file.Files.write(p, body.getBytes("UTF-8"))
-      System.err.println(s"[bench] full per-query history written to $outPath")
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+    attempt(s"writing $outPath") {
+      val p = Paths.get(outPath)
+      if (p.getParent != null) Files.createDirectories(p.getParent)
+      Files.writeString(p, lastRunJson(sweep) + "\n")
     }
-    val anyFailed = results.values.exists(_.failed)
     spark.stop()
-    if (anyFailed) sys.exit(1)
+    println(compactLine(sweep))
+    println(summaryLine(sweep))
+    if (sweep.nFailed > 0) sys.exit(1)
   }
 }

@@ -252,22 +252,22 @@ object SparkEntry {
       saMergedArray(s, dir), pplScoredT(s, dir), knnGraphT(s, dir),
       compsT(s, dir), bm25TfT(s, dir), bigramCountsT(s, dir))
 
-  /** Bench-only per-stage wall split for the incremental trio (review
-    * round-11 §5): the oracle keys deliberately price v1-build + patch
-    * in one cell (the from-scratch oracle hash IS the patch ≡ rebuild
-    * proof); these cells report the `v1_build` / `patch` split so the
-    * sweep's top entries stop reading as slow patches. Bench runs each
-    * twice after the normal measurement and keeps the run with the
-    * lower total; not oracle keys.
+  /** Bench-only per-stage wall split for the incremental trio: each of
+    * their [[queries]] cells runs a [[CorpusOps.IncrementalKey]], pricing
+    * v1-build + patch together (the from-scratch oracle hash IS the
+    * patch ≡ rebuild proof); these cells time the same pair's `v1_build`
+    * / `patch` halves so the sweep's top entries stop reading as slow
+    * patches. Bench runs each twice after the normal
+    * measurement and keeps the run with the lower total; not oracle keys.
     */
   def stagedWalls: Map[String, (SparkSession, String) => Map[String, Double]] =
     Map(
       "corpus_clean_incremental" -> ((s, dir) =>
-        CorpusOps.cleanIncrementalStages(tbl(s, dir, "documents"))),
+        CorpusOps.cleanIncrementalKey(tbl(s, dir, "documents")).walls),
       "corpus_clean_incremental_small" -> ((s, dir) =>
-        CorpusOps.cleanIncrementalSmallStages(tbl(s, dir, "documents"))),
+        CorpusOps.cleanIncrementalSmallKey(tbl(s, dir, "documents")).walls),
       "corpus_clean_incremental_decontam" -> ((s, dir) =>
-        CorpusOps.cleanIncrementalDecontamStages(tbl(s, dir, "documents"))))
+        CorpusOps.cleanIncrementalDecontamKey(tbl(s, dir, "documents")).walls))
 
   /** Materialize every shared table and train the per-dir tokenizer
     * models — the bench warm-up's "load the deployment artifacts" step,
@@ -824,18 +824,18 @@ object SparkEntry {
     // clean(v2), touching only churn — the oracle twin cleans v2 from
     // scratch, so a hash match IS the patch ≡ rebuild equivalence proof
     "corpus_clean_incremental" -> ((s, dir) =>
-      CorpusOps.cleanIncrementalKey(tbl(s, dir, "documents"))),
+      CorpusOps.cleanIncrementalKey(tbl(s, dir, "documents")).run),
     // the SMALL-churn sibling: the production daily-patch regime — every
     // churn probe a driver-literal InSet (the bucket-pruned path) — while
     // the key above prices the join-driven big-churn fallback; oracle
     // twin cleans v2 from scratch either way
     "corpus_clean_incremental_small" -> ((s, dir) =>
-      CorpusOps.cleanIncrementalSmallKey(tbl(s, dir, "documents"))),
+      CorpusOps.cleanIncrementalSmallKey(tbl(s, dir, "documents")).run),
     // the FULL published composition patched (… + decontamination):
     // churned train docs re-check against the frozen benchmark grams;
     // oracle twin runs cleanCorpusDecontam on v2 from scratch
     "corpus_clean_incremental_decontam" -> ((s, dir) =>
-      CorpusOps.cleanIncrementalDecontamKey(tbl(s, dir, "documents"))),
+      CorpusOps.cleanIncrementalDecontamKey(tbl(s, dir, "documents")).run),
     // DPO pair hygiene: drop pairs whose two sides are near-duplicates
     // (simhash, hamming ≤ 3) — the pair table broadcasts into the anti-join
     "dpo_pairs_nodup" -> ((s, dir) => PostTrainOps.dpoPairsNodup(docsT(s, dir))),

@@ -1350,6 +1350,26 @@ object CorpusOps {
       DecontamState(nextClean, contamV2, benchIdsV2, benchGramsV2))
   }
 
+  /** One incremental oracle key as its two halves over one pair of
+    * fixture versions: `build`, the from-scratch v1 state a daily
+    * deployment pays ONCE, and `patch`, the churn-proportional daily work
+    * (diff + patch against that state). [[run]] composes them — the key's
+    * cell deliberately prices both, since the from-scratch oracle hash IS
+    * the patch ≡ rebuild proof — and [[walls]] times each half for the
+    * bench's staged split (`v1_build` / `patch`, bench observability, not
+    * an operator), so the sweep's slowest cells stop reading as "the
+    * patch is slow" when most of each wall is the deliberate rebuild.
+    */
+  final class IncrementalKey[S](build: => S, patch: S => DataFrame) {
+    def run: DataFrame = patch(build)
+    def walls: Map[String, Double] = {
+      val (st, b) = Stages.measure(build)
+      val (_, p) = Stages.measure(
+        patch(st).write.format("noop").mode("overwrite").save())
+      Map("v1_build" -> b.wallSec, "patch" -> p.wallSec)
+    }
+  }
+
   /** Oracle key for the decontam-inclusive patch: the
     * [[corpusDiffKey]] churn shape restricted to TRAIN docs (benchmark
     * docs ride both versions unchanged — the static-eval-suite case,
@@ -1357,15 +1377,15 @@ object CorpusOps {
     * full-redo path is spec-driven). The DuckDB twin runs the full
     * [[sqlCleanCorpusDecontam]] on v2 from scratch.
     */
-  def cleanIncrementalDecontamKey(docs: DataFrame): DataFrame = {
+  def cleanIncrementalDecontamKey(docs: DataFrame): IncrementalKey[DecontamState] = {
     val isBench = col("source") === PretrainOps.BenchmarkSource
     val v1 = docs.filter(col("doc_id") % 7 =!= 0 || isBench)
     val v2 = docs.filter(col("doc_id") % 5 =!= 0 || isBench)
       .withColumn("text",
         when(col("doc_id") % 11 === 0 && !isBench, upper(col("text")))
           .otherwise(col("text")))
-    cleanCorpusIncrementalDecontam(v2, cleanStateDecontam(v1),
-      corpusDiff(v1, v2))._1
+    new IncrementalKey(cleanStateDecontam(v1), (st: DecontamState) =>
+      cleanCorpusIncrementalDecontam(v2, st, corpusDiff(v1, v2))._1)
   }
 
   def sqlCleanIncrementalDecontam: String =
@@ -1384,7 +1404,7 @@ object CorpusOps {
     * Hash-exact agreement is the equivalence proof the operator exists
     * for: patch(clean(v1), diff(v1→v2)) ≡ clean(v2).
     */
-  def cleanIncrementalKey(docs: DataFrame): DataFrame = {
+  def cleanIncrementalKey(docs: DataFrame): IncrementalKey[CleanState] = {
     val v1 = docs.filter(col("doc_id") % 7 =!= 0)
     val v2 = docs.filter(col("doc_id") % 5 =!= 0)
       .withColumn("text",
@@ -1394,7 +1414,8 @@ object CorpusOps {
     // corpus, where the InSet core's driver-set probes cost more than
     // the joins they replace (measured: 10.4 s vs 8.2 s in-sweep) — the
     // InSet/bucket-pruned path is the SMALL-churn production patch
-    cleanCorpusIncremental(v2, cleanState(v1), corpusDiff(v1, v2))._1
+    new IncrementalKey(cleanState(v1), (st: CleanState) =>
+      cleanCorpusIncremental(v2, st, corpusDiff(v1, v2))._1)
   }
 
   /** Oracle twin: [[sqlCleanCorpus]] rebased wholesale onto the v2
@@ -1415,15 +1436,14 @@ object CorpusOps {
     * InSet path's patch ≡ rebuild on REAL fixture data end-to-end, not
     * just on the spec's planted corpus.
     */
-  def cleanIncrementalSmallKey(docs: DataFrame): DataFrame = {
-    val v1 = docs
+  def cleanIncrementalSmallKey(docs: DataFrame): IncrementalKey[CleanState] = {
     val v2 = docs.filter(col("doc_id") % 97 =!= 0)
       .withColumn("text",
         when(col("doc_id") % 89 === 0, upper(col("text")))
           .otherwise(col("text")))
-    val st = cleanState(v1)
-    cleanCorpusIncrementalInSet(docs.sparkSession, v2, st,
-      DedupOps.bandRows(st.sigs), corpusDiff(v1, v2))._1
+    new IncrementalKey(cleanState(docs), (st: CleanState) =>
+      cleanCorpusIncrementalInSet(docs.sparkSession, v2, st,
+        DedupOps.bandRows(st.sigs), corpusDiff(docs, v2))._1)
   }
 
   def sqlCleanIncrementalSmall: String =
@@ -1431,57 +1451,6 @@ object CorpusOps {
       "THEN upper(text) ELSE text END AS text) " +
       "FROM documents WHERE doc_id % 97 <> 0),\n" +
       sqlCleanCorpus.stripPrefix("WITH ").replace("FROM documents", "FROM v2docs")
-
-  // -------------------------------------------- bench-only stage pricing
-
-  /** Per-stage wall split of the incremental oracle keys — bench
-    * observability, not an operator (review round-11 §5): each oracle
-    * key deliberately prices v1-BUILD + diff + patch in ONE cell (the
-    * from-scratch oracle hash IS the patch ≡ rebuild proof), which
-    * makes the sweep's slowest entries read as "the patch is slow" when
-    * ~80% of each wall is the deliberate double-priced rebuild. These
-    * split the wall into `v1_build` (the from-scratch state build a
-    * daily deployment pays ONCE) and `patch` (the churn-proportional
-    * daily work: diff + patch + clean materialization). The timed
-    * computations are byte-identical to the oracle keys'.
-    */
-  private def buildPatchWalls[S](build: => S)(patch: S => DataFrame): Map[String, Double] = {
-    val (st, b) = Stages.measure(build)
-    val (_, p) = Stages.measure(
-      patch(st).write.format("noop").mode("overwrite").save())
-    Map("v1_build" -> b.wallSec, "patch" -> p.wallSec)
-  }
-
-  def cleanIncrementalStages(docs: DataFrame): Map[String, Double] = {
-    val v1 = docs.filter(col("doc_id") % 7 =!= 0)
-    val v2 = docs.filter(col("doc_id") % 5 =!= 0)
-      .withColumn("text",
-        when(col("doc_id") % 11 === 0, upper(col("text")))
-          .otherwise(col("text")))
-    buildPatchWalls(cleanState(v1))(st =>
-      cleanCorpusIncremental(v2, st, corpusDiff(v1, v2))._1)
-  }
-
-  def cleanIncrementalSmallStages(docs: DataFrame): Map[String, Double] = {
-    val v2 = docs.filter(col("doc_id") % 97 =!= 0)
-      .withColumn("text",
-        when(col("doc_id") % 89 === 0, upper(col("text")))
-          .otherwise(col("text")))
-    buildPatchWalls(cleanState(docs))(st =>
-      cleanCorpusIncrementalInSet(docs.sparkSession, v2, st,
-        DedupOps.bandRows(st.sigs), corpusDiff(docs, v2))._1)
-  }
-
-  def cleanIncrementalDecontamStages(docs: DataFrame): Map[String, Double] = {
-    val isBench = col("source") === PretrainOps.BenchmarkSource
-    val v1 = docs.filter(col("doc_id") % 7 =!= 0 || isBench)
-    val v2 = docs.filter(col("doc_id") % 5 =!= 0 || isBench)
-      .withColumn("text",
-        when(col("doc_id") % 11 === 0 && !isBench, upper(col("text")))
-          .otherwise(col("text")))
-    buildPatchWalls(cleanStateDecontam(v1))(st =>
-      cleanCorpusIncrementalDecontam(v2, st, corpusDiff(v1, v2))._1)
-  }
 
   def sqlCorpusDiff: String =
     """WITH a AS (

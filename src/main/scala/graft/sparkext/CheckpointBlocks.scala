@@ -37,10 +37,10 @@ object CheckpointBlocks {
   def cacheEntryCount(spark: SparkSession): Int =
     entries(spark.sharedState.cacheManager).size
 
-  /** Per-query measurement hygiene, shared by Bench / BenchProbe /
-    * PlanInventory so the harnesses always measure the same thing: drop
-    * every cached intermediate and every pinned checkpoint RDD EXCEPT the
-    * sweep-lifetime shared tables in `keep`.
+  /** Per-query measurement hygiene, shared by Bench (a full sweep or a
+    * named-key probe) and PlanInventory so the harnesses always measure
+    * the same thing: drop every cached intermediate and every pinned
+    * checkpoint RDD EXCEPT the sweep-lifetime shared tables in `keep`.
     *
     * Why a keep-set (round-10 lesson): the old all-or-nothing barrier
     * (`clearCache()` + unpersist-everything) dropped the shared token/

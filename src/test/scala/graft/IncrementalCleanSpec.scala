@@ -48,7 +48,7 @@ class IncrementalCleanSpec extends SparkSuite {
           .otherwise(col("text")))
     assertEquiv(v1, v2)
     // and the registered key is exactly this composition
-    assert(rows(CorpusOps.cleanIncrementalKey(base)) ===
+    assert(rows(CorpusOps.cleanIncrementalKey(base).run) ===
       rows(CorpusOps.cleanCorpus(v2)))
   }
 
@@ -346,7 +346,7 @@ class IncrementalCleanSpec extends SparkSuite {
       .withColumn("text",
         when(col("doc_id") % 11 === 0 && !isBench, upper(col("text")))
           .otherwise(col("text")))
-    assert(rows(CorpusOps.cleanIncrementalDecontamKey(base)) ===
+    assert(rows(CorpusOps.cleanIncrementalDecontamKey(base).run) ===
       rows(CorpusOps.cleanCorpusDecontam(v2)))
   }
 

@@ -331,7 +331,7 @@ class StreamingPipelineSpec extends SparkSuite {
     assert(ok == Set(1L, 2L, 3L, 4L) && err.isEmpty)
   }
 
-  test("stage timer: each flush adds the five sink.* stages, within addBatch, scraped on /metrics") {
+  test("stage timer: each flush adds the sink.cache_build/ship/demux stages, within addBatch, scraped on /metrics") {
     import graft.obs.Stages
     import graft.stream.{Metrics, MetricsEndpoint}
     val eventsDir = tmp("graft-stages-events")
