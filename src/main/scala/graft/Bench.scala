@@ -44,7 +44,10 @@ import scala.jdk.CollectionConverters._
   * baseline (`bench/baseline.json`, `SPARK_GRAFT_BENCH_BASELINE`). The
   * slowest suspects plus the top 8 by wall get one more run at sweep end
   * (best of 3, `retimed`). `median_wall_vs_baseline` reads a uniform
-  * drift of the whole box that the 3x gate cannot see.
+  * drift of the whole box that the 3x gate cannot see. Both compare like
+  * with like only: a baseline measured at another scale factor (sf-dir
+  * basename) or core count (its `_meta.sf`/`cpus`) judges nothing, and
+  * both read null (`baselineFor`).
   *
   * Baseline-refresh policy: the committed baseline is the last
   * consolidated quiet sweep. A deliberate plan change updates its own
@@ -104,14 +107,19 @@ object Bench {
     def contended: Boolean = contendedAtStart ||
       keysWhere(isStarved).size >= 3 || keysWhere(lowPar).size >= 3
     // median per-key wall ratio vs the baseline; sub-0.2 s rows are noise
-    def medianVsBaseline: Double = median(results.collect {
-      case (k, t) if !t.failed && baseline.get(k).exists(_ > 0.2) =>
-        t.wall / baseline(k) })
+    def medianVsBaseline: Option[Double] = Option.when(baseline.nonEmpty)(
+      median(results.collect {
+        case (k, t) if !t.failed && baseline.get(k).exists(_ > 0.2) =>
+          t.wall / baseline(k) }))
+    // a flag or ratio against no comparable baseline renders as null
+    def judged[A](v: A): Option[A] = Option.when(baseline.nonEmpty)(v)
   }
 
   private val json = new ObjectMapper()
   private def round(d: Double, places: Int): Double =
     math.rint(d * math.pow(10, places)) / math.pow(10, places)
+  private def num(d: Option[Double]): java.lang.Double =
+    d.map(v => java.lang.Double.valueOf(round(v, 4))).orNull
   private def walls(keys: Seq[(String, Timing)], places: Int): ObjectNode =
     keys.foldLeft(json.createObjectNode())((n, kt) =>
       n.put(kt._1, round(kt._2.wall, places)))
@@ -121,7 +129,7 @@ object Bench {
     json.createObjectNode().put("metric", "total")
       .put("value", round(s.total, 2)).put("unit", "sec")
       .put("cpu_total_sec", round(s.cpuTotal, 2)).put("failed", s.nFailed)
-      .put("median_wall_vs_baseline", round(s.medianVsBaseline, 4))
+      .put("median_wall_vs_baseline", num(s.medianVsBaseline))
       .put("cpus", s.cpus).put("sf", s.sf))
 
   /** The second-to-last stdout line: every key's wall, slowest first. */
@@ -144,8 +152,8 @@ object Bench {
     // a low_par flag measured under a hot load is about the box, not the plan
     s.keysWhere(t => s.lowPar(t) && t.load > LoadThreshold)
       .foldLeft(meta.putArray("low_par_hot_load"))(_.add(_))
-    meta.put("div_baseline", s.keysWhere(_.divBaseline).size)
-      .put("median_wall_vs_baseline", round(s.medianVsBaseline, 4))
+    meta.put("div_baseline", s.judged(Integer.valueOf(s.keysWhere(_.divBaseline).size)).orNull)
+      .put("median_wall_vs_baseline", num(s.medianVsBaseline))
       .put("baseline_entries", s.baseline.size).put("retimed", s.keysWhere(_.retimed).size)
       .set[ObjectNode]("top5", walls(s.slowest.take(5), 4))
     // the slowest keys whose timing no heuristic doubts; fewer than five
@@ -160,7 +168,8 @@ object Bench {
         .put("load", round(t.load, 4)).put("eff_cores", round(effCores(t), 4))
         .put("gc_sec", round(t.gc, 4)).put("blocks_dropped", t.dropped)
         .put("storage_mb", round(t.storageMb, 4)).put("contended", isStarved(t))
-        .put("low_par", s.lowPar(t)).put("div_baseline", t.divBaseline)
+        .put("low_par", s.lowPar(t))
+        .put("div_baseline", s.judged(java.lang.Boolean.valueOf(t.divBaseline)).orNull)
         .put("retimed", t.retimed).put("failed", t.failed)
     }
     json.writerWithDefaultPrettyPrinter().writeValueAsString(root)
@@ -172,6 +181,19 @@ object Bench {
       case e if e.getKey != "_meta" && e.getValue.path("wall").isNumber =>
         e.getKey -> e.getValue.get("wall").asDouble
     }.toMap
+
+  /** The baseline's walls if it was measured at this run's scale factor
+    * (sf-dir basename) and core count, else why not: a ratio between
+    * different corpora or core counts reads as box drift.
+    */
+  def baselineFor(text: String, sfDir: String, cpus: Int): Either[String, Map[String, Double]] = {
+    val meta = json.readTree(text).path("_meta")
+    def sfName(dir: String) = dir.stripSuffix("/").split('/').last
+    val (sf, at) = (sfName(meta.path("sf").asText("")), meta.path("cpus").asInt(-1))
+    if (sf == sfName(sfDir) && at == cpus) Right(loadBaseline(text))
+    else Left(s"baseline measured at $sf on $at cpus, this run is ${sfName(sfDir)} " +
+      s"on $cpus — div_baseline and median_wall_vs_baseline are null")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -221,11 +243,16 @@ object Bench {
     }
     val baselinePath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "bench/baseline.json")
-    val baseline = try loadBaseline(Files.readString(Paths.get(baselinePath)))
-      catch { case _: java.io.IOException => Map.empty[String, Double] }
-    if (baseline.isEmpty && Files.exists(Paths.get(baselinePath)))
-      System.err.println(s"[bench] WARNING: $baselinePath holds no baseline " +
-        "entries — divergence adjudication is OFF this run")
+    val baseline =
+      try baselineFor(Files.readString(Paths.get(baselinePath)), sfDir, cpus) match {
+        case Right(b) =>
+          if (b.isEmpty) System.err.println(s"[bench] WARNING: $baselinePath " +
+            "holds no baseline entries — divergence adjudication is OFF this run")
+          b
+        case Left(why) =>
+          System.err.println(s"[bench] $baselinePath: $why")
+          Map.empty[String, Double]
+      } catch { case _: java.io.IOException => Map.empty[String, Double] }
     val firstPass = keys.map { name =>
       // best of 2; a throw's time-to-failure is not a measurement
       val runs = (1 to 2).map(_ => timeOnce(name))

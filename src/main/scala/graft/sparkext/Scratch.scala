@@ -3,9 +3,12 @@ package org.apache.spark.sql.graftext
 import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.storage.StorageLevel
@@ -81,6 +84,30 @@ object Scratch {
 
   /** `df.cache()`, owned by the innermost open scope. */
   def cache(df: DataFrame): DataFrame = register(Frame(df.cache(), pinned = false))
+
+  /** `df` computed once into a persisted row buffer, by one job that also
+    * folds each partition's rows with `fold` on the way in: a pass that
+    * must both keep a frame and measure it (a flush's census) runs no
+    * second job. The frame reads the buffer (`rows`, for narrow RDD work
+    * such as [[Slices]]); both are owned by the innermost scope. The
+    * buffer is a local checkpoint: every read sees the rows the fold saw,
+    * in the same order, and a lost block fails the job instead of
+    * recomputing a differently ordered partition.
+    */
+  def persist[A: ClassTag](df: DataFrame)(
+      fold: Iterator[InternalRow] => A): Persisted[A] = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+      .persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+    val frame = keep(df.sparkSession.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, df.schema))
+    Persisted(frame, rows, rows.sparkContext.runJob(rows, fold))
+  }
+
+  /** [[persist]]'s result: the frame, its row buffer, the folds in
+    * partition order.
+    */
+  final case class Persisted[A](frame: DataFrame, rows: RDD[InternalRow],
+      folds: Array[A])
 
   /** A materialized frame (cache or checkpoint), owned by the innermost
     * scope. Only a checkpoint AT the frame's root is its own: a cache over

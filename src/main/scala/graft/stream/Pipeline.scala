@@ -1,10 +1,15 @@
 package graft.stream
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftext.Scratch
+import org.apache.spark.sql.graftext.{Scratch, Slices}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.conf.GraftConfig
 import graft.obs.Stages
@@ -23,9 +28,9 @@ import graft.ops.CdcOps
   *     typing → routing → handler → in-batch LWW dedup → NDJSON encode —
   *     applied per micro-batch inside foreachBatch (the micro-batch IS the
   *     reference's flush batch, bulk.go:164-173).
-  *   - S3 ES bulk sink: one NDJSON file per output partition per batch ≙
+  *   - S3 ES bulk sink: one NDJSON file per request slice per batch ≙
   *     one concurrent `_bulk` request per goroutine-chunk (bulk.go:297-315);
-  *     `concurrentRequest` maps to repartition count.
+  *     `concurrentRequest` maps to the slice count.
   *   - R1 response demux: actions failing sink validation are split to a
   *     dead-letter directory (≙ ResponseHandler.OnError,
   *     response_handler.go:8-23) instead of failing the batch.
@@ -366,9 +371,7 @@ object ResponseHandler {
     * (overwrite — replays clobber their own output).
     */
   private[stream] def fileShip(bulkOutDir: String): (DataFrame, Long) => Unit =
-    (payload, batchId) =>
-      payload.coalesce(1).write.mode("overwrite")
-        .text(s"$bulkOutDir/rejection_$batchId")
+    (payload, batchId) => Slices.writeText(payload, s"$bulkOutDir/rejection_$batchId")
 
   /** Driver-collect line bound for [[httpShip]]: rejections are
     * failure-proportional, so the collect is usually tiny — but a
@@ -572,22 +575,32 @@ object EsBulkSink {
         over(nActions, batchSizeLimit.toLong)).max)
     }
 
-  /** The flush skeleton of both transports (bulk.go:253-278): one cache
-    * and one census pass over it before the ship, in one [[Scratch.scope]]
-    * (it frees the cache when a step throws too: a streaming engine
-    * retries failed batches). Each step is a `sink.*` [[Stages]] stage.
-    *  1. `sink.cache_build`: cache the last-write-wins survivors (B1) with
-    *     their `_bulk` lines, plus every key-less action (no doc id or
-    *     index): a null key is no document identity, so each gets a
-    *     window key of its own instead of collapsing into one null-keyed
-    *     row. One census per (key-less, index, action) — rows and payload
-    *     bytes — forces the whole cache.
+  /** A flush's keyed payload: `(event_id, _bulk lines)` of every keyed
+    * LWW survivor in the persisted order, `counts` per partition (what
+    * [[Slices.ntile]] cuts by), and the payload bytes.
+    */
+  private[stream] final case class Payload(lines: RDD[(Long, UTF8String)],
+      counts: Array[Long], bytes: Long) {
+    def actions: Long = counts.sum
+  }
+
+  /** The flush skeleton of both transports (bulk.go:253-278), three Spark
+    * jobs, in one [[Scratch.scope]] (it frees the buffer when a step
+    * throws too: a streaming engine retries failed batches). Each step is
+    * a `sink.*` [[Stages]] stage.
+    *  1. `sink.cache_build` (the LWW exchange's map stage, then one job):
+    *     persist the last-write-wins survivors (B1) with their `_bulk`
+    *     lines, plus every key-less action (no doc id or index): a null
+    *     key is no document identity, so each gets a window key of its
+    *     own instead of collapsing into one null-keyed row. The pass that
+    *     fills the buffer folds the census per partition — the keyed-row
+    *     count, and rows and payload bytes per (key-less, index, action).
     *  2. `sink.dead_letter`: OnError with the key-less rows, only when the
     *     census counted any.
-    *  3. `sink.ship`: `ship(payload, actions, bytes)` gets the keyed
-    *     `(event_id, value)` rows and their census totals, and returns the
-    *     per-item failures by event id (a file write has none). Only this
-    *     step differs between the sinks.
+    *  3. `sink.ship` (one job): `ship` gets the keyed rows as a
+    *     [[Payload]] and returns the per-item failures by event id (a file
+    *     write has none). Only this step differs between the sinks; both
+    *     cut the payload into requests with [[Slices]], no shuffle.
     *  4. The R3 counters (metric.go:56-96) and `dead_letter_total`, from
     *     the census once the ship returns: at-least-once like the
     *     reference (bulk.go:392-411 vs 271-276), a replayed batch
@@ -596,25 +609,39 @@ object EsBulkSink {
     */
   private[stream] def flush(batch: DataFrame, batchId: Long,
       responseHandler: ResponseHandler, esMajor: Int, typeName: String)(
-      ship: (DataFrame, Long, Long) => Map[Long, String]): Unit = Scratch.scope {
+      ship: Payload => Map[Long, String]): Unit = Scratch.scope {
     val keyless = col("doc_id").isNull || col("index_name").isNull
     val kept = CdcOps.dedupLastWriteWins(
       batch.withColumn("_lone", when(keyless, monotonically_increasing_id())),
       Seq(col("_lone"))).drop("_lone")
-    val cached = Scratch.cache(
-      kept.withColumn("value", CdcOps.bulkLines(kept, esMajor, typeName)))
-    val (bad, good) = Stages.time("sink.cache_build")(
-      cached.groupBy(keyless, col("index_name"), col("action_type"))
-        .agg(count(lit(1)), sum(octet_length(col("value"))))
-        .collect().toSeq.partition(_.getBoolean(0)))
-    val actions = cached.drop("value")
+    val encoded = kept.withColumn("value", CdcOps.bulkLines(kept, esMajor, typeName))
+    val Seq(id, doc, index, action, value) =
+      Seq("event_id", "doc_id", "index_name", "action_type", "value")
+        .map(encoded.schema.fieldIndex)
+    val lone: InternalRow => Boolean = r => r.isNullAt(doc) || r.isNullAt(index)
+    val str: (InternalRow, Int) => String =
+      (r, i) => if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    val built = Stages.time("sink.cache_build")(Scratch.persist(encoded) { rows =>
+      val census = mutable.HashMap.empty[(Boolean, String, String), (Long, Long)]
+      rows.foreach { r =>
+        val k = (lone(r), str(r, index), str(r, action))
+        val (n, b) = census.getOrElse(k, (0L, 0L))
+        census(k) = (n + 1, b + r.getUTF8String(value).numBytes)
+      }
+      census.toMap
+    })
+    val (bad, good) = built.folds.toSeq.flatten
+      .groupMapReduce(_._1)(_._2)((x, y) => (x._1 + y._1, x._2 + y._2))
+      .toSeq.partition(_._1._1)
+    val actions = built.frame.drop("value")
     if (bad.nonEmpty) Stages.time("sink.dead_letter")(
       responseHandler.onError(actions.filter(keyless), batchId))
-    val errors = Stages.time("sink.ship")(
-      ship(cached.filter(!keyless).select("event_id", "value"),
-        good.map(_.getLong(3)).sum, good.map(_.getLong(4)).sum))
-    good.foreach(r => Metrics.record(r.getString(1), r.getString(2), r.getLong(3)))
-    bad.foreach(r => Metrics.recordDeadLetter(r.getString(1), r.getLong(3)))
+    val errors = Stages.time("sink.ship")(ship(Payload(
+      built.rows.filter(!lone(_)).map(r => (r.getLong(id), r.getUTF8String(value))),
+      built.folds.map(_.collect { case ((false, _, _), (n, _)) => n }.sum),
+      good.map(_._2._2).sum)))
+    good.foreach { case ((_, idx, act), (n, _)) => Metrics.record(idx, act, n) }
+    bad.foreach { case ((_, idx, _), (n, _)) => Metrics.recordDeadLetter(idx, n) }
     Stages.time("sink.demux")(handleResponseByEventId(
       actions.filter(!keyless), errors, responseHandler, batchId))
   }
@@ -623,29 +650,31 @@ object EsBulkSink {
     * 1. in-batch last-write-wins dedup (B1);
     * 2. R1 demux: invalid actions (no doc id / no index) → dead-letter
     *    parquet (OnError); valid → bulk payload (OnSuccess path);
-    * 3. B5: exactly `concurrentRequest` output files per batch, each ≙ one
-    *    concurrent `_bulk` request — more when the B2 flush limits bind
-    *    (for files the split is about per-request byte/count bounds, not
-    *    in-flight concurrency; the HTTP sink caps in-flight separately).
-    *    The per-file bound is approximate under row-size skew
-    *    (round-robin balances rows).
+    * 3. B5: the keyed actions cut into exactly `concurrentRequest` ntile
+    *    slices (sizes differ by at most 1, as slices.go:18-39) — more when
+    *    the B2 flush limits bind (for files the split is about per-request
+    *    byte/count bounds, not in-flight concurrency; the HTTP sink caps
+    *    in-flight separately). Each slice is one `_bulk` request, written
+    *    by the task that holds it as `batch_<batchId>/part-<r>.txt`
+    *    ([[Slices.writeLines]]: visible per task, as the reference's
+    *    goroutines post theirs); an empty slice other than the first
+    *    writes no file. The byte bound is exact only on average: slices
+    *    balance rows, not bytes.
     */
   def writeBatch(batch: DataFrame, batchId: Long, bulkOutDir: String,
       responseHandler: ResponseHandler, concurrentRequest: Int,
       esMajor: Int = 8, typeName: String = "_doc",
       batchByteSizeLimit: Long = 0L, batchSizeLimit: Int = 0): Unit =
-    flush(batch, batchId, responseHandler, esMajor, typeName) {
-        (payload, nActions, nBytes) =>
-      val nRequests = limitSplit(nActions, nBytes, concurrentRequest,
+    flush(batch, batchId, responseHandler, esMajor, typeName) { payload =>
+      val nRequests = limitSplit(payload.actions, payload.bytes, concurrentRequest,
         batchByteSizeLimit, batchSizeLimit).getOrElse(concurrentRequest)
-      // overwrite INTO the per-batch directory: a replayed batch (failure
+      // the batch directory is cleared first: a replayed batch (failure
       // after partial write, before checkpoint commit) clobbers its own
       // partial output instead of duplicating it — effectively-once files
       // on top of the at-least-once ack contract
-      payload.select("value")
-        .repartition(nRequests)
-        .write.mode("overwrite")
-        .text(s"$bulkOutDir/batch_$batchId")
+      Slices.writeLines(
+        Slices.ntile(payload.lines.map(_._2), payload.counts, math.max(1, nRequests)),
+        s"$bulkOutDir/batch_$batchId")
       Map.empty
     }
 }

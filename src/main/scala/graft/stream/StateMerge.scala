@@ -2,6 +2,7 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Slices
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.ops.CdcOps
@@ -128,8 +129,7 @@ object StateMerge {
       if (on) useRocksDbStateStore(spark) else useDefaultStateStore(spark))
     Leg.start(upsertStream(spark, eventsDir), "script-update",
         checkpointDir, trigger) { (batch, batchId) =>
-      encodeUpsert(batch, indexName)
-        .coalesce(1).write.mode("overwrite").text(s"$bulkOutDir/batch_$batchId")
+      Slices.writeText(encodeUpsert(batch, indexName), s"$bulkOutDir/batch_$batchId")
     }
   }
 }

@@ -104,6 +104,35 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.loadBaseline(compact) == expected)
   }
 
+  test("baseline gate: judged only at the baseline's sf and cpus, null otherwise") {
+    val text = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("bench/baseline.json"))
+    val meta = json.readTree(text).get("_meta")
+    val (sf, cpus) = (meta.get("sf").asText, meta.get("cpus").asInt)
+    // the sf dir matches by basename, wherever the corpus lives
+    val sfDir = "/data/graft/" + sf.stripSuffix("/").split('/').last + "/"
+    assert(Bench.baselineFor(text, sfDir, cpus) == Right(Bench.loadBaseline(text)))
+    for ((dir, c) <- Seq((sfDir, cpus + 1), ("/data/graft/sf0.001", cpus),
+        ("/data/graft/sf0.001", 4)))
+      assert(Bench.baselineFor(text, dir, c).left.exists(_.contains("null")), s"$dir $c")
+    // matched: numbers; unmatched (no baseline): nulls, and one fewer
+    // judgement per key, nothing else
+    val judged = json.readTree(Bench.summaryLine(sweep))
+    assert(judged.get("median_wall_vs_baseline").isNumber)
+    val blind = sweep.copy(baseline = Map.empty)
+    assert(json.readTree(Bench.summaryLine(blind)).get("median_wall_vs_baseline").isNull)
+    val root = json.readTree(Bench.lastRunJson(blind))
+    assert(root.get("_meta").get("div_baseline").isNull)
+    assert(root.get("_meta").get("median_wall_vs_baseline").isNull)
+    root.properties().asScala.filter(_.getKey != "_meta").foreach { e =>
+      assert(e.getValue.get("div_baseline").isNull, e.getKey)
+      assert(e.getValue.get("wall").isNumber, e.getKey)
+    }
+    val full = json.readTree(Bench.lastRunJson(sweep))
+    assert(full.get("_meta").get("div_baseline").isNumber)
+    assert(full.get(names.head).get("div_baseline").isBoolean)
+  }
+
   test("Verify oracle_sql.json: tab, CR, quote, backslash and \\u0001 round-trip") {
     val sql = "SELECT\t'a\"b' AS q,\r\n 'c\\d' AS bs, '\u0001' AS ctl FROM t"
     val out = Verify.oracleJson(Map("k" -> sql, "plain" -> "SELECT 1"))

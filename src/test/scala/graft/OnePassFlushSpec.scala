@@ -63,6 +63,23 @@ class OnePassFlushSpec extends SparkSuite {
     new java.io.File(dir).listFiles().toSeq
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".txt"))
 
+  private def lines(f: java.io.File): List[String] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().toList finally src.close()
+  }
+
+  private val Meta = """\{"(index|delete|update|create)":\{.*""".r
+
+  /** Every file left in `dir` is a `part-<r>.txt` data file or a `.`/`_`
+    * sidecar (checksums), and no temp file survives the write.
+    */
+  private def assertOnlyParts(dir: String, clue: String): Unit =
+    new java.io.File(dir).listFiles().map(_.getName).foreach { n =>
+      assert(n.matches("""part-\d{5}\.txt""") ||
+        ((n.startsWith(".") || n.startsWith("_")) && !n.contains(".tmp")),
+        s"unexpected file $n in $dir ($clue)")
+    }
+
   private def counterDelta(before: Map[String, Long]): Map[String, Long] =
     Metrics.snapshot().collect {
       case (k, v) if k.contains("{index=eqv_") || k.startsWith("dead_letter_total{index=}") =>
@@ -97,11 +114,12 @@ class OnePassFlushSpec extends SparkSuite {
           byteLimit, sizeLimit)
         val cfg = s"esMajor=$esMajor cr=$cr bytes=$byteLimit size=$sizeLimit"
         val parts = partFiles(s"$bulkDir/batch_0")
-        val got = parts.flatMap { f =>
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try src.getLines().toList finally src.close()
-        }
+        val got = parts.flatMap(lines)
         assert(got.sorted == expected.sorted, cfg)
+        assertOnlyParts(s"$bulkDir/batch_0", cfg)
+        // exact ntile: per-request action counts differ by at most 1
+        val perFile = parts.map(f => lines(f).count(Meta.matches))
+        assert(perFile.max - perFile.min <= 1, s"$cfg: $perFile")
         assert(dead.sorted.toSeq == Seq(10L, 10L, 11L, 12L, 13L),
           s"every key-less row reaches OnError, none collapsed ($cfg)")
         assert(ok.sorted.toSeq == Seq(2L, 3L, 5L, 20L, 21L, 30L, 31L, 40L), cfg)
@@ -119,7 +137,7 @@ class OnePassFlushSpec extends SparkSuite {
     }
   }
 
-  test("one flush launches six Spark jobs, the limit split included") {
+  test("one flush launches three Spark jobs, the limit split included") {
     val sc = spark.sparkContext
     val group = "one-pass-flush-guard"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -142,6 +160,6 @@ class OnePassFlushSpec extends SparkSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    assert(jobs.get == 6, s"jobs per flush: ${jobs.get}")
+    assert(jobs.get == 3, s"jobs per flush: ${jobs.get}")
   }
 }

@@ -259,12 +259,29 @@ class ScratchSpec extends SparkSuite {
   }
 
   test("guard: src/main caches only through Scratch, SparkEntry's session tables and DedupOps.materialize") {
-    val hits = mainHits(".cache()", ".persist(") { (name, enclosing, code) =>
-      (name == "SparkEntry.scala" && code.contains(".persist(")) ||
-        (name == "DedupOps.scala" && enclosing.contains("materialize"))
+    val hits = mainHits(".cache()") { (name, enclosing, _) =>
+      name == "DedupOps.scala" && enclosing.contains("materialize")
     }
     assert(hits.isEmpty,
       "scratch caches must go through Scratch.cache/keep:\n" + hits.mkString("\n"))
+  }
+
+  test("guard: src/main persists only through Scratch and SparkEntry's session tables") {
+    // a session table is built inside `cachedFor(…)(d => … .persist(…))`
+    val entry = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")).asScala.toIndexedSeq
+    val sessionTables: Set[String] = entry.indices.drop(1).collect {
+      case i if entry(i).contains("cachedFor(") && !entry(i).contains("def ") =>
+        Def.findFirstMatchIn(entry(i - 1)).map(_.group(1))
+    }.flatten.toSet
+    assert(sessionTables.size >= 5, s"the scan must see the session tables: $sessionTables")
+    val hits = mainHits(".persist(") { (name, enclosing, code) =>
+      !code.replace("Scratch.persist(", "").contains(".persist(") ||
+        (name == "SparkEntry.scala" && enclosing.exists(sessionTables))
+    }
+    assert(hits.isEmpty,
+      "persisted frames must go through Scratch.persist (or be a SparkEntry session table):\n" +
+        hits.mkString("\n"))
   }
 
   test("guard: src/main pins and releases only through Scratch, the measurement barrier, SparkEntry's session tables and truncateIter") {
